@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":…,"value":…,"queries":{…},"sf":…}.
   * Each query is fully materialized via [[Materialize.force]] — the
@@ -36,28 +34,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // saveAsTable targets (bucketed-join tables) go to /tmp, not the
-      // repo-local ./spark-warehouse default (same choice as GraftSession).
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      // 208 queries × several codegen units ≫ the 100-entry default
-      // generated-class cache — without this, later executions pay a
-      // fixed Janino recompile per run (see GraftSession for the full
-      // note; static conf, must precede session creation)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // zstd shuffle/spill compression (same rationale as GraftSession:
-      // ~1.4x over lz4 on the GB-scale narrow-long dedup streams)
-      .config("spark.io.compression.codec", "zstd")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietKnownNoise() // the part-* glob WARN trace, once per read
     // Warm the session (codegen compiler, parquet footer reads, shuffle
     // machinery) so the first measured query doesn't absorb JVM startup.
     spark.range(1000000).selectExpr("sum(id)").collect()

@@ -18,7 +18,6 @@ object Md5AbLab {
     val spark = GraftSession.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietKnownNoise()
     val docs = GraftSession.table(spark, sfDir, "documents")
 
     def legacy = docs

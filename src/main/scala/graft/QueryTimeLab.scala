@@ -18,20 +18,8 @@ object QueryTimeLab {
     val names = sys.env.getOrElse("SPARK_GRAFT_QUERIES", "")
       .split(",").toSeq.map(_.trim).filter(_.nonEmpty)
     require(names.nonEmpty, "set SPARK_GRAFT_QUERIES=name1,name2,...")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.io.compression.codec", "zstd")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietKnownNoise()
     spark.range(1000000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000)
       .groupBy("l_returnflag").count().collect()

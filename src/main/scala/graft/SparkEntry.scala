@@ -30,14 +30,17 @@ object SparkEntry {
     * Defensive: the driver may hand us a session built without the
     * nanos-as-long flag that `events.parquet` (TIMESTAMP NANOS) needs —
     * set it dynamically (it is a runtime SQLConf), falling back to a
-    * lineitem-only flagship if the conf is rejected.
+    * lineitem-only flagship if the conf is rejected. The fallback names
+    * its cause on stderr, so a broken flagship is never silent.
     */
   def entry(spark: SparkSession): DataFrame = {
     try {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       queries("scd2_history")(spark, "/root/testdata/sf0.001")
     } catch {
-      case _: Throwable =>
+      case e: Throwable =>
+        System.err.println(s"[entry] scd2_history failed (${e.getClass.getName}: " +
+          s"${e.getMessage}); falling back to q1_pricing_summary")
         queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")
     }
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,24 +10,8 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val nameFilter = if (args.length > 2) args(2).r else ".*".r
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // saveAsTable targets (bucketed-join tables) go to /tmp, not the
-      // repo-local ./spark-warehouse default (same choice as GraftSession).
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      // one codegen pass per catalog query ≫ the 100-entry default cache
-      // (see GraftSession note)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // zstd shuffle/spill compression (same rationale as GraftSession)
-      .config("spark.io.compression.codec", "zstd")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietKnownNoise() // the part-* glob WARN trace, once per read
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => nameFilter.matches(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -25,9 +25,10 @@ import org.apache.spark.sql.types.StructType
   *     events) re-versionized, other keys' rows carried over untouched.
   *     At 100 TB this touches O(batch keys · versions), not O(table).
   *  3. [[incremental]] — true per-key streaming state
-  *     (flatMapGroupsWithState): holds each key's event log (bounded by
-  *     retention) and re-emits corrected versions when late/out-of-order
-  *     events arrive. Exactly-once via checkpoint + (id, lsn) dedupe.
+  *     (transformWithState through [[Scd2Processor]]): holds each key's
+  *     event log (bounded by retention) and re-emits corrected versions
+  *     when late/out-of-order events arrive. Exactly-once via checkpoint +
+  *     (id, lsn) dedupe.
   *
   * All modes consume the same parsed change-event schema produced by
   * [[graft.cdc.Scd2.cdcEvents]].
@@ -266,21 +267,21 @@ object Scd2Streaming {
     if (fresh.isEmpty) return (None, Iterator.empty)
 
     val mergedAll = (prior ++ fresh).sortBy(_._1)
+    val minFresh = fresh.map(_._1).min
+    // versions at or after the earliest fresh lsn changed; the one just
+    // before it changed too (its expiration moved). Emission reads the log
+    // BEFORE compaction: an idle key's previous (open) version may lie past
+    // the horizon, and dropping it first would leave it open forever.
+    val changed = mergedAll.drop(math.max(0, mergedAll.indexWhere(_._1 >= minFresh) - 1))
+    val ends = changed.iterator.drop(1).map(_._2) ++ Iterator.single(SentinelMs)
+    val out = changed.iterator.zip(ends).map { case ((lsn, ts, attrs), end) =>
+      VersionRow(id, lsn, ts, end, attrs, isCorrection = lsn < minFresh)
+    }
     // compact: keep events within the retention horizon of the max ts,
     // plus unconditionally the highest-lsn event (open-interval anchor)
     val horizon = mergedAll.map(_._2).max - retentionMs
     val merged = mergedAll.zipWithIndex.collect {
       case (e, i) if e._2 >= horizon || i == mergedAll.length - 1 => e
-    }
-
-    val minFresh = fresh.map(_._1).min
-    // versions at or after the earliest fresh lsn changed; the one just
-    // before it changed too (its expiration moved)
-    val idx = merged.indexWhere(_._1 >= minFresh)
-    val from = math.max(0, idx - 1)
-    val out = merged.zipWithIndex.drop(from).iterator.map { case ((lsn, ts, attrs), i) =>
-      val end = if (i + 1 < merged.length) merged(i + 1)._2 else SentinelMs
-      VersionRow(id, lsn, ts, end, attrs, isCorrection = lsn < minFresh)
     }
     (Some(KeyState(merged)), out)
   }

@@ -43,6 +43,7 @@ object SparkSuite {
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.sql.warehouse.dir", wh.toString)
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.LocalFsConf)
       .getOrCreate()
   }
 }

@@ -260,6 +260,24 @@ class Scd2StreamingSpec extends SparkSuite {
     assert(last.find(_.lsn == 50).get.rowValidExpirationMs == Scd2Streaming.SentinelMs)
   }
 
+  test("an idle key's open version closes when its next event lands past the retention horizon") {
+    // the retention case above, merged directly: lsn 30 is the open version
+    // when lsn 40 arrives 100 s later; 30 falls out of the 1 s horizon, but
+    // its sentinel row must still be re-emitted with 40's ts as expiration
+    // (batch SCD2 closes it there) or the key holds two current rows
+    import Scd2Streaming.{KeyEvent, mergeKeyEvents}
+    val (first, _) = mergeKeyEvents(1000L, 1, Iterator(
+      KeyEvent(1, 10, t0, Map("name" -> "a"), "c"),
+      KeyEvent(1, 20, t0 + 100, Map("name" -> "b"), "u"),
+      KeyEvent(1, 30, t0 + 200, Map("name" -> "c"), "u")), Nil)
+    val (next, out) = mergeKeyEvents(1000L, 1,
+      Iterator(KeyEvent(1, 40, t0 + 100000, Map("name" -> "d"), "u")), first.get.events)
+    val rows = out.toList
+    assert(rows.map(r => (r.lsn, r.rowValidExpirationMs, r.isCorrection)) == List(
+      (30L, t0 + 100000, true), (40L, Scd2Streaming.SentinelMs, false)))
+    assert(next.get.events.map(_._1) == List(40L), "state still compacts to the horizon")
+  }
+
   test("incremental mode under RocksDB state store: skewed hot key, bounded state") {
     // the 100 TB state-store configuration (round-2 advice): the per-key
     // event-log state must round-trip RocksDB serialization, keep exactly
