@@ -31,16 +31,21 @@ object Bench {
     "bm25_topk" -> 1.232, // CPU scoring + group-limit
     "profile_numeric_sketch" -> 2.260) // CPU sketch (the r15 drift family)
 
+  /** Warm the session (codegen compiler, parquet footer reads, shuffle
+    * machinery) so the first measured query doesn't absorb JVM startup.
+    */
+  def warmUp(spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit = {
+    spark.range(1000000).selectExpr("sum(id)").collect()
+    spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000)
+      .groupBy("l_returnflag").count().collect()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
-    // Warm the session (codegen compiler, parquet footer reads, shuffle
-    // machinery) so the first measured query doesn't absorb JVM startup.
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000)
-      .groupBy("l_returnflag").count().collect()
+    warmUp(spark, sfDir)
     val fns = SparkEntry.queries
     // Materialize.force executes each query's OWN plan (r14: the old
     // .count() materializer planned a derived aggregate whose optimization

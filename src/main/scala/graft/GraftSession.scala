@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-/** Session + table helpers shared by the engine entry points.
+/** The session factory shared by every entry point and the tests.
   *
   * Settings mirror the determinism requirements of the reference pipeline
   * (UTC everywhere — reference pins TZ in connectors/s3-sink.json:27) and
@@ -32,16 +32,50 @@ object GraftSession {
 
   /** Route the `file` scheme through [[NoForkLocalFileSystem]] and, for
     * the `FileContext` that streaming checkpoints write through,
-    * [[NoForkLocalFs]]. Static: every session builder in the repo applies
-    * this one map.
+    * [[NoForkLocalFs]]. Static: applied by [[builder]], which every
+    * session in the repo (tests included) is built from.
     */
-  val LocalFsConf: Map[String, String] = Map(
+  private val LocalFsConf: Map[String, String] = Map(
     "spark.hadoop.fs.file.impl" -> classOf[NoForkLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NoForkLocalFs].getName)
 
+  /** The state-store provider every `transformWithState` query needs
+    * (column families are RocksDB-only). Scoped per query through
+    * [[withConf]]: session-wide, it would also move every other stateful
+    * catalog query off the default store.
+    */
+  val RocksDbStateStore: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Run `body` with the runtime confs `kv` set, then restore each key's
+    * prior value (or unset it if it had none), also when `body` throws.
+    */
+  def withConf[T](spark: SparkSession, kv: (String, String)*)(body: => T): T = {
+    val prior = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Build a local session with scale-appropriate defaults. */
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val session = SparkSession.builder()
+    val session = builder(cores).getOrCreate()
+    // AFTER getOrCreate: Spark's log4j2 re-initialization during session
+    // creation replaces any configuration set beforehand (verified — a
+    // pre-create setLevel reads back as INFO afterwards)
+    quietKnownNoise()
+    session
+  }
+
+  /** Every setting of a [[local]] session, before `getOrCreate`. The test
+    * session starts from this too, so tests run with Bench's settings.
+    */
+  def builder(cores: Int): SparkSession.Builder =
+    SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft")
       // default: one shuffle partition per core (right for the sf0.1
@@ -74,18 +108,4 @@ object GraftSession {
       // per-session; data dirs persist and are overwritten on re-create)
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
       .config(LocalFsConf)
-      .getOrCreate()
-    // AFTER getOrCreate: Spark's log4j2 re-initialization during session
-    // creation replaces any configuration set beforehand (verified — a
-    // pre-create setLevel reads back as INFO afterwards)
-    quietKnownNoise()
-    session
-  }
-
-  /** Read one of the driver-provided testdata tables (delegates to
-    * [[graft.QueryDef.t]], which also normalizes the `events.ts`
-    * nanosecond column — keep one reader so the semantics can't diverge).
-    */
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    QueryDef.t(spark, sfDir, name)
 }

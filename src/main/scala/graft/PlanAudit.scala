@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.SparkPlan
   * (calendar days, cent histograms, decile tables) and a 100 TB killer
   * over anything data-proportional.
   *
-  * Used by [[ExplainAll]] (per-round plan dump) and pinned in CI by
+  * Used by `Diag plans` (per-round plan dump) and pinned in CI by
   * `WindowAuditSpec`, which sweeps every catalog query and fails on any
   * new unbounded site that isn't explicitly whitelisted with a rationale.
   */

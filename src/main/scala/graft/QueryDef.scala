@@ -19,7 +19,7 @@ final case class QueryDef(
     /** Included in the Bench headline set (run at sf0.1). */
     bench: Boolean = true,
     /** Invoking `spark` executes a full job (a multi-trigger streaming run)
-      * rather than returning a lazy plan; plan-only consumers (ExplainAll)
+      * rather than returning a lazy plan; plan-only consumers (`Diag plans`)
       * skip these — there is no meaningful batch plan to audit, and the
       * invocation itself would pay the streaming run as a side effect.
       */

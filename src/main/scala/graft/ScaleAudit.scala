@@ -32,9 +32,9 @@ import org.apache.spark.sql.execution.SparkPlan
   * positive control) and stops clean at shuffle stages.
   *
   * [[audit]] runs inside every Bench smoke loop (VERDICT r12 task #5)
-  * and its hits land in the bench JSON under `"scale_audit"`; SmokeOne
-  * prints the same sweep. The standalone main remains for one-off dev
-  * sweeps: runMain graft.ScaleAudit <sfDir>
+  * and its hits land in the bench JSON under `"scale_audit"`; `Diag smoke`
+  * prints the same sweep, for named queries or (without names) for every
+  * smoke query on the scaled lake.
   */
 object ScaleAudit {
 
@@ -83,29 +83,5 @@ object ScaleAudit {
     }
     walk(plan)
     hits.distinct.toSeq
-  }
-
-  /** runMain graft.ScaleAudit [sfDir] [factor] — sweep every smoke query's
-    * executed plan on the scaled lake (default 10×; a larger factor asks
-    * whether AQE makes the same decisions further up the curve).
-    */
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val factor = if (args.length > 1) args(1).toInt else ScaleSmoke.Factor
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
-    spark.sparkContext.setLogLevel("ERROR")
-    val scaled = ScaleSmoke.ensureScaled(spark, sfDir, factor = factor)
-    ScaleSmoke.smokeQueries.foreach { name =>
-      try {
-        val df = SparkEntry.queries(name)(spark, scaled)
-        df.collect()
-        val hits = audit(df.queryExecution.executedPlan)
-        if (hits.nonEmpty) println(s"[scale-audit] $name: ${hits.mkString(" | ")}")
-        else println(s"[scale-audit] $name: clean")
-      } catch { case e: Throwable =>
-        println(s"[scale-audit] $name: ERROR ${e.getMessage.take(120)}")
-      }
-    }
-    spark.stop()
   }
 }

@@ -132,7 +132,7 @@ object ScaleSmoke {
     * measures the layout, not the operator. Range files keep min/max
     * stats tight, which is also how a real lake is written.
     *
-    * `factor` defaults to the smoke's standard 10×; SmokeOne/ScaleAudit
+    * `factor` defaults to the smoke's standard 10×; `Diag smoke` can
     * pass larger values (30, 100) to extend the trend line — each factor
     * gets its own default outDir (`/tmp/graft_scaled_x<factor>`) and its
     * own fingerprint, so differently-scaled lakes never alias.

@@ -10,11 +10,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * high GC share / nonzero spill spread across tasks.
   *
   * As of r16 the listener is a reusable [[StageProfile.Meter]] so
-  * [[SmokeOne]] can emit the same digest in-line for any flagged row
-  * (VERDICT r15 task #5 — the adjudication readout must come from the
-  * SAME run that produced the flag, not a later hand-run). Standalone:
-  *
-  *   runMain graft.StageProfile <dir> <name> [reps]
+  * `Diag smoke --profile` can emit the same digest in-line for any
+  * flagged row (VERDICT r15 task #5 — the adjudication readout must come
+  * from the SAME run that produced the flag, not a later hand-run).
+  * `Diag profile` prints the full [[Meter.table]].
   */
 object StageProfile {
 
@@ -56,8 +55,21 @@ object StageProfile {
       }
     def reset(): Unit = stages.clear()
 
+    /** A header plus one line per stage, heaviest first — the full table
+      * `Diag profile` prints for each run.
+      */
+    def table(): Seq[String] = {
+      val header = f"${"stage"}%7s ${"tasks"}%6s ${"sum_s"}%8s ${"max_s"}%7s " +
+        f"${"med_s"}%7s ${"gc%"}%5s ${"spill"}%8s ${"sh_rd"}%8s ${"sh_wr"}%8s ${"input"}%8s"
+      header +: stages.readOnlySnapshot().toSeq.sortBy(-_._2.sumMs).map { case (id, a) =>
+        f"$id%7d ${a.n}%6d ${a.sumMs / 1000.0}%8.2f ${a.maxMs / 1000.0}%7.2f " +
+          f"${a.medMs / 1000.0}%7.2f ${a.gcPct}%5.1f ${a.spillMb}%7.0fM ${a.shufReadMb}%7.0fM " +
+          f"${a.shufWriteMb}%7.0fM ${a.inputMb}%7.0fM"
+      }
+    }
+
     /** One line per stage, heaviest first (by task-time sum), at most
-      * `top` stages — the compact in-line digest SmokeOne prints for a
+      * `top` stages — the compact in-line digest `Diag smoke` prints for a
       * flagged row.
       */
     def digest(top: Int = 3): Seq[String] =
@@ -69,33 +81,5 @@ object StageProfile {
             f"sh_rd=${a.shufReadMb}%.0fM sh_wr=${a.shufWriteMb}%.0fM " +
             f"input=${a.inputMb}%.0fM"
       }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val dir = args(0)
-    val name = args(1)
-    val reps = if (args.length > 2) args(2).toInt else 2
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
-    spark.sparkContext.setLogLevel("ERROR")
-    val meter = new Meter
-    spark.sparkContext.addSparkListener(meter)
-    val fn = SparkEntry.queries(name)
-    (1 to reps).foreach { r =>
-      org.apache.spark.GraftSparkInternals.drainListenerBus(spark.sparkContext)
-      meter.reset()
-      val t0 = System.nanoTime()
-      Materialize.force(fn(spark, dir))
-      val wall = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.GraftSparkInternals.drainListenerBus(spark.sparkContext)
-      println(f"== $name rep $r/$reps wall=$wall%.2fs @ $dir ==")
-      println(f"${"stage"}%7s ${"tasks"}%6s ${"sum_s"}%8s ${"max_s"}%7s " +
-        f"${"med_s"}%7s ${"gc%"}%5s ${"spill"}%8s ${"sh_rd"}%8s ${"sh_wr"}%8s ${"input"}%8s")
-      meter.stages.toSeq.sortBy(-_._2.sumMs).foreach { case (id, a) =>
-        println(f"$id%7d ${a.n}%6d ${a.sumMs / 1000.0}%8.2f ${a.maxMs / 1000.0}%7.2f " +
-          f"${a.medMs / 1000.0}%7.2f ${a.gcPct}%5.1f ${a.spillMb}%7.0fM ${a.shufReadMb}%7.0fM " +
-          f"${a.shufWriteMb}%7.0fM ${a.inputMb}%7.0fM")
-      }
-    }
-    spark.stop()
   }
 }

@@ -35,12 +35,11 @@ import org.apache.spark.sql.streaming.Trigger
   *     any final-state mismatch lists here, and [[Bench]] re-emits the
   *     same bar in its graded tail every round.
   *
-  * SCD2 ingests the SAME synthetic Debezium stream as [[Throughput]]
-  * (shared envelope builder), so the batch-vs-streaming cost of the same
-  * transform is directly comparable; LSH ingests the sf lake's `documents`
-  * corpus scaled by affine-rotated copies (ScaleSmoke's construction — the
-  * copies are token-disjoint, so band state grows with the corpus and the
-  * dedup has real work per batch).
+  * SCD2 ingests a synthetic Debezium stream ([[envelopeValue]]); LSH
+  * ingests the sf lake's `documents` corpus scaled by affine-rotated
+  * copies (ScaleSmoke's construction — the copies are token-disjoint, so
+  * band state grows with the corpus and the dedup has real work per
+  * batch).
   *
   *   runMain graft.StreamingThroughput [sfDir] [outPath]
   */
@@ -145,6 +144,20 @@ object StreamingThroughput {
     new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
       .foreach(_.setLastModified(1700000000000L + slice * 60000L))
 
+  /** Debezium-shaped NDJSON envelope for synthetic event `id` (lsn = id,
+    * ~n/keys versions per key; the first `keys` ids are creates).
+    */
+  private def envelopeValue(keys: Long): org.apache.spark.sql.Column =
+    to_json(struct(struct(
+      lit(null).cast(CdcSchemas.productsRow).as("before"),
+      struct((col("id") % keys).cast("int").as("id"),
+        concat(lit("name-"), col("id") % 1000).as("name"),
+        lit("desc").as("description"),
+        (col("id") % 10000).cast("double").as("price")).as("after"),
+      when(col("id") < keys, "c").otherwise("u").as("op"),
+      (lit(1733333333000L) + col("id")).as("ts_ms"),
+      struct(col("id").as("lsn")).as("source")).as("payload")))
+
   /** Stage the synthetic Debezium envelope lake as `slices` NDJSON files,
     * mtime-ordered so the file source replays event order (one file per
     * trigger). Published once per (n, slices) via AtomicPublish — the
@@ -157,7 +170,7 @@ object StreamingThroughput {
       (0 until slices).foreach { i =>
         val dir = s"$tmp/b$i"
         spark.range(i * n / slices, (i + 1) * n / slices)
-          .select(Throughput.envelopeValue(keys).as("value"))
+          .select(envelopeValue(keys).as("value"))
           .coalesce(1).write.mode("overwrite").text(dir)
         pinSliceMtime(dir, i)
       }
@@ -206,21 +219,11 @@ object StreamingThroughput {
     * the rest of the shared Bench session, and the save/restore block was
     * duplicated between drive() and recoveryLeg()).
     */
-  private def withStreamingConf[T](spark: SparkSession)(body: => T): T = {
-    val keys = Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+  private def withStreamingConf[T](spark: SparkSession)(body: => T): T =
+    GraftSession.withConf(spark, GraftSession.RocksDbStateStore,
       // every micro-batch must survive in recentProgress or p95/state
       // growth are computed over a truncated window (default retention 100)
-      "spark.sql.streaming.numRecentProgressUpdates" -> "400")
-    val prior = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+      "spark.sql.streaming.numRecentProgressUpdates" -> "400")(body)
 
   /** Per-batch stats from a completed query's progress history. */
   private def harvest(q: org.apache.spark.sql.streaming.StreamingQuery): Seq[BatchStat] =

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.functions.{call_function, lit}
 
@@ -13,71 +14,58 @@ import org.apache.spark.sql.functions.{call_function, lit}
   */
 object GraftFunctions {
 
-  /** Register all graft functions in `spark`'s registry.
-    * createOrReplaceTempFunction is itself idempotent and cheap, so no
-    * registered-session bookkeeping (an identity-based cache here risked
-    * skipping a fresh session on hash collision and grew unboundedly).
+  /** Name → builder for every graft function. */
+  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "word_shingles" -> {
+      case Seq(text, n) => WordShingles(text, intLiteral(n, "word_shingles(text, n)"))
+      case other => throw new IllegalArgumentException(
+        s"word_shingles(text, n) takes 2 arguments, got ${other.size}")
+    },
+    "array_dot" -> {
+      case Seq(a, b) => ArrayDot(a, b)
+      case other => throw new IllegalArgumentException(
+        s"array_dot(a, b) takes 2 arguments, got ${other.size}")
+    },
+    "minhash_signature" -> {
+      case Seq(text, k, n) => MinhashSignature(text,
+        intLiteral(k, "minhash_signature(text, numHashes, n)"),
+        intLiteral(n, "minhash_signature(text, numHashes, n)"))
+      case other => throw new IllegalArgumentException(
+        s"minhash_signature(text, numHashes, n) takes 3 arguments, got ${other.size}")
+    },
+    "simhash_signature" -> {
+      case Seq(text) => SimhashSignature(text)
+      case other => throw new IllegalArgumentException(
+        s"simhash_signature(text) takes 1 argument, got ${other.size}")
+    },
+    "bloom_might_contain_long" -> {
+      case Seq(f, v) => BloomMightContainLong(f, v)
+      case other => throw new IllegalArgumentException(
+        s"bloom_might_contain_long(filter, value) takes 2 arguments, got ${other.size}")
+    },
+    "md5_prefix" -> {
+      case Seq(s, n) => Md5Prefix(s, intLiteral(n, "md5_prefix(s, n)"))
+      case other => throw new IllegalArgumentException(
+        s"md5_prefix(s, n) takes 2 arguments, got ${other.size}")
+    },
+    "md5_permille" -> {
+      case Seq(id, salt) => Md5Permille(id,
+        stringLiteral(salt, "md5_permille(id, salt)"))
+      case other => throw new IllegalArgumentException(
+        s"md5_permille(id, salt) takes 2 arguments, got ${other.size}")
+    })
+
+  /** Register every graft function that `spark`'s registry lacks.
+    * Idempotent: a registered function is left as it is, so repeat calls
+    * (every column helper makes one) neither replace it nor log Spark's
+    * "replaced a previously registered function" WARN.
     */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(text, n) => WordShingles(text, intLiteral(n, "word_shingles(text, n)"))
-        case other => throw new IllegalArgumentException(
-          s"word_shingles(text, n) takes 2 arguments, got ${other.size}")
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "array_dot",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(a, b) => ArrayDot(a, b)
-        case other => throw new IllegalArgumentException(
-          s"array_dot(a, b) takes 2 arguments, got ${other.size}")
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_signature",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(text, k, n) => MinhashSignature(text,
-          intLiteral(k, "minhash_signature(text, numHashes, n)"),
-          intLiteral(n, "minhash_signature(text, numHashes, n)"))
-        case other => throw new IllegalArgumentException(
-          s"minhash_signature(text, numHashes, n) takes 3 arguments, got ${other.size}")
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_signature",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(text) => SimhashSignature(text)
-        case other => throw new IllegalArgumentException(
-          s"simhash_signature(text) takes 1 argument, got ${other.size}")
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain_long",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(f, v) => BloomMightContainLong(f, v)
-        case other => throw new IllegalArgumentException(
-          s"bloom_might_contain_long(filter, value) takes 2 arguments, got ${other.size}")
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_prefix",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(s, n) => Md5Prefix(s, intLiteral(n, "md5_prefix(s, n)"))
-        case other => throw new IllegalArgumentException(
-          s"md5_prefix(s, n) takes 2 arguments, got ${other.size}")
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_permille",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(id, salt) => Md5Permille(id,
-          stringLiteral(salt, "md5_permille(id, salt)"))
-        case other => throw new IllegalArgumentException(
-          s"md5_permille(id, salt) takes 2 arguments, got ${other.size}")
-      },
-      "built-in")
+    val registry = spark.sessionState.functionRegistry
+    builders.foreach { case (name, builder) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 
   private def intLiteral(e: Expression, ctx: String): Int = e match {

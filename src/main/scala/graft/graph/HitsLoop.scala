@@ -48,7 +48,7 @@ object HitsLoop {
     * leaf still truncates lineage at plan time (no 2^rounds subtree
     * doubling, same audit surface), but materialization folds into the
     * query's own job instead of one synchronous dispatch per half-round
-    * (6 per run). HitsLab A/B at sf0.1/32: eager pins 2.24 s (runs
+    * (6 per run). HITS A/B at sf0.1/32 (OPTIMIZATION_r18.md): eager pins 2.24 s (runs
     * 5.6/3.2/2.2) vs lazy pins 1.74 s (1.9/1.8/1.7) — same rows
     * bit-exactly; the fused 3-pin and fully-lazy variants measured WORSE
     * (3.1 s / 22.7 s — the un-pinned form's exponential lineage is real).

@@ -31,20 +31,21 @@ object PageRankLoop {
     * stage paid 32 task dispatches over KB-scale rank vectors and the
     * family ran SLOWER at 32 cores than at 8 (driver scaling ratios
     * 0.21–0.48). Derived from the optimizer's size estimate of the edge
-    * subtree — ~1 MB of estimated input per partition (GraphLoopLab
-    * r18 sweep: at sf0.1, P=4 beat P=2 by 1.15× and P=32 by 2.8×; the
+    * subtree — ~1 MB of estimated input per partition (r18 sweep,
+    * bench/evidence/loop_scaling_r18.json: at sf0.1, P=4 beat P=2 by 1.15× and P=32 by 2.8×; the
     * estimate scales with the lake, so the 10× smoke gets ~10× the
     * partitions) — clamped to [4, 4096]. The floor dodges the P=1
     * degeneracy (a single-partition HashPartitioning stops satisfying
     * the join's co-partition requirement, and EnsureRequirements then
-    * re-exchanges the CACHED side — measured in GraphLoopLab) and keeps
+    * re-exchanges the CACHED side — measured in the r18 loop sweep,
+    * OPTIMIZATION_r18.md) and keeps
     * a minimum of parallelism; the cap bounds the small-file/task count
     * at cluster scale where shuffle.partitions governs anyway.
     */
   def loopPartitions(edges: DataFrame): Int = {
     val sized = ((edges.queryExecution.optimizedPlan.stats.sizeInBytes /
       (1L * 1024 * 1024)) + 1).min(4096).max(4).toInt
-    // r18 second pass (SmokeOne 10× profile): once the data-derived count
+    // r18 second pass (10× smoke profile): once the data-derived count
     // reaches the session's shuffle parallelism, SNAP to it — every
     // per-round aggregate already produces hash(node, shuffle.partitions),
     // so a cache at the same count co-partitions the round's merge join
@@ -53,8 +54,8 @@ object PageRankLoop {
     // node-vector exchange per round — the whole 1.15× 10× overhead the
     // first pass accepted). Below the snap point small data keeps the
     // small sized count: the rekey exchange there moves KBs and the
-    // dispatch savings dominate (GraphLoopLab: P=4 beat P=32 by 2.8× at
-    // sf0.1).
+    // dispatch savings dominate (loop_scaling_r18.json: P=4 beat P=32 by
+    // 2.8× at sf0.1).
     val sp = edges.sparkSession.sessionState.conf.numShufflePartitions
     if (sized >= sp) sp else sized
   }
@@ -82,7 +83,7 @@ object PageRankLoop {
     * CONFLICTS with the cache's size-based count, and EnsureRequirements
     * resolves such conflicts by re-exchanging the cached (edge-sized)
     * side — the exact cliff the zero-exchange contract exists to avoid
-    * (measured in GraphLoopLab variant C).
+    * (measured as variant C of the r18 loop sweep, OPTIMIZATION_r18.md).
     */
   def rekeyToGraph(graph: DataFrame, vec: DataFrame): DataFrame = {
     val p = graph.rdd.getNumPartitions

@@ -847,7 +847,7 @@ object AnalyticsQueries {
         // next round), so the 5 rounds chain lazily into ONE job instead
         // of 5 synchronous job dispatches, and nextRanks' explicit
         // rekeyToGraph pins the rank side to the cache's size-based
-        // partition count (GraphLoopLab A 4.9 s → E 1.6 s at sf0.1/32
+        // partition count (loop_scaling_r18.json: A 4.9 s → E 1.6 s at sf0.1/32
         // cores; 8v32 ratio 0.75). Plan depth is k=5 joins — trivial.
         // BFS/SSSP keep their per-round pins: their dist table has TWO
         // consumers per round (frontier filter + union), which doubles
@@ -855,7 +855,7 @@ object AnalyticsQueries {
         // and nB above — are now LAZY (eager=false): the LogicalRDD leaf
         // still truncates lineage at plan time, but materialization folds
         // into the query's own job instead of a synchronous dispatch per
-        // pin (HitsLab A/B: eager 2.24 s vs lazy 1.74 s on the HITS
+        // pin (OPTIMIZATION_r18.md HITS A/B: eager 2.24 s vs lazy 1.74 s on the HITS
         // 6-pin chain; bfs 0.81×/pagerank 0.86× in the catalog-context
         // interleave). ppr is the measured exception and keeps eager pins
         // (see its comment).
@@ -1133,9 +1133,9 @@ object AnalyticsQueries {
         val seeds = graph.select(col("src").as("node")).distinct()
           .filter(PipelineQueries.hashPermille(col("node"), "ppr") < 20000L)
         // r18 second pass: sB/restart KEEP the eager pin — the lazy-pin
-        // sweep that converted the rest of the loop family (HitsLab rule)
-        // measured ppr at 1.56-1.57 s lazy vs 1.41 s eager (QueryTimeLab
-        // best-of-3, twice): restart is consumed by all three rounds inside
+        // sweep that converted the rest of the loop family (the HITS rule)
+        // measured ppr at 1.56-1.57 s lazy vs 1.41 s eager (best-of-3,
+        // twice): restart is consumed by all three rounds inside
         // one job, and deferring its materialization serializes the rounds
         // behind its first compute.
         val sB = seeds.agg(count(lit(1)).as("n_seeds")).localCheckpoint(true)
@@ -3223,7 +3223,7 @@ object AnalyticsQueries {
         // the flipped form streamed the full freq table through TWO
         // shuffle joins to decorate 20 rows (measured: 2.71 s head /
         // 4.45 s 10× vs the unsafe old broadcast's 2.48 / 3.58 —
-        // PinAbLab, bench/evidence/pin_ab_r18.json). r18 keeps the
+        // bench/evidence/pin_ab_r18.json). r18 keeps the
         // scale-safety and removes the cost: semi-filter freq down to
         // the ≤40 part ids the top-20 pairs actually reference (a
         // broadcast of 40 ids — constant by the LIMIT), then broadcast

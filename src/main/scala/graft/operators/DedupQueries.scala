@@ -405,7 +405,8 @@ object DedupQueries {
         // bench_r18a 0.90 s pinned) showed the synchronous checkpoint job
         // costs more at the head than the re-planned symmetrization
         // branches, whose exchanges AQE already reuses in the warm bench
-        // (the same verdict the bleu2/rouge1 pins got from PinAbLab).
+        // (the same verdict the bleu2/rouge1 pins got in
+        // bench/evidence/pin_ab_r18.json).
         val pairs = Dedup.nearDuplicates(t(s, d, "documents"), "doc_id", "text",
           threshold = 0.05)
         val sym = pairs.select(col("doc_id_a").as("doc_id"),
@@ -1451,7 +1452,7 @@ object DedupQueries {
         // (doc, token)-keyed exchanges move longs, not raw unigrams;
         // identical id assignment replays in the oracle.
         // r18: the r17 eager pin on tc is REVERTED on measurement
-        // (PinAbLab, bench/evidence/pin_ab_r18.json): the lazy form was
+        // (bench/evidence/pin_ab_r18.json): the lazy form was
         // faster at BOTH scales (head 1.57 s vs 2.03 s pinned; 10×
         // 3.33 s vs 3.60 s) — AQE's ReusedExchange already shares the
         // (doc_id, tid) exchange across the four consumers, and the lazy
@@ -1523,7 +1524,7 @@ object DedupQueries {
       "bleu2_neardup_pairs",
       (s, d) => {
         // r18: the r17 eager pins on `pairs`/`uni`/`bi` are REVERTED on
-        // measurement (PinAbLab, committed bench/evidence/pin_ab_r18.json):
+        // measurement (bench/evidence/pin_ab_r18.json):
         // the pinned form was 1.6× SLOWER at the sf0.1 head (3.33 s vs
         // 2.10 s) and the claimed 10× win did not reproduce (pinned
         // 5.28 s vs lazy 5.82 s — AQE's ReusedExchange already shares the

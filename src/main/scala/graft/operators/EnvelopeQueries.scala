@@ -29,7 +29,7 @@ object EnvelopeQueries {
     * atomically renamed into place, then skipped forever after via a
     * completion marker. Concurrent readers (the DuckDB oracle, a second
     * verify/bench process) never observe a half-written glob, and plan-only
-    * uses (ExplainAll) stop re-writing the lake as a side effect.
+    * uses (`Diag plans`) stop re-writing the lake as a side effect.
     */
   private[operators] val LakeDir = "/tmp/graft_cdc_lake"
   private val LakeEvents = 20000L

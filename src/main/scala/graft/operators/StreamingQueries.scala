@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryDef
+import graft.{GraftSession, QueryDef}
 import graft.cdc.CdcSchemas
 import graft.streaming.Scd2Streaming
 
@@ -143,7 +143,7 @@ object StreamingQueries {
   }
 
   /** Stream the lake through the true per-key incremental state (mode 3,
-    * flatMapGroupsWithState): parse envelopes → typed change events →
+    * transformWithState): parse envelopes → typed change events →
     * corrected version-row stream, every emission appended to parquet with
     * its batch id. The final chain is the last emission per (id, lsn) —
     * convergent regardless of how the files were sliced into triggers.
@@ -152,14 +152,8 @@ object StreamingQueries {
     import s.implicits._
     // transformWithState (the r9 incremental surface) needs column
     // families, which only the RocksDB state store provides
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try runIncrementalInner(s, sfDir, scratch, resultOut)
-    finally prior match {
-      case Some(v) => s.conf.set(providerKey, v)
-      case None => s.conf.unset(providerKey)
+    GraftSession.withConf(s, GraftSession.RocksDbStateStore) {
+      runIncrementalInner(s, sfDir, scratch, resultOut)
     }
   }
 
@@ -811,11 +805,7 @@ object StreamingQueries {
     import s.implicits._
     val glob = stageEventSlices(s, sfDir, s"$scratch/evlake")
     val out = s"$scratch/emissions"
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(s, GraftSession.RocksDbStateStore) {
       val ds = eventStream(s, glob)
         .select(col("user_id"),
           (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
@@ -835,9 +825,6 @@ object StreamingQueries {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally prior match {
-      case Some(v) => s.conf.set(providerKey, v)
-      case None => s.conf.unset(providerKey)
     }
     s.read.parquet(out)
       .groupBy("user_id")
@@ -860,11 +847,7 @@ object StreamingQueries {
     val glob = stageEventSlices(s, sfDir, stage)
     stageSentinelSlice(s, sfDir, stage, leadHours = 60L)
     val out = s"$scratch/emissions"
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(s, GraftSession.RocksDbStateStore) {
       val ds = eventStream(s, glob)
         .select(col("ts").cast("timestamp").as("ts"), col("user_id"),
           expr("CAST(unix_date(CAST(ts AS DATE)) AS BIGINT)").as("dnum"),
@@ -886,9 +869,6 @@ object StreamingQueries {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally prior match {
-      case Some(v) => s.conf.set(providerKey, v)
-      case None => s.conf.unset(providerKey)
     }
     s.read.parquet(out)
       .filter(col("user_id") =!= -1L)
@@ -921,11 +901,7 @@ object StreamingQueries {
     val stage = s"$scratch/evlake"
     val glob = stageEventSlices(s, sfDir, stage)
     val out = s"$scratch/emissions"
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(s, GraftSession.RocksDbStateStore) {
       val ds = eventStream(s, glob)
         .select(col("ts").cast("timestamp").as("ts"), col("user_id"),
           // tz-independent day key (floor of epoch ms), so the key and
@@ -950,9 +926,6 @@ object StreamingQueries {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally prior match {
-      case Some(v) => s.conf.set(providerKey, v)
-      case None => s.conf.unset(providerKey)
     }
     // batch replay of both ledgers from the staged slices
     val sliced = (0 until 4).map { i =>
@@ -1008,11 +981,7 @@ object StreamingQueries {
     import s.implicits._
     val glob = stageEventSlices(s, sfDir, s"$scratch/evlake")
     val out = s"$scratch/emissions"
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(s, GraftSession.RocksDbStateStore) {
       val ds = eventStream(s, glob)
         .select(col("event_type"), col("user_id"))
         .as[(String, Long)]
@@ -1030,9 +999,6 @@ object StreamingQueries {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally prior match {
-      case Some(v) => s.conf.set(providerKey, v)
-      case None => s.conf.unset(providerKey)
     }
     s.read.parquet(out)
       .groupBy("event_type")
@@ -1048,11 +1014,7 @@ object StreamingQueries {
     import s.implicits._
     val glob = stageEventSlices(s, sfDir, s"$scratch/evlake")
     val out = s"$scratch/emissions"
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(s, GraftSession.RocksDbStateStore) {
       val ds = eventStream(s, glob)
         .select(col("user_id"), col("event_id"), col("event_type"))
         .as[(Long, Long, String)]
@@ -1070,9 +1032,6 @@ object StreamingQueries {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally prior match {
-      case Some(v) => s.conf.set(providerKey, v)
-      case None => s.conf.unset(providerKey)
     }
     s.read.parquet(out)
       .groupBy("user_id")
@@ -1131,11 +1090,7 @@ object StreamingQueries {
     import s.implicits._
     val glob = stageEventSlices(s, sfDir, s"$scratch/evlake")
     val out = s"$scratch/deltas"
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(s, GraftSession.RocksDbStateStore) {
       val ds = eventStream(s, glob)
         .select(col("user_id"), col("event_id"), col("event_type"),
           (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
@@ -1154,9 +1109,6 @@ object StreamingQueries {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally prior match {
-      case Some(v) => s.conf.set(providerKey, v)
-      case None => s.conf.unset(providerKey)
     }
     s.read.parquet(out)
       .groupBy("grp")
@@ -1294,11 +1246,7 @@ object StreamingQueries {
     import s.implicits._
     val glob = stageDocSlices(s, sfDir, s"$scratch/doclake")
     val out = s"$scratch/flags"
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(s, GraftSession.RocksDbStateStore) {
       val sigExpr = graft.functions.GraftFunctions
         .minhashSignature(col("text"), 16, 3)
       val banded = s.readStream.schema("doc_id LONG, text STRING")
@@ -1321,9 +1269,6 @@ object StreamingQueries {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally prior match {
-      case Some(v) => s.conf.set(providerKey, v)
-      case None => s.conf.unset(providerKey)
     }
     s.read.parquet(out)
       .groupBy("doc_id")
@@ -1345,11 +1290,7 @@ object StreamingQueries {
     */
   private def runScd2SchemaDrift(s: SparkSession, sfDir: String, scratch: String, resultOut: String): Unit = {
     import s.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(s, GraftSession.RocksDbStateStore) {
       val dir = EnvelopeQueries.buildDriftLake(s)
       val out = s"$scratch/emissions"
       val envelopes = Scd2Streaming.readEnvelopeStream(
@@ -1390,9 +1331,6 @@ object StreamingQueries {
           col("v.rowValidStartMs").as("valid_from_ms"),
           col("v.rowValidExpirationMs").as("valid_to_ms"))
         .coalesce(1).write.mode("overwrite").parquet(resultOut)
-    } finally prior match {
-      case Some(v) => s.conf.set(providerKey, v)
-      case None => s.conf.unset(providerKey)
     }
   }
 
@@ -1420,11 +1358,7 @@ object StreamingQueries {
     import s.implicits._
     val glob = stageDocSlices(s, sfDir, s"$scratch/doclake")
     val out = s"$scratch/flags"
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(s, GraftSession.RocksDbStateStore) {
       val sigExpr = graft.functions.GraftFunctions
         .minhashSignature(col("text"), 16, 3)
       val banded = s.readStream.schema("doc_id LONG, text STRING")
@@ -1450,9 +1384,6 @@ object StreamingQueries {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally prior match {
-      case Some(v) => s.conf.set(providerKey, v)
-      case None => s.conf.unset(providerKey)
     }
     s.read.parquet(out)
       .groupBy("doc_id")

@@ -2,6 +2,7 @@ package graft.serving
 
 import java.sql.Timestamp
 
+import graft.GraftSession
 import graft.cdc.Scd2
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -57,13 +58,8 @@ object ServingLayer {
     val spark = updates.sparkSession
     // the DataFrameWriter-level option is not honored on catalog
     // insertInto — scope the session conf to this write and restore it
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try updates.write.mode("overwrite").insertInto(table)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    GraftSession.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      updates.write.mode("overwrite").insertInto(table)
     }
   }
 

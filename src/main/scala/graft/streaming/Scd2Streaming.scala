@@ -1,26 +1,21 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import graft.cdc.{CdcSchemas, Scd2}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming SCD2 (SURVEY.md §2.8, §7.2 step 6).
   *
   * The reference's compute is a batch rebuild re-run over the whole lake
   * (duckdb/Dockerfile:8-9 runs transform_scd2.py once per container start);
-  * its *transport* is continuous (Debezium → Kafka → S3). We provide three
-  * prog­ressively-more-incremental modes:
+  * its *transport* is continuous (Debezium → Kafka → S3). We provide two
+  * incremental modes, numbered after mode 1, the reference's own full
+  * rebuild (the batch [[graft.cdc.Scd2.transform]], re-run per trigger):
   *
-  *  1. [[foreachBatchRebuild]] — the reference's own semantics verbatim:
-  *     each micro-batch triggers a full deterministic rebuild of the
-  *     history table from accumulated events. Correct under any disorder
-  *     (the window re-sorts everything); cost grows with history size.
-  *  2. [[foreachBatchTouchedKeys]] — rebuild restricted to keys present in
+  *  2. [[touchedKeysRebuild]] — rebuild restricted to keys present in
   *     the micro-batch: union(batch events, prior history of touched keys'
   *     events) re-versionized, other keys' rows carried over untouched.
   *     At 100 TB this touches O(batch keys · versions), not O(table).
@@ -97,18 +92,6 @@ object Scd2Streaming {
           .updated("subscribe", topic))
         .load(),
       rowSchema)
-
-  /** Mode 1: full-rebuild foreachBatch. `writeHistory` receives the complete
-    * recomputed SCD2 table each trigger (write mode("overwrite")).
-    */
-  def foreachBatchRebuild(envelopes: DataFrame, attrFields: Seq[String],
-                          allEventsSoFar: () => DataFrame,
-                          writeHistory: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    envelopes.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val events = Scd2.dedupeEvents(
-        Scd2.cdcEvents(batch).unionByName(allEventsSoFar()))
-      writeHistory(Scd2.history(Scd2.rankedEvents(events), attrFields))
-    }
 
   /** Mode 2: touched-keys rebuild. `priorEvents` is the retained event log
     * (parquet, partitioned by key-hash bucket — only partitions containing
@@ -248,7 +231,7 @@ object Scd2Streaming {
     */
   val DefaultRetentionMs: Long = 7L * 24 * 3600 * 1000
 
-  /** Pure per-key merge step, shared by both state APIs: merge new events
+  /** Pure per-key merge step behind [[Scd2Processor]]: merge new events
     * into the prior per-key log (dedupe on lsn, within-batch AND against
     * state — a redelivered (id, lsn) can land twice in one trigger),
     * compact to the retention horizon, and emit the version rows whose
@@ -286,26 +269,9 @@ object Scd2Streaming {
     (Some(KeyState(merged)), out)
   }
 
-  /** flatMapGroupsWithState body — the LEGACY state-v1 leg, kept because
-    * its TestGroupState harness drives the direct state-bound unit tests;
-    * the flagship [[incremental]] path rides [[Scd2Processor]]
-    * (transformWithState) since r9.
-    */
-  def updateKey(id: Int, incoming: Iterator[KeyEvent],
-                state: GroupState[KeyState]): Iterator[VersionRow] =
-    updateKeyWithRetention(DefaultRetentionMs)(id, incoming, state)
-
-  def updateKeyWithRetention(retentionMs: Long)(id: Int, incoming: Iterator[KeyEvent],
-                state: GroupState[KeyState]): Iterator[VersionRow] = {
-    val (next, out) = mergeKeyEvents(retentionMs, id, incoming,
-      state.getOption.map(_.events).getOrElse(Nil))
-    next.foreach(state.update)
-    out
-  }
-
   /** The Spark-4 arbitrary-state v2 processor for [[incremental]]:
-    * per-key event log in a typed ValueState, merge logic shared with the
-    * legacy leg via [[mergeKeyEvents]]. No timer-based full eviction on
+    * per-key event log in a typed ValueState, merged by
+    * [[mergeKeyEvents]]. No timer-based full eviction on
     * purpose: the highest-lsn event is the OPEN-interval anchor — evicting
     * an idle key would orphan its open version, so a returning key could
     * no longer close the prior interval (the horizon compaction inside

@@ -42,7 +42,7 @@ object StreamingDedup {
   case class SeenState(keepId: Long)
 
   /** flatMapGroupsWithState body — exposed for direct unit testing with
-    * TestGroupState, like Scd2Streaming.updateKey.
+    * TestGroupState.
     */
   def firstSeenUpdate(hash: String, incoming: Iterator[DocRecord],
                       state: GroupState[SeenState]): Iterator[DocRecord] = {

@@ -38,7 +38,7 @@ class LocalFsSpec extends SparkSuite {
 
   test("a session's file scheme resolves to the no-fork classes through both APIs") {
     // in this JVM GraftSession.local returns the shared test session, which
-    // is built with the same GraftSession.LocalFsConf; FileSystem.getLocal
+    // is built from GraftSession.builder too; FileSystem.getLocal
     // goes through Hadoop's JVM-wide cache, so a default LocalFileSystem
     // cached earlier would show here
     val conf = GraftSession.local(4).sessionState.newHadoopConf()

@@ -629,7 +629,7 @@ class PlanSpec extends SparkSuite {
     // a single hot partition is the straggler that holds the stage; this
     // proves the engine config actually re-plans it, rather than assuming.
     import org.apache.spark.sql.functions.{col, sum, when}
-    val confs = Map(
+    val confs = Seq(
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "4KB",
@@ -637,9 +637,7 @@ class PlanSpec extends SparkSuite {
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val prior = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    GraftSession.withConf(spark, confs: _*) {
       // 60% of the big side lands on key 7 — one shuffle partition holds
       // a multiple of the advisory size while the rest stay tiny. The
       // payload must survive column pruning (sum() below) and must not
@@ -654,11 +652,6 @@ class PlanSpec extends SparkSuite {
       val planStr = joined.queryExecution.executedPlan.toString
       assert(planStr.contains("skew=true"),
         s"OptimizeSkewedJoin did not split the hot partition; plan:\n${planStr.take(2000)}")
-    } finally prior.foreach { case (k, v) =>
-      v match {
-        case Some(x) => spark.conf.set(k, x)
-        case None => spark.conf.unset(k)
-      }
     }
   }
 
@@ -700,14 +693,12 @@ class PlanSpec extends SparkSuite {
     // (the fact table never shuffles non-joining rows); pin that the
     // optimizer actually injects it in this build rather than assuming.
     import org.apache.spark.sql.functions.col
-    val confs = Map(
+    val confs = Seq(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.optimizer.runtimeFilter.number.threshold" -> "10",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prior = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    GraftSession.withConf(spark, confs: _*) {
       val li = graft.QueryDef.t(spark, sf, "lineitem")
       val ord = graft.QueryDef.t(spark, sf, "orders")
         .filter(col("o_orderpriority") === "1-URGENT")
@@ -716,11 +707,6 @@ class PlanSpec extends SparkSuite {
       val planStr = joined.queryExecution.executedPlan.toString
       assert(planStr.contains("might_contain"),
         s"runtime bloom filter not injected; plan:\n${planStr.take(2000)}")
-    } finally prior.foreach { case (k, v) =>
-      v match {
-        case Some(x) => spark.conf.set(k, x)
-        case None => spark.conf.unset(k)
-      }
     }
   }
 

@@ -32,18 +32,14 @@ object SparkSuite {
       } catch { case _: java.io.IOException => () } // best-effort at exit
     }))
 
+  /** [[GraftSession.builder]]'s settings at 4 cores, with a per-run
+    * warehouse and the test app name.
+    */
   lazy val session: SparkSession = {
     val wh = java.nio.file.Files.createTempDirectory("graft-warehouse")
-    SparkSession.builder()
-      .master("local[4]")
+    GraftSession.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.sql.warehouse.dir", wh.toString)
-      .config("spark.ui.enabled", "false")
-      .config(GraftSession.LocalFsConf)
       .getOrCreate()
   }
 }

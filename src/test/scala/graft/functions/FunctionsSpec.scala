@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.SparkSuite
+import graft.{GraftSession, SparkSuite}
 
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -101,7 +101,7 @@ class FunctionsSpec extends SparkSuite {
       bloom.writeTo(bos)
       bos.toByteArray
     }
-    withSQLConf("spark.sql.codegen.wholeStage" -> "false",
+    GraftSession.withConf(spark, "spark.sql.codegen.wholeStage" -> "false",
         "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
       val out = Seq(42L, 43L).toDF("h")
         .filter(GraftFunctions.bloomMightContainLong(bytes, col("h")))
@@ -178,7 +178,7 @@ class FunctionsSpec extends SparkSuite {
   }
 
   test("md5_prefix survives the interpreted (non-codegen) path") {
-    withSQLConf("spark.sql.codegen.wholeStage" -> "false",
+    GraftSession.withConf(spark, "spark.sql.codegen.wholeStage" -> "false",
         "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
       val out = Seq("a", "b").toDF("id")
         .select(GraftFunctions.md5Prefix(col("id"), 15).as("h"))
@@ -188,7 +188,7 @@ class FunctionsSpec extends SparkSuite {
   }
 
   test("md5_permille survives the interpreted (non-codegen) path") {
-    withSQLConf("spark.sql.codegen.wholeStage" -> "false",
+    GraftSession.withConf(spark, "spark.sql.codegen.wholeStage" -> "false",
         "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
       val out = Seq("a", "b").toDF("id")
         .select(GraftFunctions.md5Permille(col("id"), "t").as("h"))
@@ -198,7 +198,7 @@ class FunctionsSpec extends SparkSuite {
   }
 
   test("minhash_signature survives the interpreted (non-codegen) path") {
-    withSQLConf("spark.sql.codegen.wholeStage" -> "false",
+    GraftSession.withConf(spark, "spark.sql.codegen.wholeStage" -> "false",
         "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
       val out = Seq("a b c d").toDF("text")
         .select(GraftFunctions.minhashSignature(col("text"), 4, 2).as("s"))
@@ -252,13 +252,52 @@ class FunctionsSpec extends SparkSuite {
   }
 
   test("simhash_signature survives the interpreted (non-codegen) path") {
-    withSQLConf("spark.sql.codegen.wholeStage" -> "false",
+    GraftSession.withConf(spark, "spark.sql.codegen.wholeStage" -> "false",
         "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
       val v = Seq("a b c").toDF("text")
         .select(GraftFunctions.simhashSignature(col("text")).as("s"))
         .head().getLong(0)
       assert(v >= 0 && v < (1L << 60))
     }
+  }
+
+  test("register is idempotent: a second call keeps every builder and logs no replace") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val registry = spark.sessionState.functionRegistry
+    val names = Seq("word_shingles", "array_dot", "minhash_signature", "simhash_signature",
+      "bloom_might_contain_long", "md5_prefix", "md5_permille")
+    def builders = names.map(n => registry.lookupFunctionBuilder(FunctionIdentifier(n)))
+    GraftFunctions.register(spark)
+    val first = builders
+    assert(first.forall(_.isDefined))
+
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("register-probe", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = logged.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(registry.getClass.getName).asInstanceOf[Logger]
+    logger.addAppender(appender)
+    try {
+      GraftFunctions.register(spark)
+      GraftFunctions.md5Prefix(col("x"), 4) // the column helpers register too
+      // positive control: a real replacement is caught by the probe
+      registry.createOrReplaceTempFunction("graft_probe_fn", _ => Literal(1), "built-in")
+      registry.createOrReplaceTempFunction("graft_probe_fn", _ => Literal(2), "built-in")
+      registry.dropFunction(FunctionIdentifier("graft_probe_fn"))
+    } finally logger.removeAppender(appender)
+
+    names.zip(first.zip(builders)).foreach { case (n, (a, b)) =>
+      assert(a.get eq b.get, s"$n was re-registered")
+    }
+    val replaced = logged.toArray.toSeq.map(_.toString)
+      .filter(_.contains("replaced a previously registered function"))
+    assert(replaced.size == 1 && replaced.head.contains("graft_probe_fn"), replaced)
   }
 
   test("registered SQL functions reject wrong input types at analysis time") {
@@ -277,17 +316,6 @@ class FunctionsSpec extends SparkSuite {
         "SELECT array_dot(n, vec) FROM typed_probe",
         "SELECT array_dot(vec, array('a')) FROM typed_probe")) {
       intercept[org.apache.spark.sql.AnalysisException](spark.sql(q))
-    }
-  }
-
-  private def withSQLConf(pairs: (String, String)*)(body: => Unit): Unit = {
-    val conf = spark.conf
-    val olds = pairs.map { case (k, _) => k -> conf.getOption(k) }
-    pairs.foreach { case (k, v) => conf.set(k, v) }
-    try body
-    finally olds.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkSuite
+import graft.{GraftSession, SparkSuite}
 import graft.cdc.{CdcSchemas, EnvelopeReader, Scd2}
 import graft.cdc.CdcFixtures._
 
@@ -23,17 +23,8 @@ class Scd2StreamingSpec extends SparkSuite {
     envelope(productRow(Some(2), "g", "v1", 2.0), "null", "d", t0 + 2000, 300))
 
   /** transformWithState needs column families — RocksDB-only. */
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def withRocksDb[A](body: => A): A =
+    GraftSession.withConf(spark, GraftSession.RocksDbStateStore)(body)
 
   test("file-stream foreachBatch touched-keys rebuild == batch rebuild") {
     val lakeDir = tempDir("streamlake")
@@ -189,34 +180,6 @@ class Scd2StreamingSpec extends SparkSuite {
     }
   }
 
-  test("mode 1 full-rebuild foreachBatch == batch rebuild") {
-    val lakeDir = tempDir("rebuildlake")
-    writeLake(lakeDir, batch1 ++ batch2)
-    val attrs = Seq("name", "description", "price")
-
-    // the reference's own semantics: every trigger re-reads the whole lake
-    // glob and rebuilds (transform_scd2.py is a full CREATE OR REPLACE)
-    var result: Option[org.apache.spark.sql.DataFrame] = None
-    val stream = Scd2Streaming.readEnvelopeStream(
-      spark, lakeDir.getAbsolutePath, CdcSchemas.productsRow, maxFilesPerTrigger = 1)
-    val q = Scd2Streaming.foreachBatchRebuild(
-      stream, attrs,
-      allEventsSoFar = () => Scd2.cdcEvents(
-        spark.read.schema(CdcSchemas.envelope(CdcSchemas.productsRow))
-          .json(lakeDir.getAbsolutePath)),
-      writeHistory = h => {
-        val cached = h.cache(); cached.count(); result = Some(cached)
-      }).start()
-    q.processAllAvailable()
-    q.stop()
-
-    val batchOut = Scd2.transform(
-      EnvelopeReader.readEnvelopes(spark, lakeDir.getAbsolutePath, CdcSchemas.productsRow),
-      attrs)
-    assert(result.get.orderBy("id", "row_valid_start_timestamp").collect().toSeq ==
-           batchOut.orderBy("id", "row_valid_start_timestamp").collect().toSeq)
-  }
-
   test("idempotent batch sink skips already-committed batches") {
     import spark.implicits._
     val dir = tempDir("idempsink").getAbsolutePath
@@ -228,14 +191,10 @@ class Scd2StreamingSpec extends SparkSuite {
   }
 
   test("per-key state is compacted to the retention horizon") {
+    withRocksDb {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Scd2Streaming.KeyEvent]
-    val out = input.toDS()
-      .groupByKey(_.id)
-      .flatMapGroupsWithState(
-        org.apache.spark.sql.streaming.OutputMode.Append,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout())(
-        Scd2Streaming.updateKeyWithRetention(retentionMs = 1000L))
+    val out = Scd2Streaming.incremental(input.toDS(), retentionMs = 1000L)
     val q = out.writeStream.format("memory").queryName("ret_out")
       .outputMode("append").start()
 
@@ -258,6 +217,7 @@ class Scd2StreamingSpec extends SparkSuite {
     assert(last.map(_.lsn).takeRight(2) == Seq(40L, 50L))
     assert(last.find(_.lsn == 40).get.rowValidExpirationMs == t0 + 100500)
     assert(last.find(_.lsn == 50).get.rowValidExpirationMs == Scd2Streaming.SentinelMs)
+    }
   }
 
   test("an idle key's open version closes when its next event lands past the retention horizon") {
@@ -284,17 +244,10 @@ class Scd2StreamingSpec extends SparkSuite {
     // one state row per key even when one key is pathologically hot, and
     // produce the complete correct chain while the hot key's log is being
     // compacted to the retention horizon across batches
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[Scd2Streaming.KeyEvent]
-      val out = input.toDS()
-        .groupByKey(_.id)
-        .flatMapGroupsWithState(
-          org.apache.spark.sql.streaming.OutputMode.Append,
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout())(
-          Scd2Streaming.updateKeyWithRetention(retentionMs = 1000L))
+      val out = Scd2Streaming.incremental(input.toDS(), retentionMs = 1000L)
       val q = out.writeStream.format("memory").queryName("rocks_out")
         .outputMode("append").start()
 
@@ -334,31 +287,23 @@ class Scd2StreamingSpec extends SparkSuite {
       }, "hot-key validity chain must stay contiguous under compaction")
       val k7 = rows.filter(_.id == 7).groupBy(_.lsn).map(_._2.last).toSeq.sortBy(_.lsn)
       assert(k7.map(_.attrs("name")) == Seq("k7-a", "k7-b"))
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
   test("per-key state size is bounded by the retention horizon (direct)") {
-    // drive the state function through TestGroupState: after 10 batches of
-    // a hot key, retained state must hold only the horizon's worth of
-    // events (+ the open-interval anchor), not the full history
-    import org.apache.spark.api.java.Optional
-    import org.apache.spark.sql.streaming.TestGroupState
-    var state = TestGroupState.create[Scd2Streaming.KeyState](
-      Optional.empty(), org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout(),
-      0L, Optional.empty[Long](), false)
+    // drive the per-key merge directly: after 10 batches of a hot key,
+    // retained state must hold only the horizon's worth of events (+ the
+    // open-interval anchor), not the full history
+    var state = List.empty[(Long, Long, Map[String, String])]
     for (b <- 0 until 10) {
       val batch = (0 until 20).map { j =>
         val i = b * 20 + j
         Scd2Streaming.KeyEvent(1, 1000L + i, t0 + i * 40L, Map("name" -> s"h$i"), "u")
       }
-      Scd2Streaming.updateKeyWithRetention(retentionMs = 1000L)(1, batch.iterator, state).length
-      state = TestGroupState.create[Scd2Streaming.KeyState](
-        Optional.of(state.get), org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout(),
-        0L, Optional.empty[Long](), false)
+      val (next, _) = Scd2Streaming.mergeKeyEvents(1000L, 1, batch.iterator, state)
+      next.foreach(n => state = n.events)
     }
-    val retained = state.get.events.size
+    val retained = state.size
     // horizon = 1000 ms / 40 ms spacing = ~26 events; full history is 200
     assert(retained <= 30,
       s"state must be bounded by the retention horizon, held $retained of 200 events")
@@ -369,12 +314,9 @@ class Scd2StreamingSpec extends SparkSuite {
       "under RocksDB, chain stays contiguous across compaction") {
     // r9: the flagship incremental path moved to the Spark-4
     // transformWithState surface (Scd2Processor + typed ValueState); this
-    // pins the same contract the legacy-leg tests pin — one state row per
-    // key, horizon-bounded log, contiguous validity chain — through the
-    // NEW path end-to-end.
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    // pins one state row per key, a horizon-bounded log and a contiguous
+    // validity chain through that path end-to-end.
+    withRocksDb {
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[Scd2Streaming.KeyEvent]
       val out = Scd2Streaming.incremental(input.toDS(), retentionMs = 1000L)
@@ -406,8 +348,6 @@ class Scd2StreamingSpec extends SparkSuite {
         case Seq(a, b) => a.rowValidExpirationMs == b.rowValidStartMs
         case _ => true
       }, "validity chain must stay contiguous under the v2 state path")
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkSuite
+import graft.{GraftSession, SparkSuite}
 import graft.streaming.StreamingDedup.{DocRecord, SeenState}
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -115,11 +115,7 @@ class StreamingDedupSpec extends SparkSuite {
       1L -> "b2", 2L -> "b1", 3L -> "b1", 4L -> "b2", 5L -> "b3",
       6L -> "b1", 7L -> "b3", 8L -> "b4", 9L -> "b2", 10L -> "b4")
     def run(batches: Seq[Seq[(Long, String)]], name: String): Set[(Long, String, Boolean)] = {
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      val prior = spark.conf.getOption(providerKey)
-      spark.conf.set(providerKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      GraftSession.withConf(spark, GraftSession.RocksDbStateStore) {
         val input = MemoryStream[(Long, String)]
         val flags = input.toDS().groupByKey(_._2)
           .transformWithState(new StatefulAgg.BandOwner,
@@ -131,9 +127,6 @@ class StreamingDedupSpec extends SparkSuite {
         q.stop()
         spark.table(name).as[StatefulAgg.BandFlag].collect()
           .map(f => (f.doc_id, f.band, f.dup)).toSet
-      } finally prior match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
       }
     }
     val one = run(Seq(pairs), "band_one")
@@ -160,11 +153,7 @@ class StreamingDedupSpec extends SparkSuite {
       30L -> "b3", 33L -> "b1", 34L -> "b3") // 33: gap 21, not; 34: gap 4, dup
     def run(batches: Seq[Seq[(Long, String)]], name: String)
         : (Set[(Long, String, Boolean)], Long) = {
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      val prior = spark.conf.getOption(providerKey)
-      spark.conf.set(providerKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      GraftSession.withConf(spark, GraftSession.RocksDbStateStore) {
         val input = MemoryStream[(Long, String)]
         val flags = input.toDF().toDF("doc_id", "band")
           .withColumn("ts", timestamp_seconds(col("doc_id")))
@@ -181,9 +170,6 @@ class StreamingDedupSpec extends SparkSuite {
         q.stop()
         (spark.table(name).as[StatefulAgg.BandFlag].collect()
           .map(f => (f.doc_id, f.band, f.dup)).toSet, stateRows)
-      } finally prior match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
       }
     }
     // the LAG rule: dup <=> previous arrival of the band within H

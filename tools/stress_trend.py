@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Compare two SmokeOne sweeps at different scale factors against the
+"""Compare two `graft.Diag smoke` sweeps at different scale factors against the
 per-query class manifest (tools/stress_classes.json).
 
 Usage: stress_trend.py <lo.log> <hi.log> <lo_factor> <hi_factor> [manifest]
@@ -217,7 +217,7 @@ def selftest():
     (VERDICT r14 task #1 — 'a synthetic 20x time row must fail the tool').
     """
     def smoke(q, tl, th, ml, mh, f=100):
-        # one lo line and one hi line in SmokeOne's format
+        # one lo line and one hi line in `Diag smoke`'s format
         return (f"[smoke] {q:34} head=  1.00s x10={tl:7.2f}s ratio=  1.00 "
                 f"shuffleMB={ml:8.1f} -> {ml:8.1f}\n",
                 f"[smoke] {q:34} head=  1.00s x{f}={th:7.2f}s ratio=  1.00 "
