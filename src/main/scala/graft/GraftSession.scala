@@ -28,6 +28,37 @@ object GraftSession {
     // documented plan of several catalog queries (ordered ranks over small
     // aggregates), and the WARN repeats on every execution
     setLevel("org.apache.spark.sql.execution.window.WindowExec", ERROR)
+    // "spark.sql.adaptive.enabled is not supported in streaming …" at every
+    // stream start; the logger's only other WARN is the temporary-checkpoint
+    // notice, and BoundedStream always names a checkpoint
+    setLevel("org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream", ERROR)
+    // "Disabling AQE …" at every stateful stream start: drop that one line
+    // and keep the logger's other WARNs at their level
+    denyMessage("org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution",
+      "Disabling AQE since AQE is not supported in stateful workloads\\.")
+  }
+
+  /** Drop the events of logger `name` whose message matches `regex`
+    * (same as a `RegexFilter` with `onMatch = DENY` in a log4j2 config).
+    * The logger keeps inheriting its level from its parent. A logger that
+    * already has a filter (a repeat call, or one from a config file) is
+    * left as it is.
+    */
+  private def denyMessage(name: String, regex: String): Unit = {
+    import org.apache.logging.log4j.core.{Filter, LoggerContext}
+    import org.apache.logging.log4j.core.config.LoggerConfig
+    import org.apache.logging.log4j.core.filter.RegexFilter
+    val ctx = LoggerContext.getContext(false)
+    val cfg = ctx.getConfiguration
+    val own = Option(cfg.getLoggers.get(name)).getOrElse {
+      val lc = new LoggerConfig(name, null, true)
+      cfg.addLogger(name, lc)
+      lc
+    }
+    if (!own.hasFilter) {
+      own.addFilter(RegexFilter.createFilter(regex, Array.empty, false, Filter.Result.DENY, Filter.Result.NEUTRAL))
+      ctx.updateLoggers()
+    }
   }
 
   /** Route the `file` scheme through [[NoForkLocalFileSystem]] and, for

@@ -6,7 +6,7 @@ import java.nio.file.{Files, LinkOption, NoSuchFileException}
 import java.nio.file.attribute.{PosixFileAttributes, PosixFilePermissions}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults, FSLinkResolver, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FSDataInputStream, FsConstants, FsServerDefaults, FSLinkResolver, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -65,6 +65,13 @@ class NoForkRawLocalFs(uri: URI, conf: Configuration)
 /** `fs.AbstractFileSystem.file.impl`: the checksummed `LocalFs` equivalent.
   * Like `LocalFs`, it always serves `file:///`; Hadoop's reflective
   * constructor call still passes the requested URI.
+  *
+  * `open(path)` is the call streaming checkpoint reads make. `FilterFs`
+  * hands it straight to the raw filesystem, which never reads the `.crc`
+  * sidecar, so it goes through the checksummed `open(path, bufferSize)`
+  * here. A file without a sidecar still reads unverified.
   */
 class NoForkLocalFs(uri: URI, conf: Configuration)
-    extends ChecksumFs(new NoForkRawLocalFs(FsConstants.LOCAL_FS_URI, conf))
+    extends ChecksumFs(new NoForkRawLocalFs(FsConstants.LOCAL_FS_URI, conf)) {
+  override def open(f: Path): FSDataInputStream = open(f, getServerDefaults(f).getFileBufferSize)
+}

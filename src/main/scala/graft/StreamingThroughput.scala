@@ -1,11 +1,12 @@
 package graft
 
 import graft.cdc.CdcSchemas
-import graft.streaming.Scd2Streaming
+import graft.streaming.{BoundedStream, Scd2Streaming}
+import graft.streaming.StatefulAgg.{BandFlag, BandOwner, BandOwnerTtl}
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQuery, TimeMode}
 
 /** Throughput/latency/state instrumentation for the CONTINUOUS legs
   * (VERDICT r15 task #1): the 27 streaming oracle rows prove the
@@ -226,7 +227,7 @@ object StreamingThroughput {
       "spark.sql.streaming.numRecentProgressUpdates" -> "400")(body)
 
   /** Per-batch stats from a completed query's progress history. */
-  private def harvest(q: org.apache.spark.sql.streaming.StreamingQuery): Seq[BatchStat] =
+  private def harvest(q: StreamingQuery): Seq[BatchStat] =
     q.recentProgress.toSeq.map { p =>
       val execMs = Option(p.durationMs.get("triggerExecution"))
         .map(_.longValue()).getOrElse(-1L)
@@ -239,8 +240,7 @@ object StreamingThroughput {
     * stats from its progress history. `start` must build and start the
     * query; state rows come from stateOperators.numRowsTotal.
     */
-  private def drive(spark: SparkSession,
-                    start: () => org.apache.spark.sql.streaming.StreamingQuery,
+  private def drive(spark: SparkSession, start: () => StreamingQuery,
                     leg: String, totalRows: Long, expectedState: Long): LegResult =
     withStreamingConf(spark) {
       val t0 = System.nanoTime()
@@ -250,47 +250,59 @@ object StreamingThroughput {
       LegResult(leg, totalRows, wallS, expectedState, harvest(q))
     }
 
-  /** SCD2 incremental leg: envelope NDJSON slices → parse → typed change
-    * events → [[Scd2Streaming.incremental]] (per-key ValueState event log)
-    * → parquet append. Identical pipeline to the streaming_current_state /
-    * cdc oracle legs, at bench size.
+  /** Start the SCD2 incremental stream over the staged envelope slices:
+    * parse → [[Scd2Streaming.keyEvents]] → [[Scd2Streaming.incremental]]
+    * (per-key ValueState event log) → parquet append under `scratch`.
+    */
+  private def startScd2(spark: SparkSession, lake: String, scratch: String,
+                        attrFields: Seq[String]): StreamingQuery = {
+    val envelopes = Scd2Streaming.readEnvelopeStream(
+      spark, s"$lake/b*/part-*", CdcSchemas.productsRow, maxFilesPerTrigger = 1)
+    BoundedStream.start(Scd2Streaming.incremental(Scd2Streaming.keyEvents(envelopes, attrFields)),
+        s"$scratch/ckpt") { (b, _) =>
+      b.write.mode("append").parquet(s"$scratch/emissions")
+    }
+  }
+
+  /** SCD2 incremental leg ([[startScd2]] over every product attribute).
+    * Identical pipeline to the streaming_current_state / cdc oracle legs,
+    * at bench size.
     */
   def scd2Leg(spark: SparkSession, scratchRoot: String,
               n: Long = Scd2Events, slices: Int = Scd2Slices): LegResult = {
-    import spark.implicits._
     val lake = ensureEnvelopeSlices(spark, n, slices)
     val scratch = freshDir(s"$scratchRoot/scd2")
-    val out = s"$scratch/emissions"
-    def start() = {
-      val envelopes = Scd2Streaming.readEnvelopeStream(
-        spark, s"$lake/b*/part-*", CdcSchemas.productsRow, maxFilesPerTrigger = 1)
-      val events = envelopes
-        .filter(col("payload.op").isNotNull)
-        .select(
-          coalesce(col("payload.after.id"), col("payload.before.id"))
-            .cast("int").as("id"),
-          col("payload.source.lsn").cast("long").as("lsn"),
-          col("payload.ts_ms").cast("long").as("tsMs"),
-          map(
-            lit("name"), col("payload.after.name"),
-            lit("description"), col("payload.after.description"),
-            lit("price"), col("payload.after.price").cast("string")).as("attrs"),
-          col("payload.op").as("op"))
-        .filter(col("id").isNotNull)
-        .as[Scd2Streaming.KeyEvent]
-      Scd2Streaming.incremental(events)
-        .writeStream
-        .foreachBatch { (b: Dataset[Scd2Streaming.VersionRow], _: Long) =>
-          b.write.mode("append").parquet(out)
-          ()
-        }
-        .option("checkpointLocation", s"$scratch/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
     // one ValueState row per key ⇒ end state must be exactly the distinct
     // key count of the stream (n/10 by construction)
-    drive(spark, () => start(), "scd2_incremental", n, expectedState = n / 10)
+    drive(spark, () => startScd2(spark, lake, scratch, Seq("name", "description", "price")),
+      "scd2_incremental", n, expectedState = n / 10)
+  }
+
+  /** MinHash → 8 band digests per document (the LSH legs' shared kernel,
+    * batch or stream).
+    */
+  private def banded(df: DataFrame): DataFrame = df
+    .filter(size(split(col("text"), " ")) >= 3)
+    .select(col("doc_id"), graft.functions.GraftFunctions.minhashSignature(col("text"), 16, 3).as("__sig"))
+    .select(col("doc_id"),
+      explode(graft.dedup.Dedup.lshBandDigests(col("__sig"), 8, 2)).as("band"))
+
+  /** Start an LSH leg: staged document slices (after `prep`) → [[banded]]
+    * → `processor` keyed by band → parquet append under `scratch`.
+    */
+  private def startLsh(spark: SparkSession, lake: String, scratch: String,
+                       prep: DataFrame => DataFrame,
+                       processor: StatefulProcessor[String, (Long, String), BandFlag],
+                       timeMode: TimeMode): StreamingQuery = {
+    import spark.implicits._
+    val flags = banded(prep(spark.readStream.schema("doc_id LONG, text STRING")
+        .option("maxFilesPerTrigger", 1).parquet(s"$lake/b*/part-*.parquet")))
+      .as[(Long, String)]
+      .groupByKey(_._2)
+      .transformWithState(processor, timeMode, OutputMode.Append())
+    BoundedStream.start(flags, s"$scratch/ckpt") { (b, _) =>
+      b.write.mode("append").parquet(s"$scratch/flags")
+    }
   }
 
   /** LSH at-ingest dedup leg: document slices → codegen MinHash → band
@@ -300,40 +312,15 @@ object StreamingThroughput {
     */
   def lshLeg(spark: SparkSession, sfDir: String, scratchRoot: String,
              copies: Int = LshCopies, slices: Int = LshSlices): LegResult = {
-    import spark.implicits._
     val lake = ensureDocSlices(spark, sfDir, copies, slices)
     val scratch = freshDir(s"$scratchRoot/lsh")
-    val out = s"$scratch/flags"
-    val sigExpr = graft.functions.GraftFunctions.minhashSignature(col("text"), 16, 3)
-    def banded(df: org.apache.spark.sql.DataFrame) = df
-      .filter(size(split(col("text"), " ")) >= 3)
-      .select(col("doc_id"), sigExpr.as("__sig"))
-      .select(col("doc_id"),
-        explode(graft.dedup.Dedup.lshBandDigests(col("__sig"), 8, 2)).as("band"))
     // expected end state: one ValueState row per distinct band in the
     // corpus (batch replay of the same kernel)
     val scaled = scaledDocs(spark, sfDir, copies)
     val expected = banded(scaled).select("band").distinct().count()
     val totalDocs = scaled.count()
-    def start() = {
-      val flags = banded(
-          spark.readStream.schema("doc_id LONG, text STRING")
-            .option("maxFilesPerTrigger", 1).parquet(s"$lake/b*/part-*.parquet"))
-        .as[(Long, String)]
-        .groupByKey(_._2)
-        .transformWithState(new graft.streaming.StatefulAgg.BandOwner,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Append())
-      flags.writeStream
-        .foreachBatch { (b: Dataset[graft.streaming.StatefulAgg.BandFlag], _: Long) =>
-          b.write.mode("append").parquet(out)
-          ()
-        }
-        .option("checkpointLocation", s"$scratch/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    drive(spark, () => start(), "lsh_dedup_ingest", totalDocs, expected)
+    drive(spark, () => startLsh(spark, lake, scratch, identity, new BandOwner, TimeMode.None()),
+      "lsh_dedup_ingest", totalDocs, expected)
   }
 
   /** TTL'd LSH dedup leg (VERDICT r16 task #2): same corpus, same kernel,
@@ -354,16 +341,8 @@ object StreamingThroughput {
   def lshTtlLeg(spark: SparkSession, sfDir: String, scratchRoot: String,
                 copies: Int = LshCopies, slices: Int = LshSlices,
                 horizonDocs: Long = 24000L): LegResult = {
-    import spark.implicits._
     val lake = ensureDocSlices(spark, sfDir, copies, slices)
     val scratch = freshDir(s"$scratchRoot/lsh_ttl")
-    val out = s"$scratch/flags"
-    val sigExpr = graft.functions.GraftFunctions.minhashSignature(col("text"), 16, 3)
-    def banded(df: org.apache.spark.sql.DataFrame) = df
-      .filter(size(split(col("text"), " ")) >= 3)
-      .select(col("doc_id"), sigExpr.as("__sig"))
-      .select(col("doc_id"),
-        explode(graft.dedup.Dedup.lshBandDigests(col("__sig"), 8, 2)).as("band"))
     val scaled = scaledDocs(spark, sfDir, copies)
     val totalDocs = scaled.count()
     val maxDoc = scaled.agg(max("doc_id")).head().getLong(0)
@@ -372,28 +351,11 @@ object StreamingThroughput {
       .agg(max("doc_id").as("last_doc"))
       .filter(col("last_doc") > maxDoc - horizonDocs - 2 * sliceWidth)
       .count()
-    def start() = {
-      val flags = banded(
-          spark.readStream.schema("doc_id LONG, text STRING")
-            .option("maxFilesPerTrigger", 1).parquet(s"$lake/b*/part-*.parquet")
-            .withColumn("ts", timestamp_seconds(col("doc_id")))
-            .withWatermark("ts", "0 seconds"))
-        .as[(Long, String)]
-        .groupByKey(_._2)
-        .transformWithState(
-          new graft.streaming.StatefulAgg.BandOwnerTtl(horizonDocs),
-          org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          org.apache.spark.sql.streaming.OutputMode.Append())
-      flags.writeStream
-        .foreachBatch { (b: Dataset[graft.streaming.StatefulAgg.BandFlag], _: Long) =>
-          b.write.mode("append").parquet(out)
-          ()
-        }
-        .option("checkpointLocation", s"$scratch/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    drive(spark, () => start(), "lsh_dedup_ttl", totalDocs, bound)
+    def eventTime(docs: DataFrame) =
+      docs.withColumn("ts", timestamp_seconds(col("doc_id"))).withWatermark("ts", "0 seconds")
+    drive(spark,
+      () => startLsh(spark, lake, scratch, eventTime, new BandOwnerTtl(horizonDocs), TimeMode.EventTime()),
+      "lsh_dedup_ttl", totalDocs, bound)
       .copy(stateBound = true)
   }
 
@@ -428,35 +390,10 @@ object StreamingThroughput {
   def recoveryLeg(spark: SparkSession, scratchRoot: String,
                   n: Long = Scd2Events, slices: Int = Scd2Slices,
                   stopAfter: Int = 10): RecoveryResult = {
-    import spark.implicits._
     val lake = ensureEnvelopeSlices(spark, n, slices)
     val scratch = freshDir(s"$scratchRoot/scd2_recovery")
-    val out = s"$scratch/emissions"
     withStreamingConf(spark) {
-      def start() = {
-        val envelopes = Scd2Streaming.readEnvelopeStream(
-          spark, s"$lake/b*/part-*", CdcSchemas.productsRow, maxFilesPerTrigger = 1)
-        val events = envelopes
-          .filter(col("payload.op").isNotNull)
-          .select(
-            coalesce(col("payload.after.id"), col("payload.before.id"))
-              .cast("int").as("id"),
-            col("payload.source.lsn").cast("long").as("lsn"),
-            col("payload.ts_ms").cast("long").as("tsMs"),
-            map(lit("name"), col("payload.after.name")).as("attrs"),
-            col("payload.op").as("op"))
-          .filter(col("id").isNotNull)
-          .as[Scd2Streaming.KeyEvent]
-        Scd2Streaming.incremental(events)
-          .writeStream
-          .foreachBatch { (b: Dataset[Scd2Streaming.VersionRow], _: Long) =>
-            b.write.mode("append").parquet(out)
-            ()
-          }
-          .option("checkpointLocation", s"$scratch/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-      }
+      def start() = startScd2(spark, lake, scratch, Seq("name"))
       // phase 1: run until `stopAfter` batches have committed, then stop
       // mid-flight (the in-flight batch is torn — the checkpoint replays
       // it under the same id on restart)
@@ -481,7 +418,7 @@ object StreamingThroughput {
       // end-state exactness: every (id, lsn) version emitted at least
       // once and countable exactly once after the documented sink-side
       // upsert (dedup on the version key)
-      val distinctVersions = spark.read.parquet(out)
+      val distinctVersions = spark.read.parquet(s"$scratch/emissions")
         .select("id", "lsn").distinct().count()
       RecoveryResult(
         preStopBatches = committed1.size,

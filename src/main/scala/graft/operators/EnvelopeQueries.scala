@@ -3,6 +3,7 @@ package graft.operators
 import graft.QueryDef
 import graft.QueryDef.t
 import graft.cdc.{CdcSchemas, EnvelopeReader, Scd2}
+import graft.streaming.BoundedStream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -295,26 +296,19 @@ object EnvelopeQueries {
               .foreach(_.setLastModified(1700000000000L + i * 60000L))
           }
           val out = s"$scratch/emissions"
-          val q = s.readStream.option("maxFilesPerTrigger", 1)
-            .text(s"$stage/b*/part-*")
-            .writeStream
-            .foreachBatch { (b: DataFrame, batchId: Long) =>
-              val session = b.sparkSession
-              import session.implicits._
-              val parsed = session.read.json(b.as[String])
-              val cols = parsed.schema.fieldNames.sorted.toSeq
-              val stats = parsed
-                .select(cols.map(c => count(col(c)).as(c)): _*).collect().head
-              cols.zipWithIndex
-                .map { case (c, i) => (batchId, c, stats.getLong(i)) }
-                .toDF("batch_id", "column_name", "n_nonnull")
-                .write.mode("append").parquet(out)
-              ()
-            }
-            .option("checkpointLocation", s"$scratch/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          val lines = s.readStream.option("maxFilesPerTrigger", 1).text(s"$stage/b*/part-*")
+          BoundedStream.start(lines, s"$scratch/ckpt") { (b, batchId) =>
+            val session = b.sparkSession
+            import session.implicits._
+            val parsed = session.read.json(b.as[String])
+            val cols = parsed.schema.fieldNames.sorted.toSeq
+            val stats = parsed
+              .select(cols.map(c => count(col(c)).as(c)): _*).collect().head
+            cols.zipWithIndex
+              .map { case (c, i) => (batchId, c, stats.getLong(i)) }
+              .toDF("batch_id", "column_name", "n_nonnull")
+              .write.mode("append").parquet(out)
+          }.awaitTermination()
           s.read.parquet(out)
             .groupBy("column_name")
             .agg(min("batch_id").as("first_seen_batch"),

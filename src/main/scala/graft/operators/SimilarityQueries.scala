@@ -884,16 +884,18 @@ object SimilarityQueries {
         val w = org.apache.spark.sql.expressions.Window
         val emb = t(s, d, "embeddings")
         val nrm = Similarity.l2Norm(col("embedding"))
-        val q = broadcast(emb.filter(col("vec_id") < 50)
+        val q = emb.filter(col("vec_id") < 50)
           .select(col("vec_id").as("q_id"), col("embedding").as("qvec"),
-            nrm.as("qnorm"), col("label").as("q_label")))
+            nrm.as("qnorm"), col("label").as("q_label"))
         val c = emb.filter(col("vec_id") >= 50)
           .select(col("vec_id").as("c_id"), col("embedding").as("cvec"),
             nrm.as("cnorm"), col("label").as("c_label"))
         val simQ = round(Similarity.dot(col("qvec"), col("cvec")) /
           (col("qnorm") * col("cnorm")) * lit(1e12)).cast("long")
         val byQ = w.partitionBy("q_id").orderBy(col("sim_q").desc, col("c_id"))
-        val top = c.crossJoin(q).withColumn("sim_q", simQ)
+        // the hint goes on the cross join only: q is also the left side
+        // of the idcg left outer join, which cannot build left
+        val top = c.crossJoin(broadcast(q)).withColumn("sim_q", simQ)
           .withColumn("rn", row_number().over(byQ)).filter(col("rn") <= 10)
           .withColumn("rel", when(col("c_label") === col("q_label"), 1L).otherwise(0L))
           .withColumn("w_nano",

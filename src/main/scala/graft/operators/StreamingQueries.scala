@@ -2,11 +2,11 @@ package graft.operators
 
 import graft.{GraftSession, QueryDef}
 import graft.cdc.CdcSchemas
-import graft.streaming.Scd2Streaming
+import graft.streaming.{BoundedStream, Scd2Streaming}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Driver-visible correctness entries for the streaming path (SURVEY.md
   * §2.8): the continuous modes must converge to the reference's batch
@@ -123,14 +123,10 @@ object StreamingQueries {
     val dir = EnvelopeQueries.buildLake(s, sfDir)
     val maintainer = new Scd2Streaming.TouchedKeysMaintainer(
       Seq("name", "description", "price"))
-    val q = Scd2Streaming
+    val envelopes = Scd2Streaming
       .readEnvelopeStream(s, dir + "/part-*", CdcSchemas.productsRow, maxFilesPerTrigger = 1)
-      .writeStream
-      .foreachBatch { (b: DataFrame, _: Long) => maintainer.step(b) }
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    BoundedStream.start(envelopes, s"$scratch/ckpt") { (b, _) => maintainer.step(b) }
+      .awaitTermination()
     try maintainer.history.getOrElse(
         sys.error("stream produced no micro-batches over a non-empty lake"))
       .select(col("id"), col("name"), col("description"), col("price"),
@@ -149,45 +145,11 @@ object StreamingQueries {
     * convergent regardless of how the files were sliced into triggers.
     */
   private def runIncremental(s: SparkSession, sfDir: String, scratch: String, resultOut: String): Unit = {
-    import s.implicits._
-    // transformWithState (the r9 incremental surface) needs column
-    // families, which only the RocksDB state store provides
-    GraftSession.withConf(s, GraftSession.RocksDbStateStore) {
-      runIncrementalInner(s, sfDir, scratch, resultOut)
-    }
-  }
-
-  private def runIncrementalInner(s: SparkSession, sfDir: String, scratch: String, resultOut: String): Unit = {
-    import s.implicits._
     val dir = EnvelopeQueries.buildLake(s, sfDir)
     val out = s"$scratch/emissions"
-    val envelopes = Scd2Streaming.readEnvelopeStream(
-      s, dir + "/part-*", CdcSchemas.productsRow, maxFilesPerTrigger = 1)
-    val events = envelopes
-      .filter(col("payload.op").isNotNull)
-      .select(
-        coalesce(col("payload.after.id"), col("payload.before.id"))
-          .cast("int").as("id"),
-        col("payload.source.lsn").cast("long").as("lsn"),
-        col("payload.ts_ms").cast("long").as("tsMs"),
-        map(
-          lit("name"), col("payload.after.name"),
-          lit("description"), col("payload.after.description"),
-          lit("price"), col("payload.after.price").cast("string")).as("attrs"),
-        col("payload.op").as("op"))
-      .filter(col("id").isNotNull)
-      .as[Scd2Streaming.KeyEvent]
-    val q = Scd2Streaming.incremental(events)
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[Scd2Streaming.VersionRow], batchId: Long) =>
-        b.withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(out)
-        ()
-      }
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runIncrementalScd2(s, scratch, out, Scd2Streaming.readEnvelopeStream(
+      s, dir + "/part-*", CdcSchemas.productsRow, maxFilesPerTrigger = 1),
+      Seq("name", "description", "price"))
     // last emission per (id, lsn) wins: later batches re-emit corrected
     // intervals for reopened versions
     s.read.parquet(out)
@@ -200,6 +162,19 @@ object StreamingQueries {
         col("v.rowValidExpirationMs").as("valid_to_ms"))
       .coalesce(1).write.mode("overwrite").parquet(resultOut)
   }
+
+  /** Drain an envelope stream through [[Scd2Streaming.incremental]],
+    * appending every emission to `out` with its batch id. transformWithState
+    * needs column families, which only the RocksDB state store provides.
+    */
+  private def runIncrementalScd2(s: SparkSession, scratch: String, out: String,
+                                 envelopes: DataFrame, attrFields: Seq[String]): Unit =
+    GraftSession.withConf(s, GraftSession.RocksDbStateStore) {
+      val versions = Scd2Streaming.incremental(Scd2Streaming.keyEvents(envelopes, attrFields))
+      BoundedStream.start(versions, s"$scratch/ckpt") { (b, batchId) =>
+        b.withColumn("batch_id", lit(batchId)).write.mode("append").parquet(out)
+      }.awaitTermination()
+    }
 
   /** Stream the `documents` table through [[graft.streaming.StreamingDedup
     * .firstSeen]] as four deterministic micro-batches (doc_id mod 4,
@@ -230,14 +205,9 @@ object StreamingQueries {
         .parquet(stage + "/b*/part-*.parquet")
         .selectExpr("doc_id AS docId", "content_hash AS contentHash")
         .as[graft.streaming.StreamingDedup.DocRecord])
-    val q = kept.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.StreamingDedup.DocRecord], _: Long) =>
-        b.write.mode("append").parquet(out); ()
-      }
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    BoundedStream.start(kept, s"$scratch/ckpt") { (b, _) =>
+      b.write.mode("append").parquet(out)
+    }.awaitTermination()
     s.read.parquet(out).select(col("docId").as("keep_id"), col("contentHash").as("content_hash"))
       .coalesce(1).write.mode("overwrite").parquet(resultOut)
   }
@@ -315,17 +285,11 @@ object StreamingQueries {
     val deduped = eventStream(s, glob)
       .withWatermark("ts", "30 days")
       .dropDuplicatesWithinWatermark("event_id")
-    val q = deduped.writeStream
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        b.select(col("event_id"), col("user_id"),
-            col("ts").cast("timestamp_ntz").as("ts"), col("event_type"), col("value"))
-          .write.mode("append").parquet(out)
-        ()
-      }
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    BoundedStream.start(deduped, s"$scratch/ckpt") { (b, _) =>
+      b.select(col("event_id"), col("user_id"),
+          col("ts").cast("timestamp_ntz").as("ts"), col("event_type"), col("value"))
+        .write.mode("append").parquet(out)
+    }.awaitTermination()
     s.read.parquet(out).coalesce(1).write.mode("overwrite").parquet(resultOut)
   }
 
@@ -345,12 +309,9 @@ object StreamingQueries {
     val glob = stageEventSlices(s, sfDir, s"$scratch/evlake")
     val maintainer = new graft.streaming.CurrentState.LakeMaintainer(
       s, s"$scratch/state", "user_id", "event_id", Seq("ts", "event_type", "value"))
-    val q = eventStream(s, glob).writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) => maintainer.step(b, batchId) }
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    BoundedStream.start(eventStream(s, glob), s"$scratch/ckpt") { (b, batchId) =>
+      maintainer.step(b, batchId)
+    }.awaitTermination()
     maintainer.current().getOrElse(sys.error("no micro-batches ran"))
       .select(col("user_id"), col("event_id"), col("event_type"), col("value"),
         col("ts").cast("timestamp_ntz").as("ts"))
@@ -366,18 +327,12 @@ object StreamingQueries {
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
           .cast("double").as("sum_value"))
-    val q = agg.writeStream
-      .outputMode("complete") // state retained across triggers; snapshot per trigger
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        b.select(col("window.start").cast("timestamp_ntz").as("hour_start"),
-            col("event_type"), col("n_events"), col("sum_value"))
-          .coalesce(1).write.mode("overwrite").parquet(resultOut)
-        ()
-      }
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    // state retained across triggers; snapshot per trigger
+    BoundedStream.start(agg, s"$scratch/ckpt", OutputMode.Complete()) { (b, _) =>
+      b.select(col("window.start").cast("timestamp_ntz").as("hour_start"),
+          col("event_type"), col("n_events"), col("sum_value"))
+        .coalesce(1).write.mode("overwrite").parquet(resultOut)
+    }.awaitTermination()
   }
 
   /** Stage the events table like [[stageEventSlices]], but re-route two
@@ -450,19 +405,12 @@ object StreamingQueries {
       .withWatermark("ts", "90 minutes")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
-    val q = agg.writeStream
-      .outputMode("update")
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        b.select(col("window.start").cast("timestamp_ntz").as("hour_start"),
-            col("event_type"), col("n_events"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(out)
-        ()
-      }
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    BoundedStream.start(agg, s"$scratch/ckpt", OutputMode.Update()) { (b, batchId) =>
+      b.select(col("window.start").cast("timestamp_ntz").as("hour_start"),
+          col("event_type"), col("n_events"))
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(out)
+    }.awaitTermination()
     s.read.parquet(out)
       .groupBy("hour_start", "event_type")
       .agg(max_by(col("n_events"), col("batch_id")).as("n_events"))
@@ -498,18 +446,12 @@ object StreamingQueries {
       .withColumn("bucket",
         graft.functions.GraftFunctions.md5Prefix(concat(lit("cms"),
           col("j").cast("string"), lit(":"), col("tok")), 15) % 256L)
-    val q = s.readStream.schema("doc_id LONG, text STRING")
+    val docStream = s.readStream.schema("doc_id LONG, text STRING")
       .option("maxFilesPerTrigger", 1).parquet(s"$scratch/doclake/b*/part-*")
-      .writeStream
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        bucketed(b).groupBy("j", "bucket").agg(count(lit(1)).as("c"))
-          .write.mode("append").parquet(out)
-        ()
-      }
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    BoundedStream.start(docStream, s"$scratch/ckpt") { (b, _) =>
+      bucketed(b).groupBy("j", "bucket").agg(count(lit(1)).as("c"))
+        .write.mode("append").parquet(out)
+    }.awaitTermination()
     val counters = s.read.parquet(out).groupBy("j", "bucket")
       .agg(sum("c").as("c"))
     val tc = docs.select(explode(graft.text.TextOps.tokens(col("text"))).as("tok"))
@@ -548,16 +490,9 @@ object StreamingQueries {
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
           .cast("double").as("sum_value"))
-    val q = agg.writeStream
-      .outputMode("complete")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        b.coalesce(1).write.mode("overwrite").parquet(resultOut)
-        ()
-      }
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    BoundedStream.start(agg, s"$scratch/ckpt", OutputMode.Complete()) { (b, _) =>
+      b.coalesce(1).write.mode("overwrite").parquet(resultOut)
+    }.awaitTermination()
   }
 
   /** Streaming OHLC maintenance — argmin/argmax STATE per bar: min_by/
@@ -578,16 +513,9 @@ object StreamingQueries {
         min(col("value")).as("low_v"),
         max_by(col("value"), struct(col("ts"), col("event_id"))).as("close_v"),
         count(lit(1)).as("n_events"))
-    val q = agg.writeStream
-      .outputMode("complete")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        b.coalesce(1).write.mode("overwrite").parquet(resultOut)
-        ()
-      }
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    BoundedStream.start(agg, s"$scratch/ckpt", OutputMode.Complete()) { (b, _) =>
+      b.coalesce(1).write.mode("overwrite").parquet(resultOut)
+    }.awaitTermination()
   }
 
   /** Hopping (sliding) event-time windows over the multi-trigger stream —
@@ -606,18 +534,11 @@ object StreamingQueries {
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
           .cast("double").as("sum_value"))
-    val q = agg.writeStream
-      .outputMode("complete")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        b.select(col("window.start").cast("timestamp_ntz").as("window_start"),
-            col("event_type"), col("n_events"), col("sum_value"))
-          .coalesce(1).write.mode("overwrite").parquet(resultOut)
-        ()
-      }
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    BoundedStream.start(agg, s"$scratch/ckpt", OutputMode.Complete()) { (b, _) =>
+      b.select(col("window.start").cast("timestamp_ntz").as("window_start"),
+          col("event_type"), col("n_events"), col("sum_value"))
+        .coalesce(1).write.mode("overwrite").parquet(resultOut)
+    }.awaitTermination()
   }
 
   /** Streaming drift monitor: the per-bin reference/current histogram of
@@ -674,20 +595,13 @@ object StreamingQueries {
       .groupBy("bin")
       .agg(sum(col("is_ref")).as("ref_cnt"),
         sum(lit(1L) - col("is_ref")).as("cur_cnt"))
-    val q = binned.writeStream
-      .outputMode("complete")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val wAll = org.apache.spark.sql.expressions.Window.partitionBy(lit(1))
-        finalize(
-          b.withColumn("tot_ref", sum(col("ref_cnt")).over(wAll))
-            .withColumn("tot_cur", sum(col("cur_cnt")).over(wAll)))
-          .coalesce(1).write.mode("overwrite").parquet(resultOut)
-        ()
-      }
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    BoundedStream.start(binned, s"$scratch/ckpt", OutputMode.Complete()) { (b, _) =>
+      val wAll = org.apache.spark.sql.expressions.Window.partitionBy(lit(1))
+      finalize(
+        b.withColumn("tot_ref", sum(col("ref_cnt")).over(wAll))
+          .withColumn("tot_cur", sum(col("cur_cnt")).over(wAll)))
+        .coalesce(1).write.mode("overwrite").parquet(resultOut)
+    }.awaitTermination()
   }
 
   /** Gap-based session windows (`session_window`, 30-minute gap) per user
@@ -739,19 +653,12 @@ object StreamingQueries {
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
           .cast("double").as("sum_value"))
-    val q = agg.writeStream
-      .outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        b.select(col("session_window.start").cast("timestamp_ntz").as("session_start"),
-            col("session_window.end").cast("timestamp_ntz").as("session_end"),
-            col("user_id"), col("n_events"), col("sum_value"))
-          .write.mode("append").parquet(out)
-        ()
-      }
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    BoundedStream.start(agg, s"$scratch/ckpt") { (b, _) =>
+      b.select(col("session_window.start").cast("timestamp_ntz").as("session_start"),
+          col("session_window.end").cast("timestamp_ntz").as("session_end"),
+          col("user_id"), col("n_events"), col("sum_value"))
+        .write.mode("append").parquet(out)
+    }.awaitTermination()
     s.read.parquet(out)
       .filter(col("user_id") =!= -1L)
       .select("user_id", "session_start", "session_end", "n_events", "sum_value")
@@ -779,17 +686,10 @@ object StreamingQueries {
       .agg(array_join(transform(
         array_sort(collect_list(struct(col("ts"), col("event_id"),
           col("event_type")))), x => x.getField("event_type")), ">").as("path"))
-    val q = agg.writeStream
-      .outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        b.select(col("user_id"), col("path"))
-          .write.mode("append").parquet(out)
-        ()
-      }
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    BoundedStream.start(agg, s"$scratch/ckpt") { (b, _) =>
+      b.select(col("user_id"), col("path"))
+        .write.mode("append").parquet(out)
+    }.awaitTermination()
     CurationQueries.funnelMatches(
         s.read.parquet(out).filter(col("user_id") =!= -1L))
       .coalesce(1).write.mode("overwrite").parquet(resultOut)
@@ -814,17 +714,11 @@ object StreamingQueries {
       val updates = ds.groupByKey(_._1)
         .transformWithState(new graft.streaming.StatefulAgg.RunningAgg,
           org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-      val q = updates.writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.StatefulAgg.UserAgg], batchId: Long) =>
-          b.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(out)
-          ()
-        }
-        .option("checkpointLocation", s"$scratch/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+          OutputMode.Update())
+      BoundedStream.start(updates, s"$scratch/ckpt") { (b, batchId) =>
+        b.withColumn("batch_id", lit(batchId))
+          .write.mode("append").parquet(out)
+      }.awaitTermination()
     }
     s.read.parquet(out)
       .groupBy("user_id")
@@ -859,16 +753,10 @@ object StreamingQueries {
       val closes = ds.groupByKey(_._1)
         .transformWithState(new graft.streaming.StatefulAgg.DayCloser,
           org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          org.apache.spark.sql.streaming.OutputMode.Append())
-      val q = closes.writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.StatefulAgg.DayClose], _: Long) =>
-          b.write.mode("append").parquet(out)
-          ()
-        }
-        .option("checkpointLocation", s"$scratch/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+          OutputMode.Append())
+      BoundedStream.start(closes, s"$scratch/ckpt") { (b, _) =>
+        b.write.mode("append").parquet(out)
+      }.awaitTermination()
     }
     s.read.parquet(out)
       .filter(col("user_id") =!= -1L)
@@ -916,16 +804,10 @@ object StreamingQueries {
       val closes = ds.groupByKey(_._1)
         .transformWithState(new graft.streaming.StatefulAgg.DayCloser,
           org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          org.apache.spark.sql.streaming.OutputMode.Append())
-      val q = closes.writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.StatefulAgg.DayClose], bid: Long) =>
-          b.withColumn("batch_id", lit(bid)).write.mode("append").parquet(out)
-          ()
-        }
-        .option("checkpointLocation", s"$scratch/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+          OutputMode.Append())
+      BoundedStream.start(closes, s"$scratch/ckpt") { (b, bid) =>
+        b.withColumn("batch_id", lit(bid)).write.mode("append").parquet(out)
+      }.awaitTermination()
     }
     // batch replay of both ledgers from the staged slices
     val sliced = (0 until 4).map { i =>
@@ -988,17 +870,11 @@ object StreamingQueries {
       val updates = ds.groupByKey(_._1)
         .transformWithState(new graft.streaming.StatefulAgg.DistinctUsers,
           org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-      val q = updates.writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.StatefulAgg.TypeDistinct], batchId: Long) =>
-          b.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(out)
-          ()
-        }
-        .option("checkpointLocation", s"$scratch/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+          OutputMode.Update())
+      BoundedStream.start(updates, s"$scratch/ckpt") { (b, batchId) =>
+        b.withColumn("batch_id", lit(batchId))
+          .write.mode("append").parquet(out)
+      }.awaitTermination()
     }
     s.read.parquet(out)
       .groupBy("event_type")
@@ -1021,17 +897,11 @@ object StreamingQueries {
       val updates = ds.groupByKey(_._1)
         .transformWithState(new graft.streaming.StatefulAgg.LastNEvents,
           org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-      val q = updates.writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.StatefulAgg.LastN], batchId: Long) =>
-          b.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(out)
-          ()
-        }
-        .option("checkpointLocation", s"$scratch/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+          OutputMode.Update())
+      BoundedStream.start(updates, s"$scratch/ckpt") { (b, batchId) =>
+        b.withColumn("batch_id", lit(batchId))
+          .write.mode("append").parquet(out)
+      }.awaitTermination()
     }
     s.read.parquet(out)
       .groupBy("user_id")
@@ -1051,19 +921,12 @@ object StreamingQueries {
   private def runHllMaintain(s: SparkSession, sfDir: String, scratch: String, resultOut: String): Unit = {
     val glob = stageEventSlices(s, sfDir, s"$scratch/evlake")
     val out = s"$scratch/emissions"
-    val q = eventStream(s, glob)
-      .writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        b.groupBy("event_type")
-          .agg(hll_sketch_agg(col("user_id"), 14).as("sk"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(out)
-        ()
-      }
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    BoundedStream.start(eventStream(s, glob), s"$scratch/ckpt") { (b, batchId) =>
+      b.groupBy("event_type")
+        .agg(hll_sketch_agg(col("user_id"), 14).as("sk"))
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(out)
+    }.awaitTermination()
     val merged = s.read.parquet(out)
       .groupBy("event_type")
       .agg(hll_sketch_estimate(
@@ -1099,16 +962,10 @@ object StreamingQueries {
       val deltas = ds.groupByKey(_._1)
         .transformWithState(new graft.streaming.StatefulAgg.ChangelogAgg,
           org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Append())
-      val q = deltas.writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.StatefulAgg.GroupDelta], _: Long) =>
-          b.write.mode("append").parquet(out)
-          ()
-        }
-        .option("checkpointLocation", s"$scratch/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+          OutputMode.Append())
+      BoundedStream.start(deltas, s"$scratch/ckpt") { (b, _) =>
+        b.write.mode("append").parquet(out)
+      }.awaitTermination()
     }
     s.read.parquet(out)
       .groupBy("grp")
@@ -1140,14 +997,9 @@ object StreamingQueries {
         col("c_ts") >= col("v_ts") &&
         col("c_ts") <= col("v_ts") + expr("interval 30 minutes"))
       .select(col("v_user").as("user_id"), col("view_id"), col("click_id"))
-    val q = joined.writeStream
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        b.write.mode("append").parquet(out); ()
-      }
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    BoundedStream.start(joined, s"$scratch/ckpt") { (b, _) =>
+      b.write.mode("append").parquet(out)
+    }.awaitTermination()
     s.read.parquet(out).coalesce(1).write.mode("overwrite").parquet(resultOut)
   }
 
@@ -1198,14 +1050,9 @@ object StreamingQueries {
           col("c_ts") <= col("v_ts") + expr("interval 30 minutes"),
         "left_outer")
       .select(col("v_user").as("user_id"), col("view_id"), col("click_id"))
-    val q = joined.writeStream
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        b.write.mode("append").parquet(out); ()
-      }
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    BoundedStream.start(joined, s"$scratch/ckpt") { (b, _) =>
+      b.write.mode("append").parquet(out)
+    }.awaitTermination()
     s.read.parquet(out).filter(col("user_id") >= 0)
       .coalesce(1).write.mode("overwrite").parquet(resultOut)
   }
@@ -1259,16 +1106,10 @@ object StreamingQueries {
       val flags = banded.groupByKey(_._2)
         .transformWithState(new graft.streaming.StatefulAgg.BandOwner,
           org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Append())
-      val q = flags.writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.StatefulAgg.BandFlag], _: Long) =>
-          b.write.mode("append").parquet(out)
-          ()
-        }
-        .option("checkpointLocation", s"$scratch/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+          OutputMode.Append())
+      BoundedStream.start(flags, s"$scratch/ckpt") { (b, _) =>
+        b.write.mode("append").parquet(out)
+      }.awaitTermination()
     }
     s.read.parquet(out)
       .groupBy("doc_id")
@@ -1289,49 +1130,23 @@ object StreamingQueries {
     * over the unioned lake.
     */
   private def runScd2SchemaDrift(s: SparkSession, sfDir: String, scratch: String, resultOut: String): Unit = {
-    import s.implicits._
-    GraftSession.withConf(s, GraftSession.RocksDbStateStore) {
-      val dir = EnvelopeQueries.buildDriftLake(s)
-      val out = s"$scratch/emissions"
-      val envelopes = Scd2Streaming.readEnvelopeStream(
-        s, dir + "/gen*/part-*", EnvelopeQueries.productsRowV2, maxFilesPerTrigger = 1)
-      val events = envelopes
-        .filter(col("payload.op").isNotNull)
-        .select(
-          coalesce(col("payload.after.id"), col("payload.before.id"))
-            .cast("int").as("id"),
-          col("payload.source.lsn").cast("long").as("lsn"),
-          col("payload.ts_ms").cast("long").as("tsMs"),
-          map(
-            lit("name"), col("payload.after.name"),
-            lit("category"), col("payload.after.category")).as("attrs"),
-          col("payload.op").as("op"))
-        .filter(col("id").isNotNull)
-        .as[Scd2Streaming.KeyEvent]
-      val q = Scd2Streaming.incremental(events)
-        .writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Scd2Streaming.VersionRow], batchId: Long) =>
-          b.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(out)
-          ()
-        }
-        .option("checkpointLocation", s"$scratch/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // last emission per (id, lsn) wins; the drifted attr must surface
-      // NULL for every gen1 version and the generated value for gen2
-      s.read.parquet(out)
-        .groupBy(col("id"), col("lsn").as("log_seq_num"))
-        .agg(max_by(
-          struct(col("rowValidStartMs"), col("rowValidExpirationMs"), col("attrs")),
-          col("batch_id")).as("v"))
-        .select(col("id"), col("log_seq_num"),
-          element_at(col("v.attrs"), "category").as("category"),
-          col("v.rowValidStartMs").as("valid_from_ms"),
-          col("v.rowValidExpirationMs").as("valid_to_ms"))
-        .coalesce(1).write.mode("overwrite").parquet(resultOut)
-    }
+    val dir = EnvelopeQueries.buildDriftLake(s)
+    val out = s"$scratch/emissions"
+    runIncrementalScd2(s, scratch, out, Scd2Streaming.readEnvelopeStream(
+      s, dir + "/gen*/part-*", EnvelopeQueries.productsRowV2, maxFilesPerTrigger = 1),
+      Seq("name", "category"))
+    // last emission per (id, lsn) wins; the drifted attr must surface
+    // NULL for every gen1 version and the generated value for gen2
+    s.read.parquet(out)
+      .groupBy(col("id"), col("lsn").as("log_seq_num"))
+      .agg(max_by(
+        struct(col("rowValidStartMs"), col("rowValidExpirationMs"), col("attrs")),
+        col("batch_id")).as("v"))
+      .select(col("id"), col("log_seq_num"),
+        element_at(col("v.attrs"), "category").as("category"),
+        col("v.rowValidStartMs").as("valid_from_ms"),
+        col("v.rowValidExpirationMs").as("valid_to_ms"))
+      .coalesce(1).write.mode("overwrite").parquet(resultOut)
   }
 
   /** The dedup horizon of the TTL'd at-ingest leg, in doc_ids (= arrival
@@ -1374,16 +1189,10 @@ object StreamingQueries {
         .transformWithState(
           new graft.streaming.StatefulAgg.BandOwnerTtl(LshTtlHorizonDocs),
           org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          org.apache.spark.sql.streaming.OutputMode.Append())
-      val q = flags.writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.StatefulAgg.BandFlag], _: Long) =>
-          b.write.mode("append").parquet(out)
-          ()
-        }
-        .option("checkpointLocation", s"$scratch/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+          OutputMode.Append())
+      BoundedStream.start(flags, s"$scratch/ckpt") { (b, _) =>
+        b.write.mode("append").parquet(out)
+      }.awaitTermination()
     }
     s.read.parquet(out)
       .groupBy("doc_id")

@@ -26,7 +26,9 @@ import org.apache.spark.sql.types.StructType
   *     (id, lsn) dedupe.
   *
   * All modes consume the same parsed change-event schema produced by
-  * [[graft.cdc.Scd2.cdcEvents]].
+  * [[graft.cdc.Scd2.cdcEvents]]; mode 3 takes it typed, through the one
+  * envelope → event projection [[keyEvents]]. Every stream here is run by
+  * [[BoundedStream.start]].
   */
 object Scd2Streaming {
 
@@ -230,6 +232,25 @@ object Scd2Streaming {
     * same contract as a watermark).
     */
   val DefaultRetentionMs: Long = 7L * 24 * 3600 * 1000
+
+  /** The envelope → [[KeyEvent]] projection, built on
+    * [[graft.cdc.Scd2.cdcEvents]] so the streaming and batch paths share
+    * one parse: keyless events are dropped (transform_scd2.py:50), `tsMs`
+    * is the source timestamp in epoch millis, and `attrs` maps each of
+    * `attrFields` to its `after` image value as a string (null for a
+    * delete, as in the batch history). `op` is the operation label, which
+    * [[mergeKeyEvents]] never reads.
+    */
+  def keyEvents(envelopes: DataFrame, attrFields: Seq[String]): Dataset[KeyEvent] = {
+    import envelopes.sparkSession.implicits._
+    Scd2.cdcEvents(envelopes).filter(col("id").isNotNull)
+      .select(col("id"), col("log_seq_num").as("lsn"),
+        unix_millis(col("source_timestamp")).as("tsMs"),
+        map(attrFields.flatMap(a => Seq(lit(a), col(s"after_row_value.$a").cast("string"))): _*)
+          .as("attrs"),
+        col("operation_type").as("op"))
+      .as[KeyEvent]
+  }
 
   /** Pure per-key merge step behind [[Scd2Processor]]: merge new events
     * into the prior per-key log (dedupe on lsn, within-batch AND against

@@ -29,8 +29,6 @@ class LocalFsSpec extends SparkSuite {
     try out.write(text.getBytes(UTF_8)) finally out.close()
   }
 
-  // with a buffer size: FileContext.open(path) goes through FilterFs
-  // straight to the raw filesystem and never verifies a checksum
   private def read(p: java.nio.file.Path): String = {
     val in = fc.open(hpath(p), 4096)
     try new String(in.readAllBytes(), UTF_8) finally in.close()
@@ -79,6 +77,11 @@ class LocalFsSpec extends SparkSuite {
     // read through FileContext: LocalFileSystem's checksum failure handler
     // would move the corrupt file into a bad_files directory at the mount root
     intercept[ChecksumException](read(viaFc))
+    // the no-buffer-size open streaming checkpoint reads use verifies too
+    intercept[ChecksumException] {
+      val in = fc.open(hpath(viaFc))
+      try in.readAllBytes() finally in.close()
+    }
   }
 
   test("FileContext rename with OVERWRITE replaces an existing file") {

@@ -1,15 +1,22 @@
 package graft.cdc
 
-import graft.SparkSuite
+import graft.{GraftSession, SparkSuite}
+import graft.streaming.Scd2Streaming
 
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 /** Property tests (SURVEY.md §5.2.3): ∀ random event sequences —
   * (a) per-key validity intervals chain start→sentinel without gaps;
   * (b) the result is invariant under input shuffling;
-  * (c) current state == max-lsn event per key.
+  * (c) current state == max-lsn event per key;
+  * (d) the streaming path (envelopes → [[Scd2Streaming.keyEvents]] →
+  *     [[Scd2Streaming.incremental]]) converges to the batch
+  *     [[Scd2.transform]] however the envelopes are cut into micro-batches
+  *     and redelivered.
   * (Raw ScalaCheck generators with fixed seeds — the scalatest bridge
   * module isn't on the offline classpath.)
   */
@@ -73,5 +80,91 @@ class Scd2PropertySpec extends SparkSuite {
         assert(currents == expectedCur, s"seed=$seed: current-state mismatch")
       }
     }
+  }
+
+  /** A random change log of one table as envelope lines: creates, updates,
+    * snapshot reads and deletes (before image only) with unique (id, lsn),
+    * plus op-less malformed lines both paths must drop. Timestamps stay
+    * inside one day, so the stream's 7-day retention never compacts a key
+    * and the converged chain is exact (past the horizon it is documented
+    * to lose correction fidelity).
+    */
+  private def envelopeGen(image: (Int, Int) => String): Gen[List[String]] = for {
+    n <- Gen.choose(1, 30)
+    evs <- Gen.listOfN(n, for {
+      id <- Gen.choose(1, 5)
+      lsn <- Gen.choose(1L, 10000L)
+      ts <- Gen.choose(1733000000000L, 1733000000000L + 86400000L)
+      v <- Gen.choose(0, 999)
+      op <- Gen.oneOf("c", "u", "u", "u", "r", "d", null)
+    } yield (id, lsn, ts, v, op))
+  } yield evs.distinctBy(e => (e._1, e._2)).map { case (id, lsn, ts, v, op) =>
+    if (op == "d") CdcFixtures.envelope(image(id, v), "null", op, ts, lsn)
+    else CdcFixtures.envelope("null", image(id, v), op, ts, lsn)
+  }
+
+  /** Cut `lines` into 1–4 micro-batches of a random permutation; every
+    * batch after the first also redelivers about a fifth of the lines of
+    * the batches before it.
+    */
+  private def microBatches(lines: List[String], rnd: scala.util.Random): Seq[Seq[String]] = {
+    val shuffled = rnd.shuffle(lines)
+    val cuts = Seq.fill(rnd.nextInt(4))(rnd.nextInt(shuffled.size + 1)).sorted
+    val chunks = (0 +: cuts).zip(cuts :+ shuffled.size).map { case (a, b) => shuffled.slice(a, b) }
+    chunks.indices.map { i =>
+      chunks(i) ++ chunks.take(i).flatten.filter(_ => rnd.nextInt(5) == 0)
+    }
+  }
+
+  private def streamVsBatch(rowSchema: StructType, attrs: Seq[String],
+                            image: (Int, Int) => String): Unit = {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    for (seed <- 1 to 3) {
+      val lines = envelopeGen(image)(Gen.Parameters.default, Seed(seed.toLong)).getOrElse(Nil)
+      val batches = microBatches(lines, new scala.util.Random(seed))
+
+      val emitted = scala.collection.mutable.ArrayBuffer[(Long, Scd2Streaming.VersionRow)]()
+      GraftSession.withConf(spark, GraftSession.RocksDbStateStore) {
+        val input = MemoryStream[String]
+        val versions = Scd2Streaming.incremental(Scd2Streaming.keyEvents(
+          Scd2Streaming.parseKafkaValue(input.toDF(), rowSchema), attrs))
+        val q = versions.writeStream
+          .option("checkpointLocation", SparkSuite.scratchDir("scd2-prop-ckpt"))
+          .foreachBatch { (b: org.apache.spark.sql.Dataset[Scd2Streaming.VersionRow], id: Long) =>
+            val rows = b.collect()
+            emitted.synchronized(emitted ++= rows.map(id -> _))
+            ()
+          }.start()
+        try batches.foreach { chunk => input.addData(chunk); q.processAllAvailable() }
+        finally q.stop()
+      }
+      // last emission per (id, lsn): later batches re-emit corrected intervals
+      val converged = emitted.groupBy { case (_, r) => (r.id, r.lsn) }.values
+        .map(_.maxBy(_._1)._2)
+        .map(r => (r.id, attrs.map(r.attrs(_)).toList, r.rowValidStartMs, r.rowValidExpirationMs))
+        .toSeq.sortBy(_.toString)
+
+      val batch = Scd2.transform(Scd2Streaming.parseKafkaValue(lines.toDF("value"), rowSchema), attrs)
+        .select(col("id") +: attrs.map(a => col(a).cast("string")) :+
+          col("row_valid_start_timestamp") :+ col("row_valid_expiration_timestamp"): _*)
+        .collect().toSeq
+        .map(r => (r.getInt(0), attrs.indices.map(i => r.getString(i + 1)).toList,
+          r.getTimestamp(attrs.size + 1).getTime, r.getTimestamp(attrs.size + 2).getTime))
+        .sortBy(_.toString)
+
+      assert(converged == batch,
+        s"seed=$seed batches=${batches.map(_.size)}: stream did not converge to the batch rebuild")
+    }
+  }
+
+  test("keyEvents → incremental converges to the batch rebuild: products, any micro-batching") {
+    streamVsBatch(CdcSchemas.productsRow, Seq("name", "description", "price"),
+      (id, v) => CdcFixtures.productRow(Some(id), s"n$v", s"d$v", v * 1.5))
+  }
+
+  test("keyEvents → incremental converges to the batch rebuild: users, any micro-batching") {
+    streamVsBatch(CdcSchemas.usersRow, Seq("username", "password"),
+      (id, v) => CdcFixtures.userRow(Some(id), s"u$v", s"p$v"))
   }
 }
