@@ -138,5 +138,10 @@ object GraftSession {
       // /tmp, not the process cwd (the in-memory catalog means metadata is
       // per-session; data dirs persist and are overwritten on re-create)
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
+      // RocksDB state commits write a changelog of the trigger's puts and
+      // deletes and snapshot only every few commits, instead of flushing,
+      // checkpointing and copying SST files on every commit of every
+      // state partition. Inert for the HDFS-backed store and batch jobs.
+      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
       .config(LocalFsConf)
 }

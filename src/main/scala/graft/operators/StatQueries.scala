@@ -1738,7 +1738,7 @@ object StatQueries {
         val tot = base.groupBy("event_type")
           .agg(count(lit(1)).as("na"), sum(col("cents")).as("sa"))
         val grand = tot.agg(sum(col("na")).as("nn"), sum(col("sa")).as("ss"))
-        val types = broadcast(tot.join(grand))
+        val types = tot.join(grand)
         def meanDiff(saC: org.apache.spark.sql.Column, naC: org.apache.spark.sql.Column) =
           abs(saC.cast("double") / naC.cast("double") -
             (col("ss") - saC).cast("double") / (col("nn") - naC).cast("double"))
@@ -1801,7 +1801,7 @@ object StatQueries {
         val stats = repsByType.join(broadcast(grand))
           .select(col("tt").as("event_type"),
             meanDiff(col("sa_r"), col("na_r")).as("stat"))
-        val ks = stats.join(obs, Seq("event_type"))
+        val ks = stats.join(broadcast(obs), Seq("event_type"))
           .groupBy("event_type")
           .agg(max(col("na")).as("n_type"), max(col("obs_diff")).as("obs_diff"),
             (sum(when(col("stat") >= col("obs_diff"), 1L).otherwise(0L)) + 1L)

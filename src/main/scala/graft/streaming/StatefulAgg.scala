@@ -1,15 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.streaming.{ListState, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** The Spark 4 arbitrary-state v2 surface (`transformWithState` +
   * typed `ValueState`, RocksDB-backed): a running per-key aggregate
   * maintained across micro-batches. This is the successor API to
-  * `mapGroupsWithState`/`flatMapGroupsWithState` (which
-  * [[Scd2Streaming.incremental]] exercises) — state is declared through a
-  * handle with explicit encoders and optional TTL, timers are first-class,
-  * and the store layout supports multiple named states per key.
+  * `mapGroupsWithState`/`flatMapGroupsWithState` — state is declared
+  * through a handle with explicit encoders and optional TTL, timers are
+  * first-class, and the store layout supports multiple named states per
+  * key.
   *
   * The aggregate kept here is (event count, exact integer-cents sum):
   * integer state makes the converged result bit-comparable to a batch
@@ -20,6 +20,13 @@ import org.apache.spark.sql.streaming.{ListState, MapState, OutputMode, Stateful
   */
 object StatefulAgg {
 
+  // State encoders, derived once per JVM: `Encoders.product` is Scala
+  // runtime reflection, and each processor's `init` runs in every state
+  // task of every trigger.
+  private val LongPair: Encoder[(Long, Long)] = Encoders.product[(Long, Long)]
+  private val IdAndLabel: Encoder[(Long, String)] = Encoders.product[(Long, String)]
+  private val LsnGroupCents: Encoder[(Long, String, Long)] = Encoders.product[(Long, String, Long)]
+
   /** (user_id, n_events, sum of value in exact hundredths). */
   case class UserAgg(user_id: Long, n_events: Long, sum_cents: Long)
 
@@ -28,7 +35,7 @@ object StatefulAgg {
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       st = getHandle.getValueState[(Long, Long)](
-        "agg", Encoders.product[(Long, Long)], TTLConfig.NONE)
+        "agg", LongPair, TTLConfig.NONE)
 
     override def handleInputRows(key: Long, rows: Iterator[(Long, Long)],
                                  timerValues: TimerValues): Iterator[UserAgg] = {
@@ -93,7 +100,7 @@ object StatefulAgg {
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       st = getHandle.getListState[(Long, String)](
-        "topn", Encoders.product[(Long, String)], TTLConfig.NONE)
+        "topn", IdAndLabel, TTLConfig.NONE)
 
     override def handleInputRows(key: Long, rows: Iterator[(Long, Long, String)],
                                  timerValues: TimerValues): Iterator[LastN] = {
@@ -127,7 +134,7 @@ object StatefulAgg {
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       st = getHandle.getValueState[(Long, String, Long)](
-        "cur", Encoders.product[(Long, String, Long)], TTLConfig.NONE)
+        "cur", LsnGroupCents, TTLConfig.NONE)
 
     override def handleInputRows(key: Long, rows: Iterator[(Long, Long, String, Long)],
                                  timerValues: TimerValues): Iterator[GroupDelta] = {
@@ -221,7 +228,7 @@ object StatefulAgg {
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       st = getHandle.getValueState[(Long, Long)](
-        "run", Encoders.product[(Long, Long)], TTLConfig.NONE)
+        "run", LongPair, TTLConfig.NONE)
 
     override def handleInputRows(key: String, rows: Iterator[(Long, String)],
                                  timerValues: TimerValues): Iterator[BandFlag] = {
@@ -284,7 +291,7 @@ object StatefulAgg {
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       days = getHandle.getMapState[Long, (Long, Long)](
-        "days", Encoders.scalaLong, Encoders.product[(Long, Long)], TTLConfig.NONE)
+        "days", Encoders.scalaLong, LongPair, TTLConfig.NONE)
 
     override def handleInputRows(key: Long, rows: Iterator[(Long, Long, Long)],
                                  timerValues: TimerValues): Iterator[DayClose] = {

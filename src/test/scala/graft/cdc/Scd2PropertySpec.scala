@@ -4,6 +4,7 @@ import graft.{GraftSession, SparkSuite}
 import graft.streaming.Scd2Streaming
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.scalacheck.Gen
@@ -139,21 +140,9 @@ class Scd2PropertySpec extends SparkSuite {
         try batches.foreach { chunk => input.addData(chunk); q.processAllAvailable() }
         finally q.stop()
       }
-      // last emission per (id, lsn): later batches re-emit corrected intervals
-      val converged = emitted.groupBy { case (_, r) => (r.id, r.lsn) }.values
-        .map(_.maxBy(_._1)._2)
-        .map(r => (r.id, attrs.map(r.attrs(_)).toList, r.rowValidStartMs, r.rowValidExpirationMs))
-        .toSeq.sortBy(_.toString)
-
-      val batch = Scd2.transform(Scd2Streaming.parseKafkaValue(lines.toDF("value"), rowSchema), attrs)
-        .select(col("id") +: attrs.map(a => col(a).cast("string")) :+
-          col("row_valid_start_timestamp") :+ col("row_valid_expiration_timestamp"): _*)
-        .collect().toSeq
-        .map(r => (r.getInt(0), attrs.indices.map(i => r.getString(i + 1)).toList,
-          r.getTimestamp(attrs.size + 1).getTime, r.getTimestamp(attrs.size + 2).getTime))
-        .sortBy(_.toString)
-
-      assert(converged == batch,
+      val batch = Scd2PropertySpec.rebuilt(
+        Scd2Streaming.parseKafkaValue(lines.toDF("value"), rowSchema), attrs)
+      assert(Scd2PropertySpec.converged(emitted.toSeq, attrs) == batch,
         s"seed=$seed batches=${batches.map(_.size)}: stream did not converge to the batch rebuild")
     }
   }
@@ -167,4 +156,28 @@ class Scd2PropertySpec extends SparkSuite {
     streamVsBatch(CdcSchemas.usersRow, Seq("username", "password"),
       (id, v) => CdcFixtures.userRow(Some(id), s"u$v", s"p$v"))
   }
+}
+
+object Scd2PropertySpec {
+  type Version = (Int, List[String], Long, Long) // id, attrs, start ms, end ms
+
+  /** The stream's converged history from its (batch id, row) emissions:
+    * the last emission per (id, lsn), since later batches re-emit
+    * corrected intervals.
+    */
+  def converged(emitted: Seq[(Long, Scd2Streaming.VersionRow)], attrs: Seq[String]): Seq[Version] =
+    emitted.groupBy { case (_, r) => (r.id, r.lsn) }.values
+      .map(_.maxBy(_._1)._2)
+      .map(r => (r.id, attrs.map(r.attrs(_)).toList, r.rowValidStartMs, r.rowValidExpirationMs))
+      .toSeq.sortBy(_.toString)
+
+  /** The batch [[Scd2.transform]] of `envelopes`, in the same form. */
+  def rebuilt(envelopes: DataFrame, attrs: Seq[String]): Seq[Version] =
+    Scd2.transform(envelopes, attrs)
+      .select(col("id") +: attrs.map(a => col(a).cast("string")) :+
+        col("row_valid_start_timestamp") :+ col("row_valid_expiration_timestamp"): _*)
+      .collect().toSeq
+      .map(r => (r.getInt(0), attrs.indices.map(i => r.getString(i + 1)).toList,
+        r.getTimestamp(attrs.size + 1).getTime, r.getTimestamp(attrs.size + 2).getTime))
+      .sortBy(_.toString)
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.{GraftSession, SparkSuite}
-import graft.cdc.{CdcSchemas, EnvelopeReader, Scd2}
+import graft.cdc.{CdcSchemas, EnvelopeReader, Scd2, Scd2PropertySpec}
 import graft.cdc.CdcFixtures._
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -22,7 +22,11 @@ class Scd2StreamingSpec extends SparkSuite {
     envelope(productRow(Some(1), "w", "v1", 1.0), productRow(Some(1), "w", "v2", 1.5), "u", t0 + 1000, 200),
     envelope(productRow(Some(2), "g", "v1", 2.0), "null", "d", t0 + 2000, 300))
 
-  /** transformWithState needs column families — RocksDB-only. */
+  /** transformWithState needs column families — RocksDB-only. Streams
+    * under it name a checkpoint that outlives the query: with changelog
+    * checkpointing, store maintenance uploads snapshots after the commit,
+    * and a temporary checkpoint is deleted at stop, under its feet.
+    */
   private def withRocksDb[A](body: => A): A =
     GraftSession.withConf(spark, GraftSession.RocksDbStateStore)(body)
 
@@ -123,6 +127,7 @@ class Scd2StreamingSpec extends SparkSuite {
     val input = MemoryStream[Scd2Streaming.KeyEvent]
     val out = Scd2Streaming.incremental(input.toDS())
     val q = out.writeStream.format("memory").queryName("inc_out")
+      .option("checkpointLocation", SparkSuite.scratchDir("graft-ckpt"))
       .outputMode("append").start()
 
     // arrive out of order: lsn 300 before 200; then late lsn 150
@@ -159,6 +164,7 @@ class Scd2StreamingSpec extends SparkSuite {
     val input = MemoryStream[Scd2Streaming.KeyEvent]
     val out = Scd2Streaming.incremental(input.toDS())
     val q = out.writeStream.format("memory").queryName("dup_batch_out")
+      .option("checkpointLocation", SparkSuite.scratchDir("graft-ckpt"))
       .outputMode("append").start()
 
     input.addData(
@@ -196,6 +202,7 @@ class Scd2StreamingSpec extends SparkSuite {
     val input = MemoryStream[Scd2Streaming.KeyEvent]
     val out = Scd2Streaming.incremental(input.toDS(), retentionMs = 1000L)
     val q = out.writeStream.format("memory").queryName("ret_out")
+      .option("checkpointLocation", SparkSuite.scratchDir("graft-ckpt"))
       .outputMode("append").start()
 
     // three old events, then one far in the future: the old ones fall out
@@ -249,6 +256,7 @@ class Scd2StreamingSpec extends SparkSuite {
       val input = MemoryStream[Scd2Streaming.KeyEvent]
       val out = Scd2Streaming.incremental(input.toDS(), retentionMs = 1000L)
       val q = out.writeStream.format("memory").queryName("rocks_out")
+        .option("checkpointLocation", SparkSuite.scratchDir("graft-ckpt"))
         .outputMode("append").start()
 
       // hot key 1: 200 events spaced 40 ms apart in 10 micro-batches — each
@@ -321,6 +329,7 @@ class Scd2StreamingSpec extends SparkSuite {
       val input = MemoryStream[Scd2Streaming.KeyEvent]
       val out = Scd2Streaming.incremental(input.toDS(), retentionMs = 1000L)
       val q = out.writeStream.format("memory").queryName("tws_out")
+        .option("checkpointLocation", SparkSuite.scratchDir("graft-ckpt"))
         .outputMode("append").start()
 
       val hot = (0 until 100).map(i =>
@@ -349,6 +358,112 @@ class Scd2StreamingSpec extends SparkSuite {
         case _ => true
       }, "validity chain must stay contiguous under the v2 state path")
     }
+  }
+
+  /** 16 envelope slices over keys 1–8: creates in slice 0, updates after
+    * it, and in every fifth slice one key's delete (before image only).
+    * From slice 2 on each slice also carries one event two slices late,
+    * and from slice 1 on it redelivers a line of the slice before.
+    */
+  private val recoverySlices: Seq[Seq[String]] = {
+    def ev(i: Int, k: Int, lsn: Long, op: String) = {
+      val img = productRow(Some(k), s"n$i-$k", s"d$i", k + i * 0.5)
+      if (op == "d") envelope(img, "null", op, t0 + lsn * 10, lsn)
+      else envelope("null", img, op, t0 + lsn * 10, lsn)
+    }
+    val fresh = (0 until 16).map { i =>
+      (1 to 8).filter(k => i == 0 || (k + i) % 3 != 0).map { k =>
+        val op = if (i == 0) "c" else if (i % 5 == 4 && k == i % 8 + 1) "d" else "u"
+        ev(i, k, 1000L * i + 10 * k, op)
+      }
+    }
+    fresh.indices.map { i =>
+      val late = if (i >= 2) Seq(ev(i - 2, i % 8 + 1, 1000L * (i - 2) + 10 * (i % 8 + 1) + 5, "u"))
+        else Nil
+      fresh(i) ++ late ++ fresh.lift(i - 1).toSeq.flatMap(_.take(1))
+    }
+  }
+
+  test("exactly-once across changelog checkpoints: restarts before and after " +
+      "a periodic snapshot converge to the batch rebuild") {
+    // the session default: RocksDB commits write a changelog file; besides
+    // version 1, a snapshot is due every minDeltasForSnapshot (10)
+    // versions, and a restart loads the latest uploaded snapshot and
+    // replays the changelog files after it
+    assert(spark.conf.get(
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled") == "true")
+    val root = SparkSuite.scratchDir("scd2-changelog")
+    val (lake, ckpt) = (s"$root/lake", s"$root/ckpt")
+    new java.io.File(lake).mkdirs()
+    val attrs = Seq("name", "description", "price")
+    // one file per slice and trigger, mtime-ordered; staged before each
+    // start, so every AvailableNow run has a fixed end offset
+    def stage(from: Int, until: Int): Unit = (from until until).foreach { i =>
+      val f = java.nio.file.Paths.get(lake, f"slice-$i%02d.json")
+      java.nio.file.Files.write(f, recoverySlices(i).mkString("", "\n", "\n").getBytes("UTF-8"))
+      f.toFile.setLastModified(1700000000000L + i * 1000L)
+    }
+    val emitted = scala.collection.mutable.ArrayBuffer[(Long, Scd2Streaming.VersionRow)]()
+    def start() = BoundedStream.start(Scd2Streaming.incremental(Scd2Streaming.keyEvents(
+        Scd2Streaming.readEnvelopeStream(spark, lake, CdcSchemas.productsRow, maxFilesPerTrigger = 1),
+        attrs)), ckpt) { (b, id) =>
+      val rows = b.collect()
+      emitted.synchronized(emitted ++= rows.map(id -> _))
+      ()
+    }
+    // (state partition, version) of each checkpoint file with `suffix`
+    def stateFiles(suffix: String): Seq[(String, Long)] =
+      new java.io.File(s"$ckpt/state/0").listFiles().toSeq
+        .filter(d => d.isDirectory && d.getName.forall(_.isDigit))
+        .flatMap(d => d.list().toSeq.filter(_.endsWith(suffix))
+          .map(n => d.getName -> n.takeWhile(_.isDigit).toLong))
+
+    withRocksDb {
+      // 1: stop once two batches have committed, before any periodic snapshot
+      stage(0, 4)
+      val q1 = start()
+      while (q1.isActive && (q1.lastProgress == null || q1.lastProgress.batchId < 1))
+        Thread.sleep(20)
+      q1.stop()
+      assert(stateFiles(".changelog").exists(_._2 == 2L))
+      assert(stateFiles(".zip").forall(_._2 == 1L), "no snapshot is due before version 10")
+
+      // 2: resume and run to 13 commits. Snapshots are uploaded by store
+      // maintenance, which by default runs once a minute; unloadOnCommit
+      // runs it as each task commits (and reloads the store from the
+      // checkpoint for every batch), so the periodic snapshot is on disk
+      // before the stop
+      stage(4, 13)
+      GraftSession.withConf(spark, "spark.sql.streaming.stateStore.unloadOnCommit" -> "true") {
+        start().awaitTermination()
+      }
+      val snapshots = stateFiles(".zip").groupMap(_._1)(_._2).view.mapValues(_.max).toMap
+      val changelogs = stateFiles(".changelog").groupMap(_._1)(_._2)
+      assert(snapshots.keySet == changelogs.keySet && snapshots.nonEmpty,
+        s"every state partition must hold a snapshot: $snapshots")
+      snapshots.foreach { case (p, v) =>
+        assert(v >= 10 && v < 13 && (v + 1 to 13).forall(changelogs(p).contains),
+          s"partition $p: snapshot $v, changelog ${changelogs(p).sorted}")
+      }
+
+      // 3: resume from snapshot + changelog and drain the rest
+      stage(13, 16)
+      val q3 = start()
+      q3.awaitTermination()
+      assert(q3.recentProgress.map(_.batchId).toSeq == Seq(13L, 14L, 15L),
+        "the restart must resume after the last committed batch")
+      assert(q3.lastProgress.stateOperators.map(_.numRowsTotal).sum == 8L,
+        "one state row per key")
+    }
+
+    // the rebuild reads each event once: redelivered lines are the stream's
+    // duplicates to drop, not events of the lake
+    val events = recoverySlices.flatten.distinct
+    val batch = Scd2PropertySpec.rebuilt(
+      spark.read.schema(CdcSchemas.envelope(CdcSchemas.productsRow)).json(events.toDS()), attrs)
+    assert(batch.size == events.size)
+    assert(Scd2PropertySpec.converged(emitted.toSeq, attrs) == batch,
+      "the restarted stream did not converge to the batch rebuild")
   }
 
   test("at-least-once delivery is deduped on (id, lsn) within the watermark") {

@@ -122,6 +122,7 @@ class StreamingDedupSpec extends SparkSuite {
             org.apache.spark.sql.streaming.TimeMode.None(),
             org.apache.spark.sql.streaming.OutputMode.Append())
         val q = flags.writeStream.format("memory").queryName(name)
+          .option("checkpointLocation", SparkSuite.scratchDir("graft-ckpt"))
           .outputMode("append").start()
         batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
         q.stop()
@@ -164,6 +165,7 @@ class StreamingDedupSpec extends SparkSuite {
             org.apache.spark.sql.streaming.TimeMode.EventTime(),
             org.apache.spark.sql.streaming.OutputMode.Append())
         val q = flags.writeStream.format("memory").queryName(name)
+          .option("checkpointLocation", SparkSuite.scratchDir("graft-ckpt"))
           .outputMode("append").start()
         batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
         val stateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
