@@ -2,12 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import scala.collection.concurrent.TrieMap
-import scala.collection.mutable.ArrayBuffer
 import scala.util.Try
 
-import org.apache.spark.GraftSparkInternals.drainListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -66,9 +62,8 @@ object Diag {
         case None => scaleAudit(spark, sfDir, num(3, ScaleSmoke.Factor))
       }
       case "time" =>
-        println(time(spark, sfDir, required(2))
-          .map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }
-          .mkString("{\"queries\":{", ",", "}}"))
+        println(Json.write(Json.obj("queries" -> Json.obj(time(spark, sfDir, required(2))
+          .map { case (k, v) => k -> Json.round(v, 3) }: _*))))
       case _ => usage()
     }
   }
@@ -170,55 +165,51 @@ object Diag {
     }
 
   /** Run each query `reps` times and print, from each run: its wall, the
-    * [[StageProfile.Meter]] stage table, the heaviest jobs (eager
-    * checkpoint jobs never appear in the final adaptive plan) and every
-    * exchange's shuffle bytes and rows from the final adaptive plan.
+    * per-stage task table, the heaviest jobs (eager checkpoint jobs never
+    * appear in the final adaptive plan) and every exchange's shuffle bytes
+    * and rows from the final adaptive plan.
     */
-  def profile(spark: SparkSession, sfDir: String, names: Seq[String], reps: Int): Unit = {
-    val sc = spark.sparkContext
-    val stages = new StageProfile.Meter
-    val jobs = new JobMeter
-    sc.addSparkListener(stages)
-    sc.addSparkListener(jobs)
-    try names.foreach { n =>
-      (1 to reps).foreach { r =>
-        drainListenerBus(sc)
-        stages.reset()
-        jobs.reset()
-        val t0 = System.nanoTime()
-        val df = byName(n).spark(spark, sfDir)
-        Materialize.force(df)
-        val wall = (System.nanoTime() - t0) / 1e9
-        drainListenerBus(sc)
-        println(f"== $n rep $r/$reps wall=$wall%.2fs @ $sfDir ==")
-        stages.table().foreach(println)
-        jobs.heaviest(12).foreach(println)
-        exchanges(df.queryExecution.executedPlan).foreach(println)
+  def profile(spark: SparkSession, sfDir: String, names: Seq[String], reps: Int): Unit =
+    RunMeter.using(spark) { meter =>
+      names.foreach { n =>
+        (1 to reps).foreach { r =>
+          val run = meter.query(n)(byName(n).spark(spark, sfDir))
+          println(f"== $n rep $r/$reps wall=${run.seconds}%.2fs @ $sfDir ==")
+          run.error.foreach(e => println(s"  failed: $e"))
+          stageTable(run).foreach(println)
+          run.jobs.sortBy(-_.seconds).take(12).foreach { j =>
+            println(f"  job ${j.id}%3d ${j.seconds}%7.2fs  ${j.description.take(80)}")
+          }
+          run.result.foreach(df => exchanges(df.queryExecution.executedPlan).foreach(println))
+        }
       }
-    } finally {
-      sc.removeSparkListener(stages)
-      sc.removeSparkListener(jobs)
+    }
+
+  private def byTaskTime(run: RunMeter.Run[Any]): Seq[(Int, RunMeter.StageAgg)] =
+    run.stages.toSeq.sortBy(-_._2.sumMs)
+
+  /** A header plus one line per stage, heaviest (by task-time sum) first. */
+  private def stageTable(run: RunMeter.Run[Any]): Seq[String] = {
+    val header = f"${"stage"}%7s ${"tasks"}%6s ${"sum_s"}%8s ${"max_s"}%7s " +
+      f"${"med_s"}%7s ${"gc%"}%5s ${"spill"}%8s ${"sh_rd"}%8s ${"sh_wr"}%8s ${"input"}%8s"
+    header +: byTaskTime(run).map { case (id, a) =>
+      f"$id%7d ${a.n}%6d ${a.sumMs / 1000.0}%8.2f ${a.maxMs / 1000.0}%7.2f " +
+        f"${a.medMs / 1000.0}%7.2f ${a.gcPct}%5.1f ${a.spillMb}%7.0fM ${a.shufReadMb}%7.0fM " +
+        f"${a.shufWriteMb}%7.0fM ${a.inputMb}%7.0fM"
     }
   }
 
-  /** Wall seconds and description of each job, per measured run. */
-  private final class JobMeter extends SparkListener {
-    private val starts = TrieMap[Int, (Long, String)]()
-    private val done = ArrayBuffer[(Int, Double, String)]()
-    override def onJobStart(j: SparkListenerJobStart): Unit =
-      starts(j.jobId) = (System.nanoTime(),
-        Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("").take(80))
-    override def onJobEnd(j: SparkListenerJobEnd): Unit =
-      starts.remove(j.jobId).foreach { case (t0, d) =>
-        done.synchronized { done += ((j.jobId, (System.nanoTime() - t0) / 1e9, d)) }
-      }
-    def reset(): Unit = done.synchronized(done.clear())
-    def heaviest(top: Int): Seq[String] =
-      done.synchronized(done.toSeq).sortBy(-_._2).take(top).map { case (id, sec, d) =>
-        f"  job $id%3d $sec%7.2fs  $d"
-      }
-  }
+  /** One line per stage for the heaviest `top` stages — the compact digest
+    * `smoke --profile` prints for each query.
+    */
+  private def stageDigest(run: RunMeter.Run[Any], top: Int = 3): Seq[String] =
+    byTaskTime(run).take(top).map { case (id, a) =>
+      f"stage $id: tasks=${a.n} sum=${a.sumMs / 1000.0}%.1fs " +
+        f"max/med=${a.maxMs / 1000.0}%.2f/${a.medMs / 1000.0}%.2fs " +
+        f"gc=${a.gcPct}%.1f%% spill=${a.spillMb}%.0fM " +
+        f"sh_rd=${a.shufReadMb}%.0fM sh_wr=${a.shufWriteMb}%.0fM " +
+        f"input=${a.inputMb}%.0fM"
+    }
 
   private def exchanges(p: SparkPlan): Seq[String] = p match {
     case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
@@ -235,61 +226,26 @@ object Diag {
   /** Time each query on the sf lake and on a copy scaled by `factor`
     * (best of 2 each) and print the ratio — the local replica of the
     * driver's superlinearity gate for a subset (full run: Bench). A larger
-    * factor (30, 100) extends the trend line. Each run also prints the
+    * factor (30, 100) extends the trend line. Each side also prints the
     * [[ScaleAudit]] hits of its final adaptive plan, and with `profile`
-    * the [[StageProfile.Meter]] digest of the scaled run that produced the
-    * reported minimum.
+    * the stage digest of the scaled run that produced the reported
+    * minimum.
     */
   def smoke(spark: SparkSession, sfDir: String, names: Seq[String], factor: Int,
             profile: Boolean): Unit = {
-    val sc = spark.sparkContext
-    val meter = new ShuffleMeter
-    val stageMeter = new StageProfile.Meter
-    sc.addSparkListener(meter)
-    if (profile) sc.addSparkListener(stageMeter)
-    try {
-      val scaled = ScaleSmoke.ensureScaled(spark, sfDir, factor = factor)
+    val scaled = ScaleSmoke.ensureScaled(spark, sfDir, factor = factor)
+    RunMeter.using(spark) { meter =>
       names.foreach { n =>
         val fn = byName(n).spark
-        // (best-of-2 seconds, last-run shuffle MB — bytes are
-        // plan-deterministic, so they are the box-noise-free signal)
-        def measure(d: String): (Double, Double, Seq[String], Seq[String]) = {
-          var mb = 0.0
-          var audit = Seq.empty[String]
-          val runs = (1 to 2).map { _ =>
-            if (profile) {
-              drainListenerBus(sc)
-              stageMeter.reset()
-            }
-            val b0 = meter.snapshot(sc)
-            val t0 = System.nanoTime()
-            // Materialize.force executes df's OWN plan fully and finalizes
-            // its AdaptiveSparkPlan, so the audit walks the plan that RAN
-            val df = fn(spark, d); Materialize.force(df)
-            val sec = (System.nanoTime() - t0) / 1e9
-            mb = (meter.snapshot(sc) - b0) / 1e6
-            // the same final-plan cliff sweep the bench smoke emits
-            audit = try ScaleAudit.audit(df.queryExecution.executedPlan)
-            catch { case e: Throwable => Seq(s"AUDIT-ERROR: ${e.getMessage}") }
-            val dig = if (profile) {
-              drainListenerBus(sc)
-              stageMeter.digest()
-            } else Seq.empty[String]
-            (sec, dig)
-          }
-          val best = runs.minBy(_._1)
-          (best._1, mb, audit, best._2)
-        }
-        val (t1, mb1, a1, _) = measure(sfDir)
-        val (t10, mb10, a10, dig10) = measure(scaled)
-        println(f"[smoke] $n%-32s head=$t1%7.2fs x$factor%d=$t10%7.2fs ratio=${t10 / t1}%6.2f shuffleMB=$mb1%8.1f -> $mb10%8.1f")
-        a10.foreach(h => println(s"[smoke]   audit@x$factor: $h"))
-        a1.foreach(h => println(s"[smoke]   audit@head: $h"))
-        dig10.foreach(l => println(s"[smoke]   profile@x$factor: $l"))
+        val head = meter.best(n, 2)(fn(spark, sfDir))
+        val big = meter.best(n, 2)(fn(spark, scaled))
+        println(f"[smoke] $n%-32s head=${head.seconds}%7.2fs x$factor%d=${big.seconds}%7.2fs " +
+          f"ratio=${big.seconds / head.seconds}%6.2f shuffleMB=${head.shuffleMb}%8.1f -> ${big.shuffleMb}%8.1f")
+        Seq(head, big).flatMap(_.error).foreach(e => println(s"[smoke]   failed: $e"))
+        ScaleSmoke.audit(big).foreach(h => println(s"[smoke]   audit@x$factor: $h"))
+        ScaleSmoke.audit(head).foreach(h => println(s"[smoke]   audit@head: $h"))
+        if (profile) stageDigest(big).foreach(l => println(s"[smoke]   profile@x$factor: $l"))
       }
-    } finally {
-      sc.removeSparkListener(meter)
-      sc.removeSparkListener(stageMeter)
     }
   }
 
@@ -312,17 +268,11 @@ object Diag {
   }
 
   /** Best-of-3 seconds of each query with Bench's methodology: the same
-    * warm-up, then `Materialize.force` three times.
+    * warm-up, then `Materialize.force` three times (-1.0 for a query that
+    * failed).
     */
   def time(spark: SparkSession, sfDir: String, names: Seq[String]): Seq[(String, Double)] = {
     Bench.warmUp(spark, sfDir)
-    try names.map { n =>
-      spark.sparkContext.setJobDescription(s"lab: $n")
-      n -> (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        Materialize.force(byName(n).spark(spark, sfDir))
-        (System.nanoTime() - t0) / 1e9
-      }.min
-    } finally spark.sparkContext.setJobDescription(null)
+    RunMeter.using(spark)(meter => names.map(n => n -> meter.best(n, 3)(byName(n).spark(spark, sfDir)).seconds))
   }
 }

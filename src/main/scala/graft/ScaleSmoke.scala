@@ -513,51 +513,28 @@ object ScaleSmoke {
     * that itself fails is recorded as a hit, never swallowed (the
     * WindowAuditSpec lesson from ADVICE r12).
     */
-  def run(spark: SparkSession, sfDir: String, scaledDir: String,
-          meter: Option[ShuffleMeter] = None): Map[String, SmokeMeasure] = {
-    smokeQueries.map { name =>
-      val fn = SparkEntry.queries(name)
-      var shuffleMb = -1.0
-      var lastDf: Option[DataFrame] = None
-      def time(dir: String, measured: Boolean): Double = {
-        val times = (1 to 2).map { _ =>
-          val s0 = meter.map(_.snapshot(spark.sparkContext))
-          val t0 = System.nanoTime()
-          try {
-            // Materialize.force executes df's OWN plan (r14: the previous
-            // groupBy().count() materializer let Catalyst prune pure-window
-            // plans to an empty-schema scan and drop final sorts — see
-            // Materialize's scaladoc) and leaves df's AdaptiveSparkPlan
-            // finalized, so the audit walks the plan that actually RAN
-            // (the r13 phantom-hit lesson: an unexecuted df's
-            // executedPlan is the INITIAL static-estimate plan, where
-            // under-estimated broadcasts appear that AQE then replaces).
-            val df = fn(spark, dir)
-            Materialize.force(df)
-            val sec = (System.nanoTime() - t0) / 1e9
-            if (measured) {
-              for (m <- meter; b0 <- s0)
-                shuffleMb = (m.snapshot(spark.sparkContext) - b0) / 1e6
-              lastDf = Some(df)
-            }
-            sec
-          }
-          catch { case e: Throwable =>
-            System.err.println(s"[scale-smoke] $name @$dir failed: ${e.getMessage}")
-            -1.0
-          }
-        }
-        if (times.exists(_ < 0)) -1.0 else times.min
+  def run(spark: SparkSession, sfDir: String, scaledDir: String): Map[String, SmokeMeasure] =
+    RunMeter.using(spark) { meter =>
+      smokeQueries.map { name =>
+        val fn = SparkEntry.queries(name)
+        val head = meter.best(name, 2)(fn(spark, sfDir))
+        val smoke = meter.best(name, 2)(fn(spark, scaledDir))
+        name -> SmokeMeasure(head.seconds, smoke.seconds,
+          if (smoke.failed) -1.0 else smoke.shuffleMb, audit(smoke))
+      }.toMap
+    }
+
+  /** [[ScaleAudit.audit]] of a run's FINAL adaptive plan: the plan that
+    * actually ran, not the initial static-estimate plan, where
+    * under-estimated broadcasts appear that AQE then replaces (the r13
+    * phantom-hit lesson). A failed run has no plan to audit; an audit that
+    * itself fails is recorded as a hit, never swallowed.
+    */
+  private[graft] def audit(run: RunMeter.Run[DataFrame]): Seq[String] =
+    run.result.toSeq.flatMap { df =>
+      try ScaleAudit.audit(df.queryExecution.executedPlan)
+      catch { case e: Throwable =>
+        Seq(s"AUDIT-ERROR: ${Option(e.getMessage).getOrElse(e.getClass.getName).take(120)}")
       }
-      val headS = time(sfDir, measured = false)
-      val smokeS = time(scaledDir, measured = true)
-      val hits = lastDf.toSeq.flatMap { df =>
-        try ScaleAudit.audit(df.queryExecution.executedPlan)
-        catch { case e: Throwable =>
-          Seq(s"AUDIT-ERROR: ${Option(e.getMessage).getOrElse(e.getClass.getName).take(120)}")
-        }
-      }
-      name -> SmokeMeasure(headS, smokeS, shuffleMb, hits)
-    }.toMap
-  }
+    }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -199,30 +198,6 @@ object SkewStress {
     wallBlowup || hotCollapse || nativeHotCollapse
   }
 
-  /** Per-stage task durations for the straggler profile. */
-  private final class TaskMeter extends SparkListener {
-    val byStage = new scala.collection.concurrent.TrieMap[Int, scala.collection.mutable.ArrayBuffer[Long]]()
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = if (t.taskInfo != null) {
-      val buf = byStage.getOrElseUpdate(t.stageId, new scala.collection.mutable.ArrayBuffer[Long]())
-      buf.synchronized { buf += t.taskInfo.duration }
-    }
-    def reset(): Unit = byStage.clear()
-    /** (maxTaskMs, medianTaskMs, nTasks): the GLOBAL max task duration,
-      * with median/count of the stage containing that task. (The previous
-      * "stage with the most total task time" heuristic routinely picked a
-      * 1-task result stage and reported a meaningless 1.0× — the hot task
-      * itself is the signal the gate needs.)
-      */
-    def worstStage(): (Long, Long, Int) = {
-      val stages = byStage.readOnlySnapshot().values.map(b => b.synchronized(b.toSeq))
-        .filter(_.nonEmpty)
-      if (stages.isEmpty) return (0L, 0L, 0)
-      val worst = stages.maxBy(_.max)
-      val sorted = worst.sorted
-      (sorted.last, sorted(sorted.size / 2), sorted.size)
-    }
-  }
-
   /** The hot user id: chosen OUTSIDE every real key range (user ids are
     * dimension-table keys ≤ ~10^7 even on the 100× lake), so collapsing
     * rows onto it never merges with an existing user's history.
@@ -304,44 +279,27 @@ object SkewStress {
 
   /** Run each probe paired — best-of-2 on the base lake, then best-of-2 on
     * the skewed lake, back to back so both walls share one contention
-    * window. The straggler profile is captured per run (the listener bus
-    * is drained BEFORE each reset, so run 1's async task events can never
-    * pollute run 2's profile — ADVICE r13) and the reported profile is the
-    * one from whichever run produced the reported minimum wall, so the
-    * paired numbers always describe the same execution.
+    * window. The straggler profile ([[RunMeter.Run.worstTask]]) comes from
+    * the skewed run that produced the reported minimum, so the paired
+    * numbers always describe the same execution. A probe that throws in
+    * any run reads -1.0 on that side: a failure is never hidden behind the
+    * other run's time.
     */
   def run(spark: SparkSession, sfDir: String, skewedDir: String,
           names: Seq[String] = probes,
           fns: Map[String, (SparkSession, String) => DataFrame] = SparkEntry.queries)
-      : Seq[(String, SkewMeasure)] = {
-    val meter = new TaskMeter
-    spark.sparkContext.addSparkListener(meter)
-    try {
+      : Seq[(String, SkewMeasure)] =
+    RunMeter.using(spark) { meter =>
       names.map { n =>
-        val fn = fns(n)
-        def best(dir: String): (Double, (Long, Long, Int)) =
-          (1 to 2).map { _ =>
-            org.apache.spark.GraftSparkInternals.drainListenerBus(spark.sparkContext)
-            meter.reset()
-            val t0 = System.nanoTime()
-            val sec =
-              // Materialize.force: the query's OWN plan, full output — a
-              // derived count would prune the very windows the per-key
-              // probes exist to stress (see Materialize's scaladoc)
-              try { Materialize.force(fn(spark, dir)); (System.nanoTime() - t0) / 1e9 }
-              catch { case e: Throwable =>
-                System.err.println(s"[skew] $n @$dir failed: ${e.getMessage}")
-                -1.0
-              }
-            org.apache.spark.GraftSparkInternals.drainListenerBus(spark.sparkContext)
-            (sec, meter.worstStage())
-          }.minBy(r => if (r._1 < 0) Double.MaxValue else r._1)
-        val (baseS, _) = best(sfDir)
-        val (skewS, (mx, md, nt)) = best(skewedDir)
-        n -> SkewMeasure(baseS, skewS, mx, md, nt)
+        // Materialize.force (inside best): the query's OWN plan, full
+        // output — a derived count would prune the very windows the
+        // per-key probes exist to stress (see Materialize's scaladoc)
+        val base = meter.best(n, 2)(fns(n)(spark, sfDir))
+        val skewed = meter.best(n, 2)(fns(n)(spark, skewedDir))
+        val (mx, md, nt) = skewed.worstTask
+        n -> SkewMeasure(base.seconds, skewed.seconds, mx, md, nt)
       }
-    } finally spark.sparkContext.removeSparkListener(meter)
-  }
+    }
 
   /** The positive control for [[isStraggler]]: multi_touch_attribution
     * WITHOUT the day bin in the join key — the exact pre-r13 quadratic
@@ -429,13 +387,20 @@ object SkewStress {
         f"${m.stragglerX}%5.1fx its stage median over ${m.nTasks}%3d tasks)$flag")
     }
     // machine-readable summary line (the committed skew10x artifact)
-    val per = rs.map { case (n, m) =>
-      s""""$n":{"base_s":${f"${m.baseS}%.2f"},"skew_s":${f"${m.skewS}%.2f"},""" +
-        s""""hot_task_pct":${f"${m.hotTaskShare}%.2f"},"straggler_x":${f"${m.stragglerX}%.1f"}}"""
-    }.mkString("{", ",", "}")
-    val flagged = rs.collect { case (n, m) if isStraggler(m, floorScale) => n }
-      .sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    println(s"""{"metric":"skew_sweep","src":"$sfDir","hot_permille":$hotPermille,"floor_scale":$floorScale,"probes":$per,"stragglers":$flagged}""")
+    println(Json.write(sweepRecord(sfDir, hotPermille, floorScale, rs)))
     spark.stop()
+  }
+
+  /** The sweep's summary record. */
+  private[graft] def sweepRecord(sfDir: String, hotPermille: Int, floorScale: Double,
+                                 rs: Seq[(String, SkewMeasure)]): Map[String, Any] = {
+    import Json.{obj, round}
+    obj("metric" -> "skew_sweep", "src" -> sfDir, "hot_permille" -> hotPermille,
+      "floor_scale" -> floorScale,
+      "probes" -> obj(rs.map { case (n, m) =>
+        n -> obj("base_s" -> round(m.baseS, 2), "skew_s" -> round(m.skewS, 2),
+          "hot_task_pct" -> round(m.hotTaskShare, 2), "straggler_x" -> round(m.stragglerX, 1))
+      }: _*),
+      "stragglers" -> rs.collect { case (n, m) if isStraggler(m, floorScale) => n }.sorted)
   }
 }

@@ -88,19 +88,20 @@ object StreamingThroughput {
     def stateRowsFinal: Long = dataBatches.lastOption.map(_.stateRows).getOrElse(-1L)
     def stateRowsMax: Long = if (batches.isEmpty) -1L else batches.map(_.stateRows).max
     def stateBytesFinal: Long = dataBatches.lastOption.map(_.stateBytes).getOrElse(-1L)
-    def json: String = {
-      def arr(f: BatchStat => Long) = batches.map(f).mkString("[", ",", "]")
-      s""""$leg":{"rows":$totalRows,"batches":${batches.size},""" +
-        s""""data_batches":${dataBatches.size},"rows_per_s":${f"$rowsPerS%.0f"},""" +
-        s""""exec_s":${f"$execS%.2f"},"wall_s":${f"$wallS%.2f"},""" +
-        s""""p50_ms":${p50Ms},"p95_ms":${p95Ms},"p95_steady_ms":${p95SteadyMs},""" +
-        s""""state_rows_final":$stateRowsFinal,"state_rows_max":$stateRowsMax,""" +
-        s""""state_rows_expected":$expectedStateRows,""" +
-        s""""state_check":"${if (stateBound) "bound" else "exact"}",""" +
-        s""""state_bytes_final":$stateBytesFinal,""" +
-        s""""batch_rows":${arr(_.rows)},"batch_ms":${arr(_.execMs)},""" +
-        s""""batch_state_rows":${arr(_.stateRows)},""" +
-        s""""batch_state_bytes":${arr(_.stateBytes)}}"""
+    /** The leg's full record, per-batch arrays included. */
+    def record: (String, Any) = {
+      import Json.{obj, round}
+      leg -> obj("rows" -> totalRows, "batches" -> batches.size,
+        "data_batches" -> dataBatches.size, "rows_per_s" -> round(rowsPerS, 0),
+        "exec_s" -> round(execS, 2), "wall_s" -> round(wallS, 2),
+        "p50_ms" -> p50Ms, "p95_ms" -> p95Ms, "p95_steady_ms" -> p95SteadyMs,
+        "state_rows_final" -> stateRowsFinal, "state_rows_max" -> stateRowsMax,
+        "state_rows_expected" -> expectedStateRows,
+        "state_check" -> (if (stateBound) "bound" else "exact"),
+        "state_bytes_final" -> stateBytesFinal,
+        "batch_rows" -> batches.map(_.rows), "batch_ms" -> batches.map(_.execMs),
+        "batch_state_rows" -> batches.map(_.stateRows),
+        "batch_state_bytes" -> batches.map(_.stateBytes))
     }
   }
 
@@ -379,12 +380,12 @@ object StreamingThroughput {
                                   stateRowsFinal: Long, expectedStateRows: Long) {
     def clean: Boolean =
       distinctVersions == expectedVersions && stateRowsFinal == expectedStateRows
-    def json: String =
-      s""""scd2_recovery":{"pre_stop_batches":$preStopBatches,""" +
-        s""""replayed_batches":$replayedBatches,"post_restart_batches":$postRestartBatches,""" +
-        s""""recovery_first_commit_s":${f"$recoveryFirstCommitS%.2f"},""" +
-        s""""distinct_versions":$distinctVersions,"expected_versions":$expectedVersions,""" +
-        s""""state_rows_final":$stateRowsFinal,"state_rows_expected":$expectedStateRows}"""
+    def record: (String, Any) =
+      "scd2_recovery" -> Json.obj("pre_stop_batches" -> preStopBatches,
+        "replayed_batches" -> replayedBatches, "post_restart_batches" -> postRestartBatches,
+        "recovery_first_commit_s" -> Json.round(recoveryFirstCommitS, 2),
+        "distinct_versions" -> distinctVersions, "expected_versions" -> expectedVersions,
+        "state_rows_final" -> stateRowsFinal, "state_rows_expected" -> expectedStateRows)
   }
 
   def recoveryLeg(spark: SparkSession, scratchRoot: String,
@@ -470,26 +471,38 @@ object StreamingThroughput {
       dup ++ st
     }
 
-  /** Compact JSON for the bench tail (per-batch arrays omitted — the full
-    * artifact comes from this object's main).
+  private def floorsRecord: Map[String, Any] =
+    Json.obj(Floors.toSeq.sortBy(_._1).map { case (k, v) => k -> Json.round(v, 0) }: _*)
+
+  /** The compact record for the bench tail (per-batch arrays omitted — the
+    * full record comes from this object's main).
     */
+  def benchRecord(legs: Seq[LegResult],
+                  recovery: Option[RecoveryResult] = None,
+                  boxFactor: Double = 1.0): Map[String, Any] = {
+    import Json.{obj, round}
+    obj(legs.map { l =>
+      l.leg -> obj("rows_per_s" -> round(l.rowsPerS, 0), "p50_ms" -> l.p50Ms,
+        "p95_ms" -> l.p95Ms, "p95_steady_ms" -> l.p95SteadyMs,
+        "data_batches" -> l.dataBatches.size,
+        "state_rows_final" -> l.stateRowsFinal, "state_rows_expected" -> l.expectedStateRows,
+        "state_bytes_final" -> l.stateBytesFinal)
+    } ++ recovery.map(_.record) ++ Seq("floors" -> floorsRecord,
+      "floor_relax" -> round(floorRelax(boxFactor), 2),
+      "below_floor" -> belowFloor(legs, recovery, boxFactor).sorted): _*)
+  }
+
   def benchJson(legs: Seq[LegResult],
                 recovery: Option[RecoveryResult] = None,
-                boxFactor: Double = 1.0): String = {
-    val per = legs.map { l =>
-      s""""${l.leg}":{"rows_per_s":${f"${l.rowsPerS}%.0f"},"p50_ms":${l.p50Ms},""" +
-        s""""p95_ms":${l.p95Ms},"p95_steady_ms":${l.p95SteadyMs},""" +
-        s""""data_batches":${l.dataBatches.size},""" +
-        s""""state_rows_final":${l.stateRowsFinal},"state_rows_expected":${l.expectedStateRows},""" +
-        s""""state_bytes_final":${l.stateBytesFinal}}"""
-    }.mkString(",")
-    val rec = recovery.map("," + _.json).getOrElse("")
-    val floors = Floors.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k":${f"$v%.0f"}""" }.mkString("{", ",", "}")
-    val bf = belowFloor(legs, recovery, boxFactor).sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    s"""{$per$rec,"floors":$floors,"floor_relax":${f"${floorRelax(boxFactor)}%.2f"},"below_floor":$bf}"""
-  }
+                boxFactor: Double = 1.0): String =
+    Json.write(benchRecord(legs, recovery, boxFactor))
+
+  /** The full record this object's main prints. */
+  private[graft] def record(sfDir: String, legs: Seq[LegResult],
+                            recovery: Option[RecoveryResult]): Map[String, Any] =
+    Json.obj(Seq("metric" -> "streaming_throughput", "sf" -> sfDir) ++ legs.map(_.record) ++
+      recovery.map(_.record) ++ Seq("floors" -> floorsRecord,
+        "below_floor" -> belowFloor(legs, recovery).sorted): _*)
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -500,13 +513,7 @@ object StreamingThroughput {
     val legs = Seq(scd2Leg(spark, scratch), lshLeg(spark, sfDir, scratch),
       lshTtlLeg(spark, sfDir, scratch))
     val recovery = Some(recoveryLeg(spark, scratch))
-    val legsJson = legs.map(_.json).mkString(",")
-    val recJson = recovery.map("," + _.json).getOrElse("")
-    val bf = belowFloor(legs, recovery).sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val floors = Floors.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k":${f"$v%.0f"}""" }.mkString("{", ",", "}")
-    val line = s"""{"metric":"streaming_throughput","sf":"$sfDir",$legsJson$recJson,"floors":$floors,"below_floor":$bf}"""
+    val line = Json.write(record(sfDir, legs, recovery))
     println(line)
     outPath.foreach { p =>
       java.nio.file.Files.write(java.nio.file.Paths.get(p), (line + "\n").getBytes("UTF-8"))

@@ -5,12 +5,15 @@ DuckDB-oracle comparison the driver runs, between rounds).
 
 Usage: python3 tools/selfcheck.py <sfDir> <verifyOutDir>
   1. expects `sbt "runMain graft.Verify <sfDir> <outDir>"` to have run;
-  2. loads each <outDir>/<name>/ parquet (Spark result);
-  3. runs <outDir>/oracle_sql.json [name] in DuckDB over views of the
+  2. prints each query Verify recorded as failed in
+     <outDir>/verify_summary.json (when present), with its exception;
+     such a query has no parquet and FAILs the compare below;
+  3. loads each <outDir>/<name>/ parquet (Spark result);
+  4. runs <outDir>/oracle_sql.json [name] in DuckDB over views of the
      sfDir parquet tables;
-  4. compares after sorting columns by name and rows by all columns.
+  5. compares after sorting columns by name and rows by all columns.
 """
-import json, math, sys
+import json, os, sys
 
 import duckdb
 
@@ -28,8 +31,21 @@ def canon(rows, cols):
     return [c for c in sorted(cols)], out
 
 
+def verify_failures(out_dir):
+    """{name: error} of the queries Verify recorded as failed."""
+    path = f"{out_dir}/verify_summary.json"
+    if not os.path.exists(path):
+        return {}
+    queries = json.load(open(path))["queries"]
+    return {n: q.get("error", "") for n, q in sorted(queries.items())
+            if q["status"] != "pass"}
+
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
+    failed_in_verify = verify_failures(out_dir)
+    for name, err in failed_in_verify.items():
+        print(f"VERIFY-FAIL {name}: {err}")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -91,6 +107,9 @@ def main():
                 n_vacuous += 1
             n_pass += 1
     vac = f", {n_vacuous} VACUOUS (0-row)" if n_vacuous else ""
+    if failed_in_verify:
+        # repeated here so the names survive in a log's last lines
+        print(f"verify failed: {', '.join(failed_in_verify)}")
     print(f"== {n_pass} pass, {n_fail} fail{vac} ==")
     sys.exit(1 if n_fail else 0)
 
