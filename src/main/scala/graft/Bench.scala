@@ -31,6 +31,9 @@ object Bench {
     "bm25_topk" -> 1.232, // CPU scoring + group-limit
     "profile_numeric_sketch" -> 2.260) // CPU sketch (the r15 drift family)
 
+  /** The lake the [[CanaryRef]] seconds were timed on. */
+  val CanaryLake = "sf0.1"
+
   /** Warm the session (codegen compiler, parquet footer reads, shuffle
     * machinery) so the first measured query doesn't absorb JVM startup.
     */
@@ -133,11 +136,13 @@ object Bench {
     val failed = headline.filter(_.failed).map(_.label)
 
     // Box-factor canary: measured/reference per canary (headline numbers
-    // reused — no extra executions), median across the present ones.
+    // reused — no extra executions), median across the present ones. The
+    // references were timed on the sf0.1 lake, so on any other lake the
+    // ratio measures the lake, not the box: no canary is read there
+    // (median -1.0, which leaves the floors unrelaxed).
     val measured = secs.toMap
-    val perCanary = CanaryRef.flatMap { case (n, ref) =>
-      measured.get(n).filter(_ > 0).map(n -> _ / ref)
-    }
+    val perCanary = if (new java.io.File(sfDir).getName != CanaryLake) Nil
+      else CanaryRef.flatMap { case (n, ref) => measured.get(n).filter(_ > 0).map(n -> _ / ref) }
     val canaryMedian = if (perCanary.isEmpty) -1.0 else {
       val s = perCanary.map(_._2).sorted
       s(s.size / 2)

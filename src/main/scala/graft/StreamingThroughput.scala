@@ -142,23 +142,18 @@ object StreamingThroughput {
     path
   }
 
-  private def pinSliceMtime(dir: String, slice: Int): Unit =
-    new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
-      .foreach(_.setLastModified(1700000000000L + slice * 60000L))
-
   /** Debezium-shaped NDJSON envelope for synthetic event `id` (lsn = id,
     * ~n/keys versions per key; the first `keys` ids are creates).
     */
   private def envelopeValue(keys: Long): org.apache.spark.sql.Column =
-    to_json(struct(struct(
-      lit(null).cast(CdcSchemas.productsRow).as("before"),
+    CdcSchemas.envelopeJson(
+      lit(null).cast(CdcSchemas.productsRow),
       struct((col("id") % keys).cast("int").as("id"),
         concat(lit("name-"), col("id") % 1000).as("name"),
         lit("desc").as("description"),
-        (col("id") % 10000).cast("double").as("price")).as("after"),
-      when(col("id") < keys, "c").otherwise("u").as("op"),
-      (lit(1733333333000L) + col("id")).as("ts_ms"),
-      struct(col("id").as("lsn")).as("source")).as("payload")))
+        (col("id") % 10000).cast("double").as("price")),
+      when(col("id") < keys, "c").otherwise("u"),
+      lit(1733333333000L) + col("id"), col("id"))
 
   /** Stage the synthetic Debezium envelope lake as `slices` NDJSON files,
     * mtime-ordered so the file source replays event order (one file per
@@ -170,11 +165,8 @@ object StreamingThroughput {
         s"n=$n slices=$slices gen=1") { tmp =>
       val keys = n / 10
       (0 until slices).foreach { i =>
-        val dir = s"$tmp/b$i"
-        spark.range(i * n / slices, (i + 1) * n / slices)
-          .select(envelopeValue(keys).as("value"))
-          .coalesce(1).write.mode("overwrite").text(dir)
-        pinSliceMtime(dir, i)
+        BoundedStream.writeSlice(spark.range(i * n / slices, (i + 1) * n / slices)
+          .select(envelopeValue(keys).as("value")), s"$tmp/b$i", i, "text")
       }
     }
 
@@ -197,10 +189,8 @@ object StreamingThroughput {
         .withColumn("__slice",
           least(lit(slices - 1), (col("doc_id") * slices / total).cast("int")))
       (0 until slices).foreach { i =>
-        val dir = s"$tmp/b$i"
-        scaled.filter(col("__slice") === i).drop("__slice")
-          .coalesce(1).write.mode("overwrite").parquet(dir)
-        pinSliceMtime(dir, i)
+        BoundedStream.writeSlice(scaled.filter(col("__slice") === i).drop("__slice"),
+          s"$tmp/b$i", i)
       }
     }
 

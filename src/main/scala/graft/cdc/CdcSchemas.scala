@@ -1,5 +1,7 @@
 package graft.cdc
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{struct, to_json}
 import org.apache.spark.sql.types._
 
 /** Schemas for the Debezium-style CDC envelope and the reference's two
@@ -45,6 +47,15 @@ object CdcSchemas {
       StructField("ts_ms", LongType),
       StructField("source", StructType(Seq(
         StructField("lsn", LongType)))))))))
+
+  /** One synthetic envelope as an NDJSON line: the [[envelope]] layout
+    * filled from columns (`before`/`after` row images, `op`, `ts_ms`,
+    * `source.lsn`), the one builder behind every generated lake.
+    */
+  def envelopeJson(before: Column, after: Column, op: Column, tsMs: Column,
+                   lsn: Column): Column =
+    to_json(struct(struct(before.as("before"), after.as("after"), op.as("op"),
+      tsMs.as("ts_ms"), struct(lsn.as("lsn")).as("source")).as("payload")))
 
   val productsEnvelope: StructType = envelope(productsRow)
   val usersEnvelope: StructType = envelope(usersRow)

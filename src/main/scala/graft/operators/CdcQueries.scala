@@ -513,8 +513,9 @@ object CdcQueries {
     // version row ('upsert') plus every neighbor whose version_num /
     // valid_to it perturbs (old rows to 'retract', renumbered rows to
     // upsert). At 100 TB both histories restrict to the late events'
-    // KEYS first (the touched-keys discipline the streaming maintainer
-    // uses); kept whole-log here so the oracle replays it verbatim.
+    // KEYS first (the per-key discipline of the incremental SCD2
+    // stream's state); kept whole-log here so the oracle replays it
+    // verbatim.
     QueryDef(
       "scd2_late_corrections",
       (s, d) => {

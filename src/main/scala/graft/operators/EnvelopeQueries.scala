@@ -55,12 +55,9 @@ object EnvelopeQueries {
       .when(col("id") % 13 === 0, "r")
       .otherwise("u")
     val nullRow = lit(null).cast(CdcSchemas.productsRow)
-    val env = s.range(LakeEvents).select(to_json(struct(struct(
-      when(op === "d", row).otherwise(nullRow).as("before"),
-      when(op =!= "d", row).otherwise(nullRow).as("after"),
-      op.as("op"),
-      (lit(1733333333000L) + col("id") * 321L + col("id") % 7).as("ts_ms"),
-      struct(col("id").as("lsn")).as("source")).as("payload"))).as("value"))
+    val env = s.range(LakeEvents).select(CdcSchemas.envelopeJson(
+      when(op === "d", row).otherwise(nullRow), when(op =!= "d", row).otherwise(nullRow),
+      op, lit(1733333333000L) + col("id") * 321L + col("id") % 7, col("id")).as("value"))
     publishOnce(env)
     LakeDir
   }
@@ -97,12 +94,9 @@ object EnvelopeQueries {
       .when(col("id") % 11 === 0, "r")
       .otherwise("u")
     val nullRow = lit(null).cast(CdcSchemas.usersRow)
-    val env = s.range(UsersEvents).select(to_json(struct(struct(
-      when(op === "d", row).otherwise(nullRow).as("before"),
-      when(op =!= "d", row).otherwise(nullRow).as("after"),
-      op.as("op"),
-      (lit(1733444444000L) + col("id") * 137L + col("id") % 5).as("ts_ms"),
-      struct(col("id").as("lsn")).as("source")).as("payload"))).as("value"))
+    val env = s.range(UsersEvents).select(CdcSchemas.envelopeJson(
+      when(op === "d", row).otherwise(nullRow), when(op =!= "d", row).otherwise(nullRow),
+      op, lit(1733444444000L) + col("id") * 137L + col("id") % 5, col("id")).as("value"))
     publishOnce(env, UsersLakeDir)
     UsersLakeDir
   }
@@ -149,12 +143,9 @@ object EnvelopeQueries {
           .otherwise("u")
         val nullRow = lit(null).cast(
           if (withCategory) productsRowV2 else CdcSchemas.productsRow)
-        s.range(DriftEvents).select(to_json(struct(struct(
-          when(op === "d", row).otherwise(nullRow).as("before"),
-          when(op =!= "d", row).otherwise(nullRow).as("after"),
-          op.as("op"),
-          (lit(1733555555000L) + (col("id") + offset) * 211L).as("ts_ms"),
-          struct((col("id") + offset).as("lsn")).as("source")).as("payload"))).as("value"))
+        s.range(DriftEvents).select(CdcSchemas.envelopeJson(
+          when(op === "d", row).otherwise(nullRow), when(op =!= "d", row).otherwise(nullRow),
+          op, lit(1733555555000L) + (col("id") + offset) * 211L, col("id") + offset).as("value"))
           .coalesce(2).write.text(out)
       }
       gen(0L, withCategory = false, s"$tmp/gen1")
@@ -288,12 +279,8 @@ object EnvelopeQueries {
           val gens = buildSchemaGens(s)
           val stage = s"$scratch/jsonlake"
           Seq("gen1", "gen2").zipWithIndex.foreach { case (g, i) =>
-            s.read.parquet(s"$gens/$g")
-              .select(to_json(struct(col("*"))).as("value"))
-              .coalesce(1).write.mode("overwrite").text(s"$stage/b$i")
-            new java.io.File(s"$stage/b$i").listFiles()
-              .filter(_.getName.startsWith("part-"))
-              .foreach(_.setLastModified(1700000000000L + i * 60000L))
+            BoundedStream.writeSlice(s.read.parquet(s"$gens/$g")
+              .select(to_json(struct(col("*"))).as("value")), s"$stage/b$i", i, "text")
           }
           val out = s"$scratch/emissions"
           val lines = s.readStream.option("maxFilesPerTrigger", 1).text(s"$stage/b*/part-*")

@@ -92,11 +92,7 @@ object StreamingQueries {
     * read a half-written result and regenerated testdata forces a re-run.
     */
   private[operators] def cachedRun(s: SparkSession, name: String, sfDir: String)
-                                  (run: (String, String) => Unit): DataFrame =
-    cachedStream(s, name, sfDir)(run)
-
-  private def cachedStream(s: SparkSession, name: String, sfDir: String)
-                          (run: (String, String) => Unit): DataFrame = {
+                                  (run: (String, String) => Unit): DataFrame = {
     // sfDir is part of the PATH (not just the stamp) so runs at different
     // scale factors — PlanSpec at sf0.001, Verify at sf0.01 — keep their
     // own publications instead of invalidating each other's
@@ -111,70 +107,43 @@ object StreamingQueries {
     s.read.parquet(dst)
   }
 
-  /** Stream the envelope lake through the touched-keys maintainer
-    * (mode 2): one micro-batch per lake file, state carried across
-    * triggers by [[Scd2Streaming.TouchedKeysMaintainer]]. Writes the final
-    * maintained history (cast for the oracle compare) to `out`, then
-    * releases the maintainer's cached state — the write must precede the
-    * release because the maintained history lives only in executor
-    * storage (cache + localCheckpoint blocks, lineage truncated).
-    */
-  private def runTouchedKeys(s: SparkSession, sfDir: String, scratch: String, out: String): Unit = {
-    val dir = EnvelopeQueries.buildLake(s, sfDir)
-    val maintainer = new Scd2Streaming.TouchedKeysMaintainer(
-      Seq("name", "description", "price"))
-    val envelopes = Scd2Streaming
-      .readEnvelopeStream(s, dir + "/part-*", CdcSchemas.productsRow, maxFilesPerTrigger = 1)
-    BoundedStream.start(envelopes, s"$scratch/ckpt") { (b, _) => maintainer.step(b) }
-      .awaitTermination()
-    try maintainer.history.getOrElse(
-        sys.error("stream produced no micro-batches over a non-empty lake"))
-      .select(col("id"), col("name"), col("description"), col("price"),
-        col("row_valid_start_timestamp").cast("timestamp_ntz")
-          .as("row_valid_start_timestamp"),
-        col("row_valid_expiration_timestamp").cast("timestamp_ntz")
-          .as("row_valid_expiration_timestamp"))
-      .coalesce(1).write.mode("overwrite").parquet(out)
-    finally maintainer.release()
-  }
-
-  /** Stream the lake through the true per-key incremental state (mode 3,
-    * transformWithState): parse envelopes → typed change events →
-    * corrected version-row stream, every emission appended to parquet with
-    * its batch id. The final chain is the last emission per (id, lsn) —
-    * convergent regardless of how the files were sliced into triggers.
+  /** Stream the products envelope lake through the per-key incremental
+    * state (mode 3, transformWithState), one lake file per trigger, and
+    * write its converged history to `resultOut` — convergent regardless of
+    * how the files were sliced into triggers. One cached run
+    * ([[scd2Converged]]) serves both `streaming_scd2_rebuild` and
+    * `streaming_scd2_incremental`, so the lake streams once.
     */
   private def runIncremental(s: SparkSession, sfDir: String, scratch: String, resultOut: String): Unit = {
     val dir = EnvelopeQueries.buildLake(s, sfDir)
-    val out = s"$scratch/emissions"
-    runIncrementalScd2(s, scratch, out, Scd2Streaming.readEnvelopeStream(
+    runIncrementalScd2(s, scratch, Scd2Streaming.readEnvelopeStream(
       s, dir + "/part-*", CdcSchemas.productsRow, maxFilesPerTrigger = 1),
-      Seq("name", "description", "price"))
-    // last emission per (id, lsn) wins: later batches re-emit corrected
-    // intervals for reopened versions
-    s.read.parquet(out)
-      .groupBy(col("id"), col("lsn").as("log_seq_num"))
-      .agg(max_by(
-        struct(col("rowValidStartMs"), col("rowValidExpirationMs")),
-        col("batch_id")).as("v"))
-      .select(col("id"), col("log_seq_num"),
-        col("v.rowValidStartMs").as("valid_from_ms"),
-        col("v.rowValidExpirationMs").as("valid_to_ms"))
+      ProductAttrs.map(_.name))
       .coalesce(1).write.mode("overwrite").parquet(resultOut)
   }
 
+  /** The products row's attributes: everything but the key. */
+  private val ProductAttrs = CdcSchemas.productsRow.fields.toSeq.filter(_.name != "id")
+
+  private def scd2Converged(s: SparkSession, sfDir: String): DataFrame =
+    cachedRun(s, "streaming_scd2_converged", sfDir)(runIncremental(s, sfDir, _, _))
+
   /** Drain an envelope stream through [[Scd2Streaming.incremental]],
-    * appending every emission to `out` with its batch id. transformWithState
+    * appending every emission under `scratch` with its batch id, and return
+    * the converged history ([[Scd2Streaming.converged]]). transformWithState
     * needs column families, which only the RocksDB state store provides.
     */
-  private def runIncrementalScd2(s: SparkSession, scratch: String, out: String,
-                                 envelopes: DataFrame, attrFields: Seq[String]): Unit =
+  private def runIncrementalScd2(s: SparkSession, scratch: String, envelopes: DataFrame,
+                                 attrFields: Seq[String]): DataFrame = {
+    val out = s"$scratch/emissions"
     GraftSession.withConf(s, GraftSession.RocksDbStateStore) {
       val versions = Scd2Streaming.incremental(Scd2Streaming.keyEvents(envelopes, attrFields))
       BoundedStream.start(versions, s"$scratch/ckpt") { (b, batchId) =>
         b.withColumn("batch_id", lit(batchId)).write.mode("append").parquet(out)
       }.awaitTermination()
     }
+    Scd2Streaming.converged(s.read.parquet(out))
+  }
 
   /** Stream the `documents` table through [[graft.streaming.StreamingDedup
     * .firstSeen]] as four deterministic micro-batches (doc_id mod 4,
@@ -188,15 +157,7 @@ object StreamingQueries {
     val docs = graft.QueryDef.t(s, sfDir, "documents")
       .select(col("doc_id"), graft.text.TextOps.fingerprintMd5(col("text")).as("content_hash"))
     (0 until 4).foreach { i =>
-      val dir = s"$stage/b$i"
-      docs.filter(col("doc_id") % 4 === i).coalesce(1)
-        .write.mode("overwrite").parquet(dir)
-      // one data file per slice; pin its mtime so the file source's
-      // modification-time ordering == slice order
-      val d = new java.io.File(dir)
-      d.listFiles().filter(_.getName.startsWith("part-")).foreach { f =>
-        f.setLastModified(1700000000000L + i * 60000L)
-      }
+      BoundedStream.writeSlice(docs.filter(col("doc_id") % 4 === i), s"$stage/b$i", i)
     }
     val out = s"$scratch/kept"
     val kept = graft.streaming.StreamingDedup.firstSeen(
@@ -245,7 +206,6 @@ object StreamingQueries {
       .withColumn("slice", least(lit(3),
         floor((col("ms") - col("t0")) * 4 / (col("t1") - col("t0") + 1)).cast("int")))
     (0 until 4).foreach { i =>
-      val dir = s"$stage/b$i"
       // overlap > 0 re-delivers the trailing `overlapMinutes` of the
       // PREVIOUS slice into this one — the at-least-once transport shape
       // (a restarted producer resends from its last commit point)
@@ -255,12 +215,8 @@ object StreamingQueries {
             col("ms") >= col("t0") + (col("t1") - col("t0") + 1) * i / 4 -
               lit(overlapMinutes * 60000L)
         else lit(false)
-      sliced.filter(col("slice") === i || redelivered)
-        .drop("slice", "t0", "t1", "ms").coalesce(1)
-        .write.mode("overwrite").parquet(dir)
-      new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-")).foreach {
-        f => f.setLastModified(1700000000000L + i * 60000L)
-      }
+      BoundedStream.writeSlice(sliced.filter(col("slice") === i || redelivered)
+        .drop("slice", "t0", "t1", "ms"), s"$stage/b$i", i)
     }
     stage + "/b*/part-*.parquet"
   }
@@ -365,13 +321,8 @@ object StreamingQueries {
           .when(col("h") < 200000L && col("early"), 2)
           .otherwise(0))
     (0 to 5).foreach { i =>
-      val dir = s"$stage/b$i"
-      sliced.filter(col("arrival") === i)
-        .drop("slice", "arrival", "t0", "t1", "ms", "h", "early").coalesce(1)
-        .write.mode("overwrite").parquet(dir)
-      new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-")).foreach {
-        f => f.setLastModified(1700000000000L + i * 60000L)
-      }
+      BoundedStream.writeSlice(sliced.filter(col("arrival") === i)
+        .drop("slice", "arrival", "t0", "t1", "ms", "h", "early"), s"$stage/b$i", i)
     }
     stage + "/b*/part-*.parquet"
   }
@@ -432,12 +383,9 @@ object StreamingQueries {
       .select(col("doc_id"), col("text"))
     val nd = docs.agg(max("doc_id")).head().getLong(0) + 1
     (0 until 3).foreach { i =>
-      val dir = s"$scratch/doclake/b$i"
-      docs.filter(col("doc_id") >= nd * i / 3 && col("doc_id") < nd * (i + 1) / 3)
-        .coalesce(1).write.mode("overwrite").parquet(dir)
-      new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-")).foreach {
-        f => f.setLastModified(1700000000000L + i * 60000L)
-      }
+      BoundedStream.writeSlice(
+        docs.filter(col("doc_id") >= nd * i / 3 && col("doc_id") < nd * (i + 1) / 3),
+        s"$scratch/doclake/b$i", i)
     }
     val out = s"$scratch/emissions"
     def bucketed(df: DataFrame) = df
@@ -634,11 +582,7 @@ object StreamingQueries {
       lit(new java.sql.Timestamp(maxTs.getTime + leadHours * 3600 * 1000)).as("ts"),
       lit("heartbeat").as("event_type"), lit(0.0).as("value"),
       lit(-1L).as("user_id"), lit(-1L).as("event_id"))
-    val b4 = s"$stage/b4"
-    sentinel.coalesce(1).write.mode("overwrite").parquet(b4)
-    new java.io.File(b4).listFiles().filter(_.getName.startsWith("part-")).foreach {
-      f => f.setLastModified(1700000000000L + 4 * 60000L)
-    }
+    BoundedStream.writeSlice(sentinel, s"$stage/b4", 4)
   }
 
   private def runSessionWindows(s: SparkSession, sfDir: String, scratch: String, resultOut: String): Unit = {
@@ -1028,14 +972,10 @@ object StreamingQueries {
       (5, "click", -2L, t1 + 110L * 3600 * 1000),
       (6, "view", -3L, t1 + 100L * 3600 * 1000 + 60000L)
     ).foreach { case (i, typ, uid, ms) =>
-      val dir = s"$stage/b$i"
-      s.range(1).select(
+      BoundedStream.writeSlice(s.range(1).select(
           timestamp_millis(lit(ms)).as("ts"), lit(typ).as("event_type"),
-          lit(0.0).as("value"), lit(uid).as("user_id"), lit(-i.toLong).as("event_id"))
-        .coalesce(1).write.mode("overwrite").parquet(dir)
-      new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-")).foreach {
-        f => f.setLastModified(1700000000000L + i * 60000L)
-      }
+          lit(0.0).as("value"), lit(uid).as("user_id"), lit(-i.toLong).as("event_id")),
+        s"$stage/b$i", i)
     }
     val out = s"$scratch/matches"
     val views = eventStream(s, glob).filter(col("event_type") === "view")
@@ -1068,12 +1008,8 @@ object StreamingQueries {
       .withColumn("slice", least(lit(3),
         floor((col("doc_id") - col("d0")) * 4 / (col("d1") - col("d0") + 1)).cast("int")))
     (0 until 4).foreach { i =>
-      val dir = s"$stage/b$i"
-      sliced.filter(col("slice") === i).drop("slice", "d0", "d1")
-        .coalesce(1).write.mode("overwrite").parquet(dir)
-      new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-")).foreach {
-        f => f.setLastModified(1700000000000L + i * 60000L)
-      }
+      BoundedStream.writeSlice(sliced.filter(col("slice") === i).drop("slice", "d0", "d1"),
+        s"$stage/b$i", i)
     }
     stage + "/b*/part-*.parquet"
   }
@@ -1131,21 +1067,15 @@ object StreamingQueries {
     */
   private def runScd2SchemaDrift(s: SparkSession, sfDir: String, scratch: String, resultOut: String): Unit = {
     val dir = EnvelopeQueries.buildDriftLake(s)
-    val out = s"$scratch/emissions"
-    runIncrementalScd2(s, scratch, out, Scd2Streaming.readEnvelopeStream(
+    // the drifted attr must surface NULL for every gen1 version and the
+    // generated value for gen2
+    runIncrementalScd2(s, scratch, Scd2Streaming.readEnvelopeStream(
       s, dir + "/gen*/part-*", EnvelopeQueries.productsRowV2, maxFilesPerTrigger = 1),
       Seq("name", "category"))
-    // last emission per (id, lsn) wins; the drifted attr must surface
-    // NULL for every gen1 version and the generated value for gen2
-    s.read.parquet(out)
-      .groupBy(col("id"), col("lsn").as("log_seq_num"))
-      .agg(max_by(
-        struct(col("rowValidStartMs"), col("rowValidExpirationMs"), col("attrs")),
-        col("batch_id")).as("v"))
-      .select(col("id"), col("log_seq_num"),
-        element_at(col("v.attrs"), "category").as("category"),
-        col("v.rowValidStartMs").as("valid_from_ms"),
-        col("v.rowValidExpirationMs").as("valid_to_ms"))
+      .select(col("id"), col("lsn").as("log_seq_num"),
+        element_at(col("attrs"), "category").as("category"),
+        col("rowValidStartMs").as("valid_from_ms"),
+        col("rowValidExpirationMs").as("valid_to_ms"))
       .coalesce(1).write.mode("overwrite").parquet(resultOut)
   }
 
@@ -1211,7 +1141,7 @@ object StreamingQueries {
     // hash-fails.
     QueryDef(
       "streaming_session_windows",
-      (s, d) => cachedStream(s, "streaming_session_windows", d)(runSessionWindows(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_session_windows", d)(runSessionWindows(s, d, _, _)),
       Some("""WITH e AS (
              |  SELECT user_id, ts, value,
              |    LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts
@@ -1243,7 +1173,7 @@ object StreamingQueries {
     // late pane extends it, or split across triggers, hash-fails.
     QueryDef(
       "streaming_path_funnel",
-      (s, d) => cachedStream(s, "streaming_path_funnel", d)(runSessionPaths(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_path_funnel", d)(runSessionPaths(s, d, _, _)),
       Some("""WITH e AS (
              |  SELECT user_id, ts, event_id, event_type,
              |    LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
@@ -1286,7 +1216,7 @@ object StreamingQueries {
     // dedup, late-drop) hash-fails against the plain table.
     QueryDef(
       "streaming_exactly_once_dedup",
-      (s, d) => cachedStream(s, "streaming_exactly_once_dedup", d)(runAtLeastOnceDedup(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_exactly_once_dedup", d)(runAtLeastOnceDedup(s, d, _, _)),
       Some("SELECT event_id, user_id, ts, event_type, value FROM events"),
       bench = false, sideEffecting = true),
 
@@ -1295,7 +1225,7 @@ object StreamingQueries {
     // cross-trigger replay) hash-fails.
     QueryDef(
       "streaming_click_attribution",
-      (s, d) => cachedStream(s, "streaming_click_attribution", d)(runStreamJoin(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_click_attribution", d)(runStreamJoin(s, d, _, _)),
       Some("""SELECT v.user_id, v.event_id AS view_id, c.event_id AS click_id
              |FROM events v JOIN events c
              |  ON v.user_id = c.user_id
@@ -1312,7 +1242,7 @@ object StreamingQueries {
     // slices make the outer flush deterministic under AvailableNow.
     QueryDef(
       "streaming_left_join_outer",
-      (s, d) => cachedStream(s, "streaming_left_join_outer", d)(runStreamLeftJoin(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_left_join_outer", d)(runStreamLeftJoin(s, d, _, _)),
       Some("""SELECT v.user_id, v.event_id AS view_id, c.event_id AS click_id
              |FROM events v LEFT JOIN events c
              |  ON v.user_id = c.user_id AND c.event_type = 'click'
@@ -1328,7 +1258,7 @@ object StreamingQueries {
     // bug all hash-fail. See runLshDedupIngest / StatefulAgg.BandOwner.
     QueryDef(
       "streaming_lsh_dedup_ingest",
-      (s, d) => cachedStream(s, "streaming_lsh_dedup_ingest", d)(runLshDedupIngest(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_lsh_dedup_ingest", d)(runLshDedupIngest(s, d, _, _)),
       Some(s"""${DedupQueries.candidatesCte},
               |firsts AS (SELECT band, min(doc_id) AS first_doc
               |           FROM bands GROUP BY band)
@@ -1355,7 +1285,7 @@ object StreamingQueries {
     // past it), or depended on batch boundaries hash-fails.
     QueryDef(
       "streaming_lsh_dedup_ttl",
-      (s, d) => cachedStream(s, "streaming_lsh_dedup_ttl", d)(runLshDedupTtl(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_lsh_dedup_ttl", d)(runLshDedupTtl(s, d, _, _)),
       Some(s"""${DedupQueries.candidatesCte},
               |seqd AS (SELECT doc_id, band,
               |           LAG(doc_id) OVER (PARTITION BY band ORDER BY doc_id)
@@ -1376,7 +1306,7 @@ object StreamingQueries {
     // bug in the streaming path hash-fails independently of the batch one.
     QueryDef(
       "streaming_window_counts",
-      (s, d) => cachedStream(s, "streaming_window_counts", d)(runWindowCounts(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_window_counts", d)(runWindowCounts(s, d, _, _)),
       Some("""SELECT date_trunc('hour', ts) AS hour_start, event_type,
              |  count(*) AS n_events,
              |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
@@ -1390,7 +1320,7 @@ object StreamingQueries {
     // arithmetic oracle.
     QueryDef(
       "streaming_hopping_counts",
-      (s, d) => cachedStream(s, "streaming_hopping_counts", d)(runHoppingCounts(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_hopping_counts", d)(runHoppingCounts(s, d, _, _)),
       Some("""SELECT make_timestamp((epoch_us(ts) // 900000000 - k) * 900000000)
              |    AS window_start,
              |  event_type, count(*) AS n_events,
@@ -1410,7 +1340,7 @@ object StreamingQueries {
     // hash-fails the nano-quantized term.
     QueryDef(
       "streaming_drift_psi",
-      (s, d) => cachedStream(s, "streaming_drift_psi", d)(runDriftPsi(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_drift_psi", d)(runDriftPsi(s, d, _, _)),
       Some("""WITH ev AS (
              |  SELECT CAST(least(floor(value / 50.0), 9) AS BIGINT) AS bin,
              |    CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 1 ELSE 0 END AS is_ref
@@ -1435,7 +1365,7 @@ object StreamingQueries {
 
     QueryDef(
       "streaming_drift_tvd",
-      (s, d) => cachedStream(s, "streaming_drift_tvd", d)(runDriftTvd(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_drift_tvd", d)(runDriftTvd(s, d, _, _)),
       Some("""WITH ev AS (
              |  SELECT CAST(least(floor(value / 50.0), 9) AS BIGINT) AS bin,
              |    CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 1 ELSE 0 END AS is_ref
@@ -1459,7 +1389,7 @@ object StreamingQueries {
     // must merge correctly across micro-batches (bars span triggers).
     QueryDef(
       "streaming_ohlc_snapshot",
-      (s, d) => cachedStream(s, "streaming_ohlc_snapshot", d)(runOhlc(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_ohlc_snapshot", d)(runOhlc(s, d, _, _)),
       Some("""WITH r AS (
              |  SELECT event_type, CAST(ts AS DATE) AS day, value,
              |    ROW_NUMBER() OVER (PARTITION BY event_type, CAST(ts AS DATE)
@@ -1480,7 +1410,7 @@ object StreamingQueries {
     // any event across micro-batches.
     QueryDef(
       "streaming_dim_enrich",
-      (s, d) => cachedStream(s, "streaming_dim_enrich", d)(runDimEnrich(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_dim_enrich", d)(runDimEnrich(s, d, _, _)),
       Some("""SELECT c_mktsegment, event_type, count(*) AS n_events,
              |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
              |FROM events JOIN customer ON user_id = c_custkey
@@ -1494,7 +1424,7 @@ object StreamingQueries {
     // triggers (duplicate emitted twice, wrong canonical) hash-fails.
     QueryDef(
       "streaming_dedup_firstseen",
-      (s, d) => cachedStream(s, "streaming_dedup_firstseen", d)(runFirstSeenDedup(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_dedup_firstseen", d)(runFirstSeenDedup(s, d, _, _)),
       Some("""WITH h AS (
              |  SELECT doc_id,
              |    md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS content_hash,
@@ -1511,7 +1441,7 @@ object StreamingQueries {
     // row lost across triggers (or a double-applied batch) hash-fails.
     QueryDef(
       "streaming_stateful_agg",
-      (s, d) => cachedStream(s, "streaming_stateful_agg", d)(runStatefulAgg(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_stateful_agg", d)(runStatefulAgg(s, d, _, _)),
       Some("""SELECT user_id, count(*) AS n_events,
              |  CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS sum_cents
              |FROM events GROUP BY user_id""".stripMargin),
@@ -1526,7 +1456,7 @@ object StreamingQueries {
     // GROUP BY oracle.
     QueryDef(
       "streaming_timer_day_close",
-      (s, d) => cachedStream(s, "streaming_timer_day_close", d)(runTimerDayClose(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_timer_day_close", d)(runTimerDayClose(s, d, _, _)),
       Some("""SELECT user_id,
              |  CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT)
              |    AS dnum,
@@ -1545,7 +1475,7 @@ object StreamingQueries {
     // batch row and hash-fails.
     QueryDef(
       "streaming_state_ttl_audit",
-      (s, d) => cachedStream(s, "streaming_state_ttl_audit", d)(runStateTtlAudit(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_state_ttl_audit", d)(runStateTtlAudit(s, d, _, _)),
       Some("""WITH ev AS (
              |  SELECT user_id, epoch_ms(CAST(ts AS TIMESTAMP)) AS ms,
              |    CAST(floor(epoch_ms(CAST(ts AS TIMESTAMP)) / 86400000) AS BIGINT) AS dnum
@@ -1591,7 +1521,7 @@ object StreamingQueries {
     // flips the boolean against the exact recompute.
     QueryDef(
       "streaming_hll_maintain",
-      (s, d) => cachedStream(s, "streaming_hll_maintain", d)(runHllMaintain(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_hll_maintain", d)(runHllMaintain(s, d, _, _)),
       Some("""SELECT event_type,
              |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact,
              |  TRUE AS within_tol
@@ -1604,7 +1534,7 @@ object StreamingQueries {
     // joined string and hash-fails.
     QueryDef(
       "streaming_lastn_events",
-      (s, d) => cachedStream(s, "streaming_lastn_events", d)(runLastN(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_lastn_events", d)(runLastN(s, d, _, _)),
       Some("""WITH r AS (
              |  SELECT user_id, event_id, event_type,
              |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY event_id DESC)
@@ -1623,7 +1553,7 @@ object StreamingQueries {
     // exact batch recompute.
     QueryDef(
       "streaming_distinct_maintain",
-      (s, d) => cachedStream(s, "streaming_distinct_maintain", d)(runDistinctMaintain(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_distinct_maintain", d)(runDistinctMaintain(s, d, _, _)),
       Some("""SELECT event_type,
              |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_distinct
              |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
@@ -1635,7 +1565,7 @@ object StreamingQueries {
     // replay that slips the LSN guard breaks the count — each hash-fails.
     QueryDef(
       "streaming_changelog_agg",
-      (s, d) => cachedStream(s, "streaming_changelog_agg", d)(runChangelogAgg(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_changelog_agg", d)(runChangelogAgg(s, d, _, _)),
       Some("""WITH cur AS (
              |  SELECT user_id, arg_max(event_type, event_id) AS event_type,
              |    arg_max(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT), event_id) AS cents
@@ -1652,29 +1582,38 @@ object StreamingQueries {
     // maintenance is checked independently of the batch window).
     QueryDef(
       "streaming_current_state",
-      (s, d) => cachedStream(s, "streaming_current_state", d)(runCurrentState(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_current_state", d)(runCurrentState(s, d, _, _)),
       Some("""SELECT user_id, event_id, event_type, value, ts
              |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
              |      FROM events) WHERE rn = 1""".stripMargin),
       bench = false, sideEffecting = true),
 
-    // Mode-2 equivalence: the maintained history after the last trigger
-    // must equal the reference's batch SCD2 over the full lake — the SAME
-    // oracle text as cdc_envelope_scd2, so any divergence between the
-    // incremental maintenance and the batch semantics hash-fails here.
+    // Streaming ≡ batch, full history: the converged history of the
+    // incremental stream, each attribute cast back from the state's string
+    // map to its products-row type, must equal the reference's batch SCD2
+    // over the full lake — the SAME oracle text as cdc_envelope_scd2, so
+    // any divergence between the incremental maintenance and the batch
+    // semantics hash-fails here.
     QueryDef(
       "streaming_scd2_rebuild",
-      (s, d) => cachedStream(s, "streaming_scd2_rebuild", d)(runTouchedKeys(s, d, _, _)),
+      (s, d) => scd2Converged(s, d).select(col("id") +:
+        ProductAttrs.map(f => col("attrs")(f.name).cast(f.dataType).as(f.name)) :+
+        timestamp_millis(col("rowValidStartMs")).cast("timestamp_ntz")
+          .as("row_valid_start_timestamp") :+
+        timestamp_millis(col("rowValidExpirationMs")).cast("timestamp_ntz")
+          .as("row_valid_expiration_timestamp"): _*),
       Some(EnvelopeQueries.scd2HistoryOracleSql),
       bench = false, sideEffecting = true),
 
-    // Mode-3 equivalence: the converged (id, lsn) validity chain from
-    // flatMapGroupsWithState state must equal the batch window over the
-    // same events. Millisecond-integer intervals keep the compare exact
-    // and attr-free (attrs are checked by the mode-2 query above).
+    // Streaming ≡ batch, validity chain: the converged (id, lsn) chain of
+    // the same run must equal the batch window over the same events.
+    // Millisecond-integer intervals keep the compare exact and attr-free
+    // (attrs are checked by streaming_scd2_rebuild above).
     QueryDef(
       "streaming_scd2_incremental",
-      (s, d) => cachedStream(s, "streaming_scd2_incremental", d)(runIncremental(s, d, _, _)),
+      (s, d) => scd2Converged(s, d).select(col("id"), col("lsn").as("log_seq_num"),
+        col("rowValidStartMs").as("valid_from_ms"),
+        col("rowValidExpirationMs").as("valid_to_ms")),
       Some(
         s"""WITH ev AS (
            |  SELECT
@@ -1702,7 +1641,7 @@ object StreamingQueries {
     // or state that loses the new attr across triggers all hash-fail.
     QueryDef(
       "streaming_scd2_schema_drift",
-      (s, d) => cachedStream(s, "streaming_scd2_schema_drift", d)(runScd2SchemaDrift(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_scd2_schema_drift", d)(runScd2SchemaDrift(s, d, _, _)),
       Some(
         s"""WITH ev AS (
            |  SELECT
@@ -1727,7 +1666,7 @@ object StreamingQueries {
     // oracle as the batch cms_frequency_audit.
     QueryDef(
       "streaming_cms_maintain",
-      (s, d) => cachedStream(s, "streaming_cms_maintain", d)(runCmsMaintain(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_cms_maintain", d)(runCmsMaintain(s, d, _, _)),
       Some("""WITH tc AS (
              |  SELECT tok, count(*) AS n
              |  FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
@@ -1765,7 +1704,7 @@ object StreamingQueries {
     // The oracle is the batch rollup minus precisely the stale class.
     QueryDef(
       "streaming_late_data_audit",
-      (s, d) => cachedStream(s, "streaming_late_data_audit", d)(runLateDataAudit(s, d, _, _)),
+      (s, d) => cachedRun(s, "streaming_late_data_audit", d)(runLateDataAudit(s, d, _, _)),
       Some(s"""WITH bounds AS (
               |  SELECT min(epoch_us(ts) // 1000) AS t0, max(epoch_us(ts) // 1000) AS t1
               |  FROM events),

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 /** The one way a stream in this repo is run: drain everything the source
@@ -25,4 +25,15 @@ object BoundedStream {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()
+
+  /** Stage slice `i` of a replay lake: write `df` as one `format` file
+    * under `dir` and pin its mtime to the slice's place in the replay. The
+    * file source orders new files by modification time, so with one file
+    * per trigger the slice order is the trigger order.
+    */
+  def writeSlice(df: DataFrame, dir: String, i: Int, format: String = "parquet"): Unit = {
+    df.coalesce(1).write.mode("overwrite").format(format).save(dir)
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+      .foreach(_.setLastModified(1700000000000L + i * 60000L))
+  }
 }

@@ -10,10 +10,10 @@ import org.apache.spark.sql.functions._
   * Each micro-batch is collapsed to its net change per key (argmax by the
   * LSN-analogue — the CDC upsert set) and merged into a state table kept
   * in the lake as numbered GENERATIONS (`$base/gen-<batchId>`), newest
-  * complete generation wins. Unlike executor-cached state
-  * ([[Scd2Streaming.TouchedKeysMaintainer]]), this survives process death:
-  * recovery lists the generations and resumes from the newest COMPLETE one
-  * (Spark's job commit writes `_SUCCESS` last, so a generation torn by a
+  * complete generation wins. Unlike state held in executor cache or
+  * `localCheckpoint` blocks, this survives process death: recovery lists
+  * the generations and resumes from the newest COMPLETE one (Spark's job
+  * commit writes `_SUCCESS` last, so a generation torn by a
   * crash mid-write is skipped). A replayed micro-batch — the
   * at-least-once window between a generation commit and the checkpoint
   * offset commit — is EXACTLY-ONCE by construction: a complete

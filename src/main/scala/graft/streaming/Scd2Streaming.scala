@@ -11,26 +11,21 @@ import org.apache.spark.sql.types.StructType
   *
   * The reference's compute is a batch rebuild re-run over the whole lake
   * (duckdb/Dockerfile:8-9 runs transform_scd2.py once per container start);
-  * its *transport* is continuous (Debezium → Kafka → S3). We provide two
-  * incremental modes, numbered after mode 1, the reference's own full
-  * rebuild (the batch [[graft.cdc.Scd2.transform]], re-run per trigger):
+  * its *transport* is continuous (Debezium → Kafka → S3). That batch
+  * rebuild ([[graft.cdc.Scd2.transform]]) is mode 1; this object holds the
+  * one incremental version of it, mode 3, [[incremental]]: per-key
+  * streaming state (transformWithState through [[Scd2Processor]]) holds
+  * each key's event log, bounded by retention, and re-emits corrected
+  * versions when late or out-of-order events arrive. Offsets and state
+  * live in the checkpoint, so a restarted stream resumes where it stopped;
+  * (id, lsn) dedupe makes redelivery harmless. [[converged]] reads the
+  * history back from the emissions.
   *
-  *  2. [[touchedKeysRebuild]] — rebuild restricted to keys present in
-  *     the micro-batch: union(batch events, prior history of touched keys'
-  *     events) re-versionized, other keys' rows carried over untouched.
-  *     At 100 TB this touches O(batch keys · versions), not O(table).
-  *  3. [[incremental]] — true per-key streaming state
-  *     (transformWithState through [[Scd2Processor]]): holds each key's
-  *     event log (bounded by retention) and re-emits corrected versions
-  *     when late/out-of-order events arrive. Exactly-once via checkpoint +
-  *     (id, lsn) dedupe.
+  * The stream consumes the change events of [[graft.cdc.Scd2.cdcEvents]],
+  * typed through the one envelope → event projection [[keyEvents]]. Every
+  * stream here is run by [[BoundedStream.start]].
   *
-  * All modes consume the same parsed change-event schema produced by
-  * [[graft.cdc.Scd2.cdcEvents]]; mode 3 takes it typed, through the one
-  * envelope → event projection [[keyEvents]]. Every stream here is run by
-  * [[BoundedStream.start]].
-  *
-  * Mode 3's fixed cost per state partition and trigger is kept small in
+  * The fixed cost per state partition and trigger is kept small in
   * three places: [[incremental]] groups by the `id` column, so the scan
   * never deserializes an event just to read its key; the processor's state
   * encoder is derived once per JVM in its companion object, not in every
@@ -104,118 +99,7 @@ object Scd2Streaming {
         .load(),
       rowSchema)
 
-  /** Mode 2: touched-keys rebuild. `priorEvents` is the retained event log
-    * (parquet, partitioned by key-hash bucket — only partitions containing
-    * batch keys are re-read); `priorHistory` (None on the first batch) is
-    * the current SCD2 table, whose untouched-key rows are carried over
-    * verbatim so the output is the complete new table.
-    */
-  def touchedKeysRebuild(batchEvents: DataFrame, priorEvents: DataFrame,
-                         priorHistory: Option[DataFrame],
-                         attrFields: Seq[String]): DataFrame = {
-    val touched = batchEvents.select("id").distinct()
-    val replay = priorEvents.join(touched, Seq("id"), "left_semi")
-      .unionByName(batchEvents)
-    val rebuilt = Scd2.history(Scd2.rankedEvents(Scd2.dedupeEvents(replay)), attrFields)
-    priorHistory match {
-      case Some(h) => h.join(touched, Seq("id"), "left_anti").unionByName(rebuilt)
-      case None => rebuilt
-    }
-  }
-
-  /** Driver-side state for the touched-keys mode, safe for long-running
-    * streams: owns the caches it creates and unpersists each superseded
-    * history generation after the new one is materialized, so executor
-    * storage stays O(current history + event log) instead of growing per
-    * trigger. The retained event log is `localCheckpoint`ed (eager) each
-    * batch, which also truncates lineage — a plain cache chain deepens the
-    * logical plan every trigger and never frees the superseded blocks.
-    *
-    * localCheckpoint trade-off (documented Spark contract): checkpointed
-    * blocks die with their executor, so a lost executor fails the stream
-    * instead of recomputing — acceptable for a demo/driver-local maintainer;
-    * a production deployment would persist the event log to reliable
-    * storage (see [[writeBatchIdempotent]]).
-    */
-  final class TouchedKeysMaintainer(attrFields: Seq[String]) {
-    private var historyDf: Option[DataFrame] = None
-    private var eventLogDf: Option[DataFrame] = None
-    // The RDD backing each localCheckpoint'd event-log generation.
-    // `Dataset.unpersist()` only releases cache-manager entries, not
-    // checkpoint blocks, so superseded generations must be freed through
-    // the checkpointed RDD itself — otherwise their blocks linger until
-    // the ContextCleaner GCs the old DataFrame and storage transiently
-    // exceeds the documented O(current history + event log) bound
-    // (ADVICE r3).
-    private var eventLogRdd: Option[org.apache.spark.rdd.RDD[_]] = None
-
-    /** Consume one micro-batch of raw envelopes.
-      *
-      * Recovery contract (sharpened by the eager free below — ADVICE r4):
-      * the new history `h` is cached and counted here, but its LINEAGE is
-      * rooted in the previous generation's localCheckpoint RDD, whose
-      * blocks this step frees. If `h`'s cached blocks are later lost
-      * (executor death), recomputation fails rather than recovering —
-      * there is no recovery path, by design: this maintainer trades
-      * fault-tolerance for bounded storage on a driver-local stream (see
-      * the class doc). Deployments needing recovery must persist each
-      * generation to reliable storage ([[writeBatchIdempotent]]) instead.
-      */
-    def step(batchEnvelopes: DataFrame): Unit = {
-      val be = Scd2.cdcEvents(batchEnvelopes).filter(col("id").isNotNull)
-      val prior = eventLogDf.getOrElse(be.limit(0))
-      val h = touchedKeysRebuild(be, prior, historyDf, attrFields).cache()
-      h.count() // materialize before releasing the generation it was built from
-      val log = prior.unionByName(be)
-        .dropDuplicates("id", "log_seq_num").localCheckpoint() // eager: materialized here
-      val logRdd = log.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
-        case _ => None // plan shape changed under us: skip eager free, ContextCleaner still reclaims
-      }
-      historyDf.foreach(_.unpersist())
-      eventLogRdd.foreach(_.unpersist(blocking = false))
-      historyDf = Some(h)
-      eventLogDf = Some(log)
-      eventLogRdd = logRdd
-    }
-
-    /** Current SCD2 history (None before the first batch). */
-    def history: Option[DataFrame] = historyDf
-
-    /** Retained deduped event log (None before the first batch). */
-    def eventLog: Option[DataFrame] = eventLogDf
-
-    /** Release all retained executor storage (history cache + event-log
-      * checkpoint blocks). The history must be materialized elsewhere
-      * first: its lineage roots in the checkpointed log, so after release
-      * it is NOT recomputable.
-      */
-    def release(): Unit = {
-      historyDf.foreach(_.unpersist())
-      eventLogRdd.foreach(_.unpersist(blocking = false))
-      historyDf = None; eventLogDf = None; eventLogRdd = None
-    }
-  }
-
-  /** Idempotent micro-batch sink: each batch lands in `basePath/batch=<id>`
-    * and a batch already marked complete (`_SUCCESS` present) is skipped —
-    * so foreachBatch replays after a failure/restart write nothing twice.
-    * Combined with checkpointing (offsets) and (id, lsn) dedupe upstream,
-    * this is the end-to-end exactly-once story the reference's S3 sink
-    * claims (plugins/kafka-connect-s3/manifest.json:6, SURVEY.md §2.8).
-    * Returns true if the batch was written, false if skipped.
-    */
-  def writeBatchIdempotent(batch: DataFrame, batchId: Long, basePath: String): Boolean = {
-    val dir = new org.apache.hadoop.fs.Path(s"$basePath/batch=$batchId")
-    val fs = dir.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) false
-    else {
-      batch.write.mode("overwrite").parquet(dir.toString)
-      true
-    }
-  }
-
-  // ---- Mode 3: true incremental state -----------------------------------
+  // ---- Mode 3: per-key incremental state --------------------------------
 
   /** One parsed change event, typed for stateful processing. */
   case class KeyEvent(id: Int, lsn: Long, tsMs: Long,
@@ -333,7 +217,7 @@ object Scd2Streaming {
     private val StateEncoder: Encoder[KeyState] = Encoders.product[KeyState]
   }
 
-  /** Mode 3 entry: typed event stream → corrected version-row stream,
+  /** Mode 3: typed event stream → corrected version-row stream,
     * on the transformWithState (state v2) surface. Grouped by the `id`
     * column rather than a `_.id` lambda, which would deserialize every
     * event (its `attrs` map included) in the scan stage to read one int
@@ -346,5 +230,19 @@ object Scd2Streaming {
       .groupBy(col("id")).as[Int, KeyEvent]
       .transformWithState(new Scd2Processor(retentionMs),
         TimeMode.None(), OutputMode.Append())
+  }
+
+  /** The converged history from a sink of [[incremental]]'s emissions,
+    * each row a [[VersionRow]] plus the `batch_id` that emitted it: the
+    * last emission per (id, lsn), since a later batch re-emits the
+    * corrected interval of a version it reopened. One `max_by` per
+    * version, no window. Returns `id`, `lsn` and the remaining
+    * [[VersionRow]] columns.
+    */
+  def converged(emissions: DataFrame): DataFrame = {
+    val rest = emissions.columns.filterNot(Set("id", "lsn", "batch_id"))
+    emissions.groupBy(col("id"), col("lsn"))
+      .agg(max_by(struct(rest.map(col): _*), col("batch_id")).as("v"))
+      .select(col("id") +: col("lsn") +: rest.map(c => col(s"v.$c").as(c)): _*)
   }
 }

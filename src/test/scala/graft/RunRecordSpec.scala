@@ -26,16 +26,17 @@ class RunRecordSpec extends AnyFunSuite {
     (0 until 4).map(i => BatchStat(i, 100, 1000, 10, 640)))
   private val recovery = StreamingThroughput.RecoveryResult(2, 1, 3, 1.234, 2000, 2000, 200, 200)
 
-  private def benchRecord(withSections: Boolean) = Bench.record(oddPath,
-    Seq(run("q1_pricing_summary", 1.5, mb = 2.04), run("broken", -1.0, error = Some("X: y"))), 12.34,
-    Option.when(withSections)(Bench.Section(Map(
-      "big" -> ScaleSmoke.SmokeMeasure(1.5, 45.0, 12.34, Seq("hit")),
-      "small" -> ScaleSmoke.SmokeMeasure(0.2, 1.0, 0.5, Nil)), 3.0, 20.0)),
-    Option.when(withSections)(Bench.Section(Seq(
-      "probe" -> SkewStress.SkewMeasure(0.5, -1.0, 100, 50, 8)), 2.0, 10.0)),
-    Option.when(withSections)(Bench.Section(
-      RunMeter.Run("streaming", 5.0, Right((Seq(leg), Some(recovery))), 0L, Map.empty, Nil),
-      0.0, 5.0)))
+  private def benchRecord(withSections: Boolean, sf: String = oddPath, q1S: Double = 1.5) =
+    Bench.record(sf,
+      Seq(run("q1_pricing_summary", q1S, mb = 2.04), run("broken", -1.0, error = Some("X: y"))), 12.34,
+      Option.when(withSections)(Bench.Section(Map(
+        "big" -> ScaleSmoke.SmokeMeasure(1.5, 45.0, 12.34, Seq("hit")),
+        "small" -> ScaleSmoke.SmokeMeasure(0.2, 1.0, 0.5, Nil)), 3.0, 20.0)),
+      Option.when(withSections)(Bench.Section(Seq(
+        "probe" -> SkewStress.SkewMeasure(0.5, -1.0, 100, 50, 8)), 2.0, 10.0)),
+      Option.when(withSections)(Bench.Section(
+        RunMeter.Run("streaming", 5.0, Right((Seq(leg), Some(recovery))), 0L, Map.empty, Nil),
+        0.0, 5.0)))
 
   test("the Bench record keeps its key order and escapes the lake path") {
     val (rec, failed) = benchRecord(withSections = true)
@@ -68,6 +69,26 @@ class RunRecordSpec extends AnyFunSuite {
     assert(keys(parse(Json.write(rec))) == Seq("metric", "value", "unit", "queries",
       "shuffle_mb", "failed", "errors", "sf", "box_factor", "wall", "worst10"))
     assert(failed == Seq("broken"))
+  }
+
+  test("box_factor reads no canary on a lake other than sf0.1") {
+    val js = parse(Json.write(benchRecord(withSections = true, sf = "/data/lakes/sf0.001",
+      q1S = 2.922)._1))
+    val bf = js.get("box_factor")
+    assert(keys(bf) == Seq("ref", "median", "per_canary", "missing"))
+    assert(bf.get("median").asDouble == -1.0)
+    assert(keys(bf.get("per_canary")).isEmpty)
+    assert(js.get("skew").get("floor_relax").asDouble == 1.0)
+  }
+
+  test("box_factor reads the canaries on the sf0.1 lake") {
+    val js = parse(Json.write(benchRecord(withSections = true, sf = "/data/lakes/sf0.1/",
+      q1S = 2.922)._1))
+    val bf = js.get("box_factor")
+    assert(keys(bf) == Seq("ref", "median", "per_canary", "missing"))
+    assert(bf.get("median").asDouble == 2.0)
+    assert(keys(bf.get("per_canary")) == Seq("q1_pricing_summary"))
+    assert(js.get("skew").get("floor_relax").asDouble == 2.0)
   }
 
   test("a failed streaming section is recorded with its error") {

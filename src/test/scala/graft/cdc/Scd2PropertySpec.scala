@@ -125,7 +125,7 @@ class Scd2PropertySpec extends SparkSuite {
       val lines = envelopeGen(image)(Gen.Parameters.default, Seed(seed.toLong)).getOrElse(Nil)
       val batches = microBatches(lines, new scala.util.Random(seed))
 
-      val emitted = scala.collection.mutable.ArrayBuffer[(Long, Scd2Streaming.VersionRow)]()
+      val sink = SparkSuite.scratchDir("scd2-prop-sink") + "/emissions"
       GraftSession.withConf(spark, GraftSession.RocksDbStateStore) {
         val input = MemoryStream[String]
         val versions = Scd2Streaming.incremental(Scd2Streaming.keyEvents(
@@ -133,16 +133,14 @@ class Scd2PropertySpec extends SparkSuite {
         val q = versions.writeStream
           .option("checkpointLocation", SparkSuite.scratchDir("scd2-prop-ckpt"))
           .foreachBatch { (b: org.apache.spark.sql.Dataset[Scd2Streaming.VersionRow], id: Long) =>
-            val rows = b.collect()
-            emitted.synchronized(emitted ++= rows.map(id -> _))
-            ()
+            b.withColumn("batch_id", lit(id)).write.mode("append").parquet(sink)
           }.start()
         try batches.foreach { chunk => input.addData(chunk); q.processAllAvailable() }
         finally q.stop()
       }
       val batch = Scd2PropertySpec.rebuilt(
         Scd2Streaming.parseKafkaValue(lines.toDF("value"), rowSchema), attrs)
-      assert(Scd2PropertySpec.converged(emitted.toSeq, attrs) == batch,
+      assert(Scd2PropertySpec.converged(spark.read.parquet(sink), attrs) == batch,
         s"seed=$seed batches=${batches.map(_.size)}: stream did not converge to the batch rebuild")
     }
   }
@@ -161,15 +159,17 @@ class Scd2PropertySpec extends SparkSuite {
 object Scd2PropertySpec {
   type Version = (Int, List[String], Long, Long) // id, attrs, start ms, end ms
 
-  /** The stream's converged history from its (batch id, row) emissions:
-    * the last emission per (id, lsn), since later batches re-emit
-    * corrected intervals.
+  /** The stream's converged history ([[Scd2Streaming.converged]]) from
+    * its emissions, each with its `batch_id`.
     */
-  def converged(emitted: Seq[(Long, Scd2Streaming.VersionRow)], attrs: Seq[String]): Seq[Version] =
-    emitted.groupBy { case (_, r) => (r.id, r.lsn) }.values
-      .map(_.maxBy(_._1)._2)
-      .map(r => (r.id, attrs.map(r.attrs(_)).toList, r.rowValidStartMs, r.rowValidExpirationMs))
-      .toSeq.sortBy(_.toString)
+  def converged(emissions: DataFrame, attrs: Seq[String]): Seq[Version] =
+    Scd2Streaming.converged(emissions)
+      .select(col("id") +: attrs.map(a => col("attrs")(a)) :+
+        col("rowValidStartMs") :+ col("rowValidExpirationMs"): _*)
+      .collect().toSeq
+      .map(r => (r.getInt(0), attrs.indices.map(i => r.getString(i + 1)).toList,
+        r.getLong(attrs.size + 1), r.getLong(attrs.size + 2)))
+      .sortBy(_.toString)
 
   /** The batch [[Scd2.transform]] of `envelopes`, in the same form. */
   def rebuilt(envelopes: DataFrame, attrs: Seq[String]): Seq[Version] =

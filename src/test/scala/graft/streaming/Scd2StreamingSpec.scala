@@ -4,6 +4,7 @@ import graft.{GraftSession, SparkSuite}
 import graft.cdc.{CdcSchemas, EnvelopeReader, Scd2, Scd2PropertySpec}
 import graft.cdc.CdcFixtures._
 
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -30,95 +31,85 @@ class Scd2StreamingSpec extends SparkSuite {
   private def withRocksDb[A](body: => A): A =
     GraftSession.withConf(spark, GraftSession.RocksDbStateStore)(body)
 
+  /** foreachBatch sink of the incremental stream: every emission is
+    * appended to `sink` with the id of the batch that emitted it, the
+    * input [[Scd2Streaming.converged]] reads.
+    */
+  private def appendTo(sink: String)(b: Dataset[Scd2Streaming.VersionRow], id: Long): Unit =
+    b.withColumn("batch_id", lit(id)).write.mode("append").parquet(sink)
+
   test("file-stream foreachBatch touched-keys rebuild == batch rebuild") {
+    // each micro-batch re-versions only the keys it touches, in per-key
+    // state; the converged emissions must equal the batch rebuild
     val lakeDir = tempDir("streamlake")
     writeLake(lakeDir, batch1)
 
     val attrs = Seq("name", "description", "price")
-    val maintainer = new Scd2Streaming.TouchedKeysMaintainer(attrs)
-    val stream = Scd2Streaming.readEnvelopeStream(
-      spark, lakeDir.getAbsolutePath, CdcSchemas.productsRow, maxFilesPerTrigger = 1)
-    val q = stream.writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-      maintainer.step(b)
-    }.start()
-    q.processAllAvailable()
-    writeLake(lakeDir, batch2, day = 13)
-    q.processAllAvailable()
-    q.stop()
+    val sink = SparkSuite.scratchDir("touched-sink") + "/emissions"
+    withRocksDb {
+      val versions = Scd2Streaming.incremental(Scd2Streaming.keyEvents(
+        Scd2Streaming.readEnvelopeStream(
+          spark, lakeDir.getAbsolutePath, CdcSchemas.productsRow, maxFilesPerTrigger = 1),
+        attrs))
+      val q = versions.writeStream
+        .option("checkpointLocation", SparkSuite.scratchDir("touched-ckpt"))
+        .foreachBatch(appendTo(sink) _).start()
+      q.processAllAvailable()
+      writeLake(lakeDir, batch2, day = 13)
+      q.processAllAvailable()
+      q.stop()
+    }
 
-    val batchOut = Scd2.transform(
+    val batchOut = Scd2PropertySpec.rebuilt(
       EnvelopeReader.readEnvelopes(spark, lakeDir.getAbsolutePath, CdcSchemas.productsRow),
       attrs)
-    val a = maintainer.history.get.orderBy("id", "row_valid_start_timestamp").collect().toSeq
-    val b = batchOut.orderBy("id", "row_valid_start_timestamp").collect().toSeq
-    assert(a == b, "incremental touched-keys result diverged from batch rebuild")
+    assert(spark.read.parquet(sink).select("batch_id").distinct().count() == 2)
+    assert(Scd2PropertySpec.converged(spark.read.parquet(sink), attrs) == batchOut,
+      "converged incremental stream diverged from batch rebuild")
   }
 
-  test("maintainer unpersists superseded generations (bounded storage)") {
-    // the pre-round-3 demo cached history + event log every batch and never
-    // unpersisted — lineage and executor storage grew per trigger. The
-    // maintainer must keep exactly the current history cached and release
-    // each superseded generation.
-    val lakeDir = tempDir("cacheboundlake")
-    writeLake(lakeDir, batch1)
-
-    val maintainer = new Scd2Streaming.TouchedKeysMaintainer(
-      Seq("name", "description", "price"))
-    var generations = List.empty[org.apache.spark.sql.DataFrame]
-    val stream = Scd2Streaming.readEnvelopeStream(
-      spark, lakeDir.getAbsolutePath, CdcSchemas.productsRow, maxFilesPerTrigger = 1)
-    val q = stream.writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-      maintainer.step(b)
-      generations = maintainer.history.get :: generations
-    }.start()
-    q.processAllAvailable()
-    writeLake(lakeDir, batch2, day = 13)
-    q.processAllAvailable()
-    q.stop()
-
-    assert(generations.size >= 2, "need multiple micro-batches to observe supersession")
-    val (current, superseded) = (generations.head, generations.tail)
-    assert(current.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
-      "current history generation must stay cached")
-    superseded.foreach { g =>
-      assert(g.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-        "superseded history generation must be unpersisted")
+  test("converged keeps the last emission per (id, lsn) and round-trips attributes") {
+    implicit val sqlCtx = spark.sqlContext
+    val prices = Seq(0.0, 0.07, 12.34, 99.99)
+    val row = (id: Int, p: Double) => productRow(Some(id), s"n$p", "d", p)
+    val sink = SparkSuite.scratchDir("converged-sink") + "/emissions"
+    withRocksDb {
+      val input = MemoryStream[String]
+      val versions = Scd2Streaming.incremental(Scd2Streaming.keyEvents(
+        Scd2Streaming.parseKafkaValue(input.toDF(), CdcSchemas.productsRow),
+        Seq("name", "description", "price")))
+      val q = versions.writeStream
+        .option("checkpointLocation", SparkSuite.scratchDir("converged-ckpt"))
+        .foreachBatch(appendTo(sink) _).start()
+      input.addData(
+        envelope("null", row(1, prices(0)), "c", t0, 100),
+        envelope("null", row(1, prices(2)), "u", t0 + 3000, 300),
+        envelope("null", row(2, prices(3)), "c", t0 + 100, 110))
+      q.processAllAvailable()
+      // lsn 200 arrives late: lsn 100's interval is re-emitted, closed at
+      // lsn 200's timestamp instead of lsn 300's; key 2 is deleted
+      input.addData(
+        envelope("null", row(1, prices(1)), "u", t0 + 2000, 200),
+        envelope(row(2, prices(3)), "null", "d", t0 + 4000, 400))
+      q.processAllAvailable()
+      q.stop()
     }
-  }
 
-  test("event-log checkpoint blocks are freed per generation and on release") {
-    // ADVICE r3: superseded localCheckpoint'd event-log generations were
-    // freed only when the ContextCleaner GC'd the old DataFrame, so
-    // executor storage transiently exceeded the documented O(current
-    // history + event log) bound. Now each superseded generation's
-    // checkpointed RDD is unpersisted as soon as its successor
-    // materializes, and release() returns storage to the pre-run level.
-    // compare persistent-RDD ID SETS, not counts: the ContextCleaner may
-    // concurrently free unrelated RDDs left by earlier tests in the suite
-    val lakeDir = tempDir("evlogbound")
-    writeLake(lakeDir, batch1)
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-
-    val maintainer = new Scd2Streaming.TouchedKeysMaintainer(
-      Seq("name", "description", "price"))
-    val stream = Scd2Streaming.readEnvelopeStream(
-      spark, lakeDir.getAbsolutePath, CdcSchemas.productsRow, maxFilesPerTrigger = 1)
-    val q = stream.writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-      maintainer.step(b)
-    }.start()
-    q.processAllAvailable()
-    writeLake(lakeDir, batch2, day = 13)
-    q.processAllAvailable()
-    q.stop()
-
-    val during = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(during.size <= 2,
-      s"storage must hold one history cache + one event-log checkpoint, holds ${during.size} new RDDs")
-    assert(maintainer.history.get.count() > 0) // still servable before release
-    maintainer.release()
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty,
-      s"release() must free every block the maintainer created; leaked RDD ids: $leaked")
+    val emissions = spark.read.parquet(sink)
+    assert(emissions.filter(col("id") === 1 && col("lsn") === 100).count() == 2)
+    val got = Scd2Streaming.converged(emissions)
+      .select(col("id"), col("lsn"), col("rowValidStartMs"), col("rowValidExpirationMs"),
+        col("attrs")("name"), col("attrs")("price").cast("double"))
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        Option(r.getString(4)), Option(r.get(5)).map(_.asInstanceOf[Double])))
+      .sortBy(r => (r._1, r._2)).toSeq
+    val end = Scd2Streaming.SentinelMs
+    assert(got == Seq(
+      (1, 100L, t0, t0 + 2000, Some("n0.0"), Some(0.0)),
+      (1, 200L, t0 + 2000, t0 + 3000, Some("n0.07"), Some(0.07)),
+      (1, 300L, t0 + 3000, end, Some("n12.34"), Some(12.34)),
+      (2, 110L, t0 + 100, t0 + 4000, Some("n99.99"), Some(99.99)),
+      (2, 400L, t0 + 4000, end, None, None)))
   }
 
   test("incremental (transformWithState) handles out-of-order + late events") {
@@ -184,16 +175,6 @@ class Scd2StreamingSpec extends SparkSuite {
            Seq(t0 + 1000, t0 + 2000, Scd2Streaming.SentinelMs),
       "no zero-width intervals from the duplicated event")
     }
-  }
-
-  test("idempotent batch sink skips already-committed batches") {
-    import spark.implicits._
-    val dir = tempDir("idempsink").getAbsolutePath
-    val df = Seq((1, "a"), (2, "b")).toDF("id", "v")
-    assert(Scd2Streaming.writeBatchIdempotent(df, 7L, dir))
-    assert(!Scd2Streaming.writeBatchIdempotent(df, 7L, dir), "replay must be skipped")
-    assert(Scd2Streaming.writeBatchIdempotent(df, 8L, dir))
-    assert(spark.read.parquet(s"$dir/batch=7").count() == 2)
   }
 
   test("per-key state is compacted to the retention horizon") {
@@ -462,7 +443,8 @@ class Scd2StreamingSpec extends SparkSuite {
     val batch = Scd2PropertySpec.rebuilt(
       spark.read.schema(CdcSchemas.envelope(CdcSchemas.productsRow)).json(events.toDS()), attrs)
     assert(batch.size == events.size)
-    assert(Scd2PropertySpec.converged(emitted.toSeq, attrs) == batch,
+    val emissions = emitted.toSeq.toDF("batch_id", "v").select(col("v.*"), col("batch_id"))
+    assert(Scd2PropertySpec.converged(emissions, attrs) == batch,
       "the restarted stream did not converge to the batch rebuild")
   }
 
