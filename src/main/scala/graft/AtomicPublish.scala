@@ -2,9 +2,10 @@ package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
-/** First-writer-wins publication of a directory of derived data, shared by
-  * every scratch-lake builder (the CDC envelope lake, the cached streaming
-  * results, the 10×-scaled bench lake).
+/** The one home of scratch and derived data: every scratch dir and
+  * derived lake lives under [[Root]], and each lake is published by
+  * [[derived]] (built from a source lake) or [[synthetic]] (built from
+  * code alone) under one naming rule and one stamp rule.
   *
   * Contract: `dst` is either absent or a COMPLETE publication at all times,
   * so concurrent readers (the DuckDB oracle, a second verify/bench process)
@@ -25,6 +26,38 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
   */
 object AtomicPublish {
 
+  /** The root of every scratch dir and derived lake. */
+  val Root = "/tmp"
+
+  /** `<Root>/<name>`. */
+  def scratch(name: String): String = s"$Root/$name"
+
+  /** Publish a lake of `kind` derived from source lake `src` at
+    * `<Root>/<kind>_<basename>_<hash>`, the hash being the first 8 hex
+    * digits of the md5 of `src`'s absolute path: two lakes that share a
+    * basename at different paths (a copied sf0.1) do not thrash one dir
+    * (ADVICE r15). Stamped `src=<src> md5=<dirFingerprint> [params]
+    * gen=<gen>`. Returns the dir.
+    */
+  def derived(kind: String, src: String, params: String, gen: String)
+             (build: String => Unit): String = {
+    val f = new java.io.File(src)
+    ensure(scratch(s"${kind}_${f.getName}_${md5Hex(f.getAbsolutePath).take(8)}"),
+      stamp(s"src=$src md5=${dirFingerprint(src)}", params, gen))(build)
+  }
+
+  /** Publish a lake built from code alone at `dir` (a [[scratch]] path),
+    * stamped `[params] gen=<gen>`. Returns `dir`.
+    */
+  def synthetic(dir: String, params: String, gen: String)(build: String => Unit): String =
+    ensure(dir, stamp("", params, gen))(build)
+
+  /** The one stamp rule: the source and the parameters, when not empty,
+    * then `gen=<gen>`, which names the code that builds the lake.
+    */
+  private def stamp(src: String, params: String, gen: String): String =
+    (Seq(src, params).filter(_.nonEmpty) :+ s"gen=$gen").mkString(" ")
+
   private val publishMonitor = new Object
   private val MarkerName = "_GRAFT_COMPLETE"
 
@@ -33,7 +66,7 @@ object AtomicPublish {
     * The expensive build runs outside the lock (it should not serialize);
     * only the swap is locked. Returns `dst`.
     */
-  def ensure(dst: String, stamp: String = "")(build: String => Unit): String = {
+  private[graft] def ensure(dst: String, stamp: String = "")(build: String => Unit): String = {
     val dstPath = Paths.get(dst)
     if (isCurrent(dstPath, stamp)) return dst
 
@@ -153,20 +186,22 @@ object AtomicPublish {
   }
 
   /** Content fingerprint of a directory tree: md5 over the sorted
-    * (relative path, size, mtime) of every regular file. Used as (part of)
-    * a publication stamp so derived lakes rebuild when their source data
+    * (relative path, size, mtime) of every regular file. The source part
+    * of a [[stamp]], so derived lakes rebuild when their source data
     * changes — e.g. a new round's regenerated testdata — instead of being
     * silently reused.
     */
-  def dirFingerprint(dir: String): String = {
+  private[graft] def dirFingerprint(dir: String): String = {
     import scala.jdk.CollectionConverters._
     val root = Paths.get(dir)
     val entries = Files.walk(root).iterator().asScala
       .filter(Files.isRegularFile(_))
       .map(p => s"${root.relativize(p)}:${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}")
       .toSeq.sorted
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(entries.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
+    md5Hex(entries.mkString("\n"))
   }
+
+  private def md5Hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
 }

@@ -34,6 +34,11 @@ object Bench {
   /** The lake the [[CanaryRef]] seconds were timed on. */
   val CanaryLake = "sf0.1"
 
+  /** Whether `sfDir` is the [[CanaryLake]]. The canaries and the streaming
+    * rows/s floors were timed there; on any other lake they are not read.
+    */
+  def onCanaryLake(sfDir: String): Boolean = new java.io.File(sfDir).getName == CanaryLake
+
   /** Warm the session (codegen compiler, parquet footer reads, shuffle
     * machinery) so the first measured query doesn't absorb JVM startup.
     */
@@ -67,8 +72,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.local(cpus.toInt)
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     warmUp(spark, sfDir)
     val fns = SparkEntry.queries
@@ -96,7 +100,7 @@ object Bench {
     // `below_floor: []` is the clean bar.
     val streaming = section("SPARK_GRAFT_STREAM_BENCH")(())(_ =>
       RunMeter.using(spark)(_.measure("streaming") {
-        val scratch = "/tmp/graft_stream_tp"
+        val scratch = StreamingThroughput.Scratch
         (Seq(StreamingThroughput.scd2Leg(spark, scratch),
           StreamingThroughput.lshLeg(spark, sfDir, scratch),
           StreamingThroughput.lshTtlLeg(spark, sfDir, scratch)),
@@ -141,7 +145,7 @@ object Bench {
     // ratio measures the lake, not the box: no canary is read there
     // (median -1.0, which leaves the floors unrelaxed).
     val measured = secs.toMap
-    val perCanary = if (new java.io.File(sfDir).getName != CanaryLake) Nil
+    val perCanary = if (!onCanaryLake(sfDir)) Nil
       else CanaryRef.flatMap { case (n, ref) => measured.get(n).filter(_ > 0).map(n -> _ / ref) }
     val canaryMedian = if (perCanary.isEmpty) -1.0 else {
       val s = perCanary.map(_._2).sorted
@@ -199,7 +203,7 @@ object Bench {
     val streamFailed = streaming.toSeq.filter(_.result.failed).map(_ => "streaming")
     val streamFields = streaming.toSeq.map(s => "streaming" -> s.result.result.fold(
       err => obj("failed" -> err),
-      { case (legs, recovery) => StreamingThroughput.benchRecord(legs, recovery, boxRelax) }))
+      { case (legs, recovery) => StreamingThroughput.benchRecord(sfDir, legs, recovery, boxRelax) }))
 
     val fields = Seq(
       "metric" -> "total", "value" -> secs.map(_._2).filter(_ >= 0).sum, "unit" -> "sec",

@@ -15,9 +15,8 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   *
   * `names` is a comma list of catalog query names; `all` (or nothing,
   * where names are optional) means the whole catalog. The subcommands are
-  * listed in [[Usage]]. The session is `GraftSession.local` with
-  * `SPARK_GRAFT_CPUS` cores (default 32, as in Bench); [[run]] takes any
-  * session, so a test can pass in its own.
+  * listed in [[Usage]]. The session is `GraftSession.local()`, as in
+  * Bench; [[run]] takes any session, so a test can pass in its own.
   */
 object Diag {
 
@@ -37,7 +36,7 @@ object Diag {
       |                                      as one JSON line""".stripMargin
 
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     try run(spark, args) finally spark.stop()
   }
@@ -53,7 +52,8 @@ object Diag {
     if (pos.size < 2) usage()
     val sfDir = pos(1)
     pos.head match {
-      case "plans" => plans(spark, sfDir, names(2), pos.lift(3).getOrElse("/tmp/graft_plans.md"))
+      case "plans" =>
+        plans(spark, sfDir, names(2), pos.lift(3).getOrElse(AtomicPublish.scratch("graft_plans.md")))
       case "explain" => explain(spark, sfDir, required(2), pos.lift(3), pos.lift(4).getOrElse("before"))
       case "scans" => scans(spark, sfDir, names(2), num(3, 3))
       case "profile" => profile(spark, sfDir, required(2), num(3, 2))

@@ -92,8 +92,11 @@ object GraftSession {
     }
   }
 
-  /** Build a local session with scale-appropriate defaults. */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  /** Build a local session with scale-appropriate defaults; the mains'
+    * cores are `SPARK_GRAFT_CPUS`, else every core of the box.
+    */
+  def local(cores: Int = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(Runtime.getRuntime.availableProcessors())(_.toInt)): SparkSession = {
     val session = builder(cores).getOrCreate()
     // AFTER getOrCreate: Spark's log4j2 re-initialization during session
     // creation replaces any configuration set beforehand (verified — a
@@ -135,9 +138,9 @@ object GraftSession {
       // shuffle I/O for a few % CPU (A/B in PERF_NOTES r12)
       .config("spark.io.compression.codec", "zstd")
       // saveAsTable targets (bucketed-join tables): keep the warehouse in
-      // /tmp, not the process cwd (the in-memory catalog means metadata is
-      // per-session; data dirs persist and are overwritten on re-create)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
+      // the scratch root, not the process cwd (the in-memory catalog means
+      // metadata is per-session; data dirs persist, overwritten on re-create)
+      .config("spark.sql.warehouse.dir", AtomicPublish.scratch("graft_warehouse"))
       // RocksDB state commits write a changelog of the trigger's puts and
       // deletes and snapshot only every few commits, instead of flushing,
       // checkpointing and copying SST files on every commit of every

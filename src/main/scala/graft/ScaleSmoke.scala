@@ -91,22 +91,6 @@ object ScaleSmoke {
   private def tableIsFixed(keys: Seq[String], texts: Seq[String]): Boolean =
     keys.isEmpty && texts.isEmpty
 
-  /** Content fingerprint of the source testdata: (relative path, size,
-    * mtime) of every file under `sfDir`, plus a generation tag covering
-    * the scaling code itself. A marker stamped with a different
-    * fingerprint — older testdata, a different sfDir, or an older scaler —
-    * forces a rebuild instead of silently reusing a mismatched lake
-    * (which would make `ratio_vs_headline` compare different datasets).
-    */
-  private def fingerprint(sfDir: String, factor: Int): String = {
-    // Non-multiple-of-10 factors (dev trend sweeps) key their layout into
-    // the stamp so the r14 rounding fix invalidates any pre-fix lake; the
-    // standard 10×/100× stamps are unchanged — their multiplier is exact
-    // either way, and the driver's cached lake must not churn.
-    val layout = if (factor % Factor == 0) "" else s" files=${fileMultiplier(factor)}"
-    s"src=$sfDir md5=${AtomicPublish.dirFingerprint(sfDir)} factor=$factor gen=3$layout"
-  }
-
   /** Per-table file-count multiplier vs the standard 10× layout: rounded,
     * not floor-divided, so a factor-15/25 lake keeps per-file size (and so
     * task granularity) within ~25% of the 10× layout instead of drifting
@@ -133,17 +117,16 @@ object ScaleSmoke {
     * stats tight, which is also how a real lake is written.
     *
     * `factor` defaults to the smoke's standard 10×; `Diag smoke` can
-    * pass larger values (30, 100) to extend the trend line — each factor
-    * gets its own default outDir (`/tmp/graft_scaled_x<factor>`) and its
-    * own fingerprint, so differently-scaled lakes never alias.
+    * pass larger values (30, 100) to extend the trend line. Each
+    * (source lake, factor) has its own [[AtomicPublish.derived]] lake; a
+    * factor off the 10× grid keys its file layout into the stamp too.
     */
-  def ensureScaled(spark: SparkSession, sfDir: String,
-                   outDir: String = "", factor: Int = Factor): String = {
+  def ensureScaled(spark: SparkSession, sfDir: String, factor: Int = Factor): String = {
     // 312 = |affine permutations|: beyond it copies would share tokens
     require(factor >= 2 && factor <= 312,
       s"scale factor must be in [2, 312], got $factor")
-    val dst = if (outDir.nonEmpty) outDir else s"/tmp/graft_scaled_x$factor"
-    AtomicPublish.ensure(dst, fingerprint(sfDir, factor)) { tmp =>
+    val layout = if (factor % Factor == 0) "" else s" files=${fileMultiplier(factor)}"
+    AtomicPublish.derived(s"graft_scaled_x$factor", sfDir, s"factor=$factor$layout", "3") { tmp =>
       // file count grows with the factor so per-file size (and so task
       // granularity) matches the standard 10× lake's layout
       val nFiles =

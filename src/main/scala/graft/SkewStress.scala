@@ -204,9 +204,6 @@ object SkewStress {
     */
   private val HotUser = 424242424242L
 
-  private def stamp(sfDir: String, hotPermille: Int): String =
-    s"src=$sfDir md5=${AtomicPublish.dirFingerprint(sfDir)} p=$hotPermille gen=3"
-
   /** Materialize the hot-key variant lake once per (testdata content,
     * permille): `hotPermille`‰ of `events` rows collapse onto one user_id,
     * the same share of `lineitem` rows onto one EXISTING l_suppkey and one
@@ -221,17 +218,9 @@ object SkewStress {
     */
   def ensureSkewed(spark: SparkSession, sfDir: String,
                    hotPermille: Int = HotPermille): String = {
-    // dir keyed by source-lake basename + a short hash of the ABSOLUTE
-    // path: a control/adjudication run against the 10× lake must not
-    // clobber the bench's sf0.1 variant, and two lakes sharing a basename
-    // at different paths (a copied sf0.1) must not thrash each other
-    // through the src= stamp either (ADVICE r15)
-    val abs = new java.io.File(sfDir).getAbsolutePath
-    val pathTag = java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    AtomicPublish.ensure(
-        s"/tmp/graft_skewed_p${hotPermille}_${new java.io.File(sfDir).getName}_$pathTag",
-        stamp(sfDir, hotPermille)) { tmp =>
+    // one dir per source lake: a control/adjudication run against the
+    // 10× lake must not clobber the bench's sf0.1 variant
+    AtomicPublish.derived(s"graft_skewed_p$hotPermille", sfDir, s"p=$hotPermille", "3") { tmp =>
       val hotSupp = spark.read.parquet(s"$sfDir/supplier.parquet")
         .agg(min("s_suppkey")).head().getLong(0)
       val hotPart = spark.read.parquet(s"$sfDir/part.parquet")
@@ -360,7 +349,7 @@ object SkewStress {
     val pos = args.filterNot(_.startsWith("--scale="))
     val sfDir = if (pos.nonEmpty) pos(0) else "/root/testdata/sf0.1"
     val hotPermille = if (pos.length > 1) pos(1).toInt else HotPermille
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val (names, fns) = pos.drop(2).headOption match {
       case Some("--debinned") =>

@@ -16,8 +16,7 @@ object Verify {
     // always calls with two args → full catalog.
     val (sfDir, outDir) = (args(0), args(1))
     val nameFilter = if (args.length > 2) args(2).r else ".*".r
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.local(cpus.toInt)
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val runs = RunMeter.using(spark) { meter =>

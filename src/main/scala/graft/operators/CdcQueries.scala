@@ -619,7 +619,7 @@ object CdcQueries {
     QueryDef(
       "tombstone_gc_audit",
       (s, d) => {
-        val dir = EnvelopeQueries.buildLake(s, d)
+        val dir = EnvelopeQueries.buildLake(s)
         val env = graft.cdc.EnvelopeReader.readEnvelopes(
           s, dir + "/part-*", graft.cdc.CdcSchemas.productsRow)
         val ev = env.filter(col("payload.op").isNotNull)

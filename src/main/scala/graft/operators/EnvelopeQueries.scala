@@ -25,14 +25,17 @@ object EnvelopeQueries {
   /** Fixed scratch path + fixed content: the oracle SQL is dumped before
     * the driver picks a scale factor, and verify/bench runs at different
     * sfs may interleave with the DuckDB compare — so the lake is fully
-    * synthetic (spark.range, no dependence on sfDir), byte-identical
-    * across builds, and published exactly once: built in a temp dir and
-    * atomically renamed into place, then skipped forever after via a
-    * completion marker. Concurrent readers (the DuckDB oracle, a second
-    * verify/bench process) never observe a half-written glob, and plan-only
-    * uses (`Diag plans`) stop re-writing the lake as a side effect.
+    * synthetic (spark.range, no dependence on sfDir) and byte-identical
+    * across builds. It is an [[graft.AtomicPublish.synthetic]]
+    * publication stamped with [[StreamingQueries.CacheGen]]: built in a
+    * temp dir and atomically renamed into place, then reused until the
+    * code that builds it changes. Concurrent readers (the DuckDB oracle, a
+    * second verify/bench process) never observe a half-written glob, and
+    * plan-only uses (`Diag plans`) stop re-writing the lake as a side
+    * effect. The users, drift and schema-generation lakes below are
+    * published the same way.
     */
-  private[operators] val LakeDir = "/tmp/graft_cdc_lake"
+  private[operators] val LakeDir = graft.AtomicPublish.scratch("graft_cdc_lake")
   private val LakeEvents = 20000L
   private val LakeKeys = LakeEvents / 5 // ~5 versions per key
 
@@ -42,7 +45,7 @@ object EnvelopeQueries {
     * every 97th an unknown op code (kept: the reference only drops null
     * ops). Sub-second ts_ms exercises the ms-precision path.
     */
-  private[operators] def buildLake(s: SparkSession, sfDir: String): String = {
+  private[graft] def buildLake(s: SparkSession): String = {
     val id = col("id") % LakeKeys
     val row = struct(
       id.cast("int").as("id"),
@@ -58,19 +61,12 @@ object EnvelopeQueries {
     val env = s.range(LakeEvents).select(CdcSchemas.envelopeJson(
       when(op === "d", row).otherwise(nullRow), when(op =!= "d", row).otherwise(nullRow),
       op, lit(1733333333000L) + col("id") * 321L + col("id") % 7, col("id")).as("value"))
-    publishOnce(env)
-    LakeDir
+    publish(LakeDir)(env.coalesce(4).write.mode("overwrite").text(_))
   }
 
-  /** First-writer-wins publication via [[graft.AtomicPublish]]; the lake
-    * content is byte-identical across builds (fully synthetic, see above),
-    * so any complete publication is reusable — the stamp is the default
-    * empty one, which also matches markers written by earlier rounds.
-    */
-  private def publishOnce(env: DataFrame, dir: String = LakeDir): Unit =
-    graft.AtomicPublish.ensure(dir) { tmp =>
-      env.coalesce(4).write.mode("overwrite").text(tmp)
-    }
+  /** Publish synthetic lake `dir` as [[LakeDir]] is published. */
+  private def publish(dir: String)(build: String => Unit): String =
+    graft.AtomicPublish.synthetic(dir, "", StreamingQueries.CacheGen)(build)
 
   /** The reference captures TWO tables (initdb/01_init_schema.sql:8-20:
     * `commerce.products` AND `commerce.users`); this is the users
@@ -78,11 +74,11 @@ object EnvelopeQueries {
     * (id/username/password, 01_init_schema.sql:16-20), its own op mix and
     * ts/lsn spacing, same Debezium envelope construction.
     */
-  private[operators] val UsersLakeDir = "/tmp/graft_cdc_users_lake"
+  private[operators] val UsersLakeDir = graft.AtomicPublish.scratch("graft_cdc_users_lake")
   private val UsersEvents = 12000L
   private val UsersKeys = UsersEvents / 4
 
-  private[operators] def buildUsersLake(s: SparkSession, sfDir: String): String = {
+  private[operators] def buildUsersLake(s: SparkSession): String = {
     val id = col("id") % UsersKeys
     val row = struct(
       id.cast("int").as("id"),
@@ -97,8 +93,7 @@ object EnvelopeQueries {
     val env = s.range(UsersEvents).select(CdcSchemas.envelopeJson(
       when(op === "d", row).otherwise(nullRow), when(op =!= "d", row).otherwise(nullRow),
       op, lit(1733444444000L) + col("id") * 137L + col("id") % 5, col("id")).as("value"))
-    publishOnce(env, UsersLakeDir)
-    UsersLakeDir
+    publish(UsersLakeDir)(env.coalesce(4).write.mode("overwrite").text(_))
   }
 
   /** Drifted ENVELOPE lake (VERDICT r16 task #5): the reference's own
@@ -113,7 +108,7 @@ object EnvelopeQueries {
     * behavior `streaming_scd2_schema_drift` pins against the batch
     * rebuild over the unioned lake.
     */
-  private[operators] val DriftLakeDir = "/tmp/graft_cdc_drift_lake"
+  private[operators] val DriftLakeDir = graft.AtomicPublish.scratch("graft_cdc_drift_lake")
   private val DriftEvents = 6000L // per generation
   private val DriftKeys = DriftEvents / 5
 
@@ -123,8 +118,8 @@ object EnvelopeQueries {
   private[operators] val productsRowV2: org.apache.spark.sql.types.StructType =
     CdcSchemas.productsRow.add("category", org.apache.spark.sql.types.StringType)
 
-  private[operators] def buildDriftLake(s: SparkSession): String = {
-    graft.AtomicPublish.ensure(DriftLakeDir) { tmp =>
+  private[operators] def buildDriftLake(s: SparkSession): String =
+    publish(DriftLakeDir) { tmp =>
       def gen(offset: Long, withCategory: Boolean, out: String): Unit = {
         val id = col("id") % DriftKeys
         val base = Seq(
@@ -151,17 +146,16 @@ object EnvelopeQueries {
       gen(0L, withCategory = false, s"$tmp/gen1")
       gen(DriftEvents, withCategory = true, s"$tmp/gen2")
     }
-    DriftLakeDir
-  }
 
   /** Two deterministic parquet "generations" with drifted schemas (gen2
-    * adds `category`); fully synthetic, byte-stable, published once via
-    * [[graft.AtomicPublish]] like the envelope lakes above.
+    * adds `category`); fully synthetic, the same rows in the same files on
+    * every build (a few parquet footer bytes differ between JVMs),
+    * published like the envelope lakes above.
     */
-  private[operators] val SchemaGensDir = "/tmp/graft_schema_gens"
+  private[operators] val SchemaGensDir = graft.AtomicPublish.scratch("graft_schema_gens")
 
-  private def buildSchemaGens(s: SparkSession): String = {
-    graft.AtomicPublish.ensure(SchemaGensDir) { tmp =>
+  private def buildSchemaGens(s: SparkSession): String =
+    publish(SchemaGensDir) { tmp =>
       def base(df: DataFrame) = df.select(col("id"),
         concat(lit("item-"), (col("id") % 997).cast("string")).as("name"),
         ((col("id") % 400).cast("double") / 4.0).as("price"))
@@ -170,14 +164,12 @@ object EnvelopeQueries {
         .withColumn("category", concat(lit("cat-"), (col("id") % 7).cast("string")))
         .coalesce(2).write.parquet(s"$tmp/gen2")
     }
-    SchemaGensDir
-  }
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef(
       "cdc_envelope_scd2",
       (s, d) => {
-        val dir = buildLake(s, d)
+        val dir = buildLake(s)
         val env = EnvelopeReader.readEnvelopes(s, dir + "/part-*", CdcSchemas.productsRow)
         Scd2.transform(env, Seq("name", "description", "price"))
           .select(col("id"), col("name"), col("description"), col("price"),
@@ -194,7 +186,7 @@ object EnvelopeQueries {
     QueryDef(
       "cdc_users_scd2",
       (s, d) => {
-        val dir = buildUsersLake(s, d)
+        val dir = buildUsersLake(s)
         val env = EnvelopeReader.readEnvelopes(s, dir + "/part-*", CdcSchemas.usersRow)
         Scd2.transform(env, Seq("username", "password"))
           .select(col("id"), col("username"), col("password"),
@@ -216,7 +208,7 @@ object EnvelopeQueries {
     QueryDef(
       "cdc_json_inference_scan",
       (s, d) => {
-        val dir = buildLake(s, d)
+        val dir = buildLake(s)
         val env = s.read.json(dir + "/part-*") // no schema: inferred
         env.select(
           coalesce(col("payload.after.id"), col("payload.before.id")).as("id"),
@@ -323,7 +315,7 @@ object EnvelopeQueries {
       "compact_lake_roundtrip",
       (s, d) => StreamingQueries.cachedRun(s, "compact_lake_roundtrip", d) {
         (scratch, resultOut) =>
-          val lake = buildLake(s, d)
+          val lake = buildLake(s)
           val compacted = s"$scratch/compacted"
           val (nBefore, nAfter) = Compaction.compact(
             s, lake, compacted, format = "json", targetFileBytes = 1L << 20)

@@ -27,8 +27,9 @@ import org.apache.spark.sql.streaming.OutputMode
   */
 object StreamingQueries {
 
-  /** Code generation for the cached results below (they live in /tmp
-    * across processes and driver rounds): derived MECHANICALLY from the
+  /** Code generation for the cached results below and the synthetic
+    * lakes of [[EnvelopeQueries]] (they live in the scratch root across
+    * processes and runs): derived MECHANICALLY from the
     * compiled bytecode of every class a streamed pipeline can execute, so
     * any recompiled semantic change invalidates the cache by construction
     * — no manual bump to forget (ADVICE r4). Coverage is by PACKAGE, not
@@ -40,7 +41,7 @@ object StreamingQueries {
     * a single object's class file would miss; plain lambda bodies compile
     * into the host class file either way.
     */
-  private lazy val CacheGen: String = {
+  private[graft] lazy val CacheGen: String = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     // Full packages any streamed/cached pipeline reaches, plus the
@@ -87,20 +88,17 @@ object StreamingQueries {
     * repeat invocations (PlanSpec's every-query loop, Verify after tests)
     * stop paying a multi-trigger streaming run each time, and the
     * checkpoint/output scratch dirs — previously leaked temp dirs — are
-    * deleted as soon as the result is materialized. Publication is
-    * atomic + stamped ([[graft.AtomicPublish]]), so concurrent runs never
-    * read a half-written result and regenerated testdata forces a re-run.
+    * deleted as soon as the result is materialized. The result is a
+    * [[graft.AtomicPublish.derived]] lake, one dir per source lake, so
+    * runs at different scale factors — PlanSpec at sf0.001, Verify at
+    * sf0.01 — keep their own publications, concurrent runs never read a
+    * half-written result and regenerated testdata forces a re-run.
     */
   private[operators] def cachedRun(s: SparkSession, name: String, sfDir: String)
                                   (run: (String, String) => Unit): DataFrame = {
-    // sfDir is part of the PATH (not just the stamp) so runs at different
-    // scale factors — PlanSpec at sf0.001, Verify at sf0.01 — keep their
-    // own publications instead of invalidating each other's
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
-    val dst = s"/tmp/graft_stream_results/$name-$sfTag"
-    val stamp = s"sf=$sfDir md5=${graft.AtomicPublish.dirFingerprint(sfDir)} gen=$CacheGen"
-    graft.AtomicPublish.ensure(dst, stamp) { tmp =>
-      val scratch = java.nio.file.Files.createTempDirectory(s"graft-stream-$name").toString
+    val dst = graft.AtomicPublish.derived(s"graft_stream_results/$name", sfDir, "", CacheGen) { tmp =>
+      val scratch = java.nio.file.Files.createTempDirectory(
+        java.nio.file.Paths.get(graft.AtomicPublish.Root), s"graft-stream-$name").toString
       try run(scratch, tmp) // (checkpoint/intermediate scratch, result parquet dir)
       finally graft.AtomicPublish.deleteTree(java.nio.file.Paths.get(scratch))
     }
@@ -114,8 +112,8 @@ object StreamingQueries {
     * ([[scd2Converged]]) serves both `streaming_scd2_rebuild` and
     * `streaming_scd2_incremental`, so the lake streams once.
     */
-  private def runIncremental(s: SparkSession, sfDir: String, scratch: String, resultOut: String): Unit = {
-    val dir = EnvelopeQueries.buildLake(s, sfDir)
+  private def runIncremental(s: SparkSession, scratch: String, resultOut: String): Unit = {
+    val dir = EnvelopeQueries.buildLake(s)
     runIncrementalScd2(s, scratch, Scd2Streaming.readEnvelopeStream(
       s, dir + "/part-*", CdcSchemas.productsRow, maxFilesPerTrigger = 1),
       ProductAttrs.map(_.name))
@@ -126,7 +124,7 @@ object StreamingQueries {
   private val ProductAttrs = CdcSchemas.productsRow.fields.toSeq.filter(_.name != "id")
 
   private def scd2Converged(s: SparkSession, sfDir: String): DataFrame =
-    cachedRun(s, "streaming_scd2_converged", sfDir)(runIncremental(s, sfDir, _, _))
+    cachedRun(s, "streaming_scd2_converged", sfDir)(runIncremental(s, _, _))
 
   /** Drain an envelope stream through [[Scd2Streaming.incremental]],
     * appending every emission under `scratch` with its batch id, and return

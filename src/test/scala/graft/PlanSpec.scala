@@ -603,7 +603,7 @@ class PlanSpec extends SparkSuite {
     // PartitionFilters (directory-listing prune) — not as a data Filter
     // over a full scan — and exactly one partition directory survives.
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("prune").toString + "/lake"
+    val dir = SparkSuite.scratchDir("prune") + "/lake"
     SparkEntry.queries("scd2_current")(spark, sf) // any events source works; use t() shape
     graft.QueryDef.t(spark, sf, "events")
       .select(col("event_id"), col("event_type"))
@@ -663,7 +663,7 @@ class PlanSpec extends SparkSuite {
     // the fact scan's PartitionFilters (reusing the dim broadcast), not
     // scan all partitions and filter post-join.
     import org.apache.spark.sql.functions.{broadcast, col, concat, date_format, lit, quarter, year}
-    val dir = java.nio.file.Files.createTempDirectory("dpp").toString + "/lake"
+    val dir = SparkSuite.scratchDir("dpp") + "/lake"
     val orders = graft.QueryDef.t(spark, sf, "orders")
     orders.select(col("o_orderkey"),
         date_format(col("o_orderdate"), "yyyy-MM").as("om"))

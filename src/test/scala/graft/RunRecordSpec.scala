@@ -91,6 +91,31 @@ class RunRecordSpec extends AnyFunSuite {
     assert(js.get("skew").get("floor_relax").asDouble == 2.0)
   }
 
+  private def texts(n: JsonNode): Seq[String] = n.elements().asScala.map(_.asText).toSeq
+
+  test("the streaming bar grades the rows/s floors on the sf0.1 lake") {
+    // the leg's 100 rows/s is under its floor; its state and the recovery are exact
+    val lake = "/data/lakes/sf0.1"
+    val bench = parse(Json.write(benchRecord(withSections = true, sf = lake)._1))
+    assert(texts(bench.get("streaming").get("below_floor")) == Seq("scd2_incremental"))
+    val full = parse(Json.write(StreamingThroughput.record(lake, Seq(leg), Some(recovery))))
+    assert(texts(full.get("below_floor")) == Seq("scd2_incremental"))
+  }
+
+  test("the streaming bar grades only the state checks on a lake other than sf0.1") {
+    val lake = "/data/lakes/sf0.001"
+    val bench = parse(Json.write(benchRecord(withSections = true, sf = lake)._1))
+    assert(texts(bench.get("streaming").get("below_floor")).isEmpty)
+    val canary = parse(Json.write(benchRecord(withSections = true, sf = "/data/lakes/sf0.1")._1))
+    assert(keys(bench.get("streaming")) == keys(canary.get("streaming")))
+    // a state leak and a lost recovery version still flag here
+    val full = parse(Json.write(StreamingThroughput.record(lake,
+      Seq(leg.copy(expectedStateRows = 11)), Some(recovery.copy(distinctVersions = 1999)))))
+    assert(keys(full) == Seq("metric", "sf", "scd2_incremental", "scd2_recovery", "floors",
+      "below_floor"))
+    assert(texts(full.get("below_floor")) == Seq("scd2_incremental_state", "scd2_recovery_versions"))
+  }
+
   test("a failed streaming section is recorded with its error") {
     val (rec, failed) = Bench.record(oddPath, Nil, 0.0, None, None, Some(Bench.Section(
       RunMeter.Run("streaming", -1.0, Left("IOException: disk"), 0L, Map.empty, Nil), 0.0, 1.0)))

@@ -32,7 +32,7 @@ class ScaleAuditSpec extends SparkSuite {
     * the fixture keeps the test honest about WHAT is exempt).
     */
   private lazy val factDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-audit").toString
+    val dir = SparkSuite.scratchDir("graft-audit")
     (1L to 200L).map(i => (i, s"doc $i body"))
       .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
     dir

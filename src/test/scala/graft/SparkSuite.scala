@@ -35,11 +35,9 @@ object SparkSuite {
   /** [[GraftSession.builder]]'s settings at 4 cores, with a per-run
     * warehouse and the test app name.
     */
-  lazy val session: SparkSession = {
-    val wh = java.nio.file.Files.createTempDirectory("graft-warehouse")
+  lazy val session: SparkSession =
     GraftSession.builder(4)
       .appName("graft-test")
-      .config("spark.sql.warehouse.dir", wh.toString)
+      .config("spark.sql.warehouse.dir", scratchDir("graft-warehouse"))
       .getOrCreate()
-  }
 }

@@ -11,6 +11,9 @@ import graft.StreamingThroughput.{BatchStat, LegResult}
   */
 class StreamingThroughputSpec extends SparkSuite {
 
+  /** The lake the rows/s floors grade on ([[Bench.onCanaryLake]]). */
+  private val canary = "/data/lakes/sf0.1"
+
   private def leg(name: String, rowsPerBatch: Long, execMs: Long,
                   stateFinal: Long, expected: Long): LegResult =
     LegResult(name, rowsPerBatch * 4, wallS = 4 * execMs / 1000.0, expected,
@@ -20,17 +23,17 @@ class StreamingThroughputSpec extends SparkSuite {
   test("belowFloor flags a leg under its rows/s floor") {
     // 100 rows/batch over 1 s batches = 100 rows/s, floor is 15000
     val slow = leg("scd2_incremental", 100, 1000, 10, 10)
-    assert(StreamingThroughput.belowFloor(Seq(slow)) === Seq("scd2_incremental"))
+    assert(StreamingThroughput.belowFloor(canary, Seq(slow)) === Seq("scd2_incremental"))
     // 100k rows/batch over 1 s batches = 100k rows/s clears the floor
     val fast = leg("scd2_incremental", 100000, 1000, 10, 10)
-    assert(StreamingThroughput.belowFloor(Seq(fast)) === Nil)
+    assert(StreamingThroughput.belowFloor(canary, Seq(fast)) === Nil)
   }
 
   test("belowFloor flags a state leak (final != expected) as <leg>_state") {
     val leak = leg("lsh_dedup_ingest", 100000, 1000, stateFinal = 11, expected = 10)
-    assert(StreamingThroughput.belowFloor(Seq(leak)) === Seq("lsh_dedup_ingest_state"))
+    assert(StreamingThroughput.belowFloor(canary, Seq(leak)) === Seq("lsh_dedup_ingest_state"))
     val drop = leg("lsh_dedup_ingest", 100000, 1000, stateFinal = 9, expected = 10)
-    assert(StreamingThroughput.belowFloor(Seq(drop)) === Seq("lsh_dedup_ingest_state"))
+    assert(StreamingThroughput.belowFloor(canary, Seq(drop)) === Seq("lsh_dedup_ingest_state"))
   }
 
   test("p50/p95 come from data batches only and rows_per_s excludes idle batches") {
@@ -67,17 +70,17 @@ class StreamingThroughputSpec extends SparkSuite {
     // craft the harder case: 7.5k rows/s (under the raw floor) must pass
     // once the canary says the box is 3x slow (floor relaxes to 5k) ...
     val boxSlow = leg("scd2_incremental", 7500, 1000, 10, 10)
-    assert(StreamingThroughput.belowFloor(Seq(boxSlow)) === Seq("scd2_incremental"))
-    assert(StreamingThroughput.belowFloor(Seq(boxSlow), boxFactor = 3.0) === Nil)
+    assert(StreamingThroughput.belowFloor(canary, Seq(boxSlow)) === Seq("scd2_incremental"))
+    assert(StreamingThroughput.belowFloor(canary, Seq(boxSlow), boxFactor = 3.0) === Nil)
     // ... while a genuine 5x collapse (61k -> 12.2k) on a NORMAL box
     // still flags,
     val collapsed = leg("scd2_incremental", 12200, 1000, 10, 10)
-    assert(StreamingThroughput.belowFloor(Seq(collapsed), boxFactor = 1.0) ===
+    assert(StreamingThroughput.belowFloor(canary, Seq(collapsed), boxFactor = 1.0) ===
       Seq("scd2_incremental"))
     // and the same collapse on a 3x-slow box (12.2k/3 = 4.07k < 5k)
     // flags through the relaxed floor too
     val collapsedSlow = leg("scd2_incremental", 4066, 1000, 10, 10)
-    assert(StreamingThroughput.belowFloor(Seq(collapsedSlow), boxFactor = 3.0) ===
+    assert(StreamingThroughput.belowFloor(canary, Seq(collapsedSlow), boxFactor = 3.0) ===
       Seq("scd2_incremental"))
     // the relaxation clamps: a fast box never tightens a pinned floor,
     // an extreme canary reading caps at 3x, junk readings are identity
@@ -87,14 +90,14 @@ class StreamingThroughputSpec extends SparkSuite {
     assert(StreamingThroughput.floorRelax(Double.NaN) === 1.0)
     // state-leak detection is NOT box-relative — it must fire regardless
     val leak = leg("lsh_dedup_ingest", 100000, 1000, 11, 10)
-    assert(StreamingThroughput.belowFloor(Seq(leak), boxFactor = 3.0) ===
+    assert(StreamingThroughput.belowFloor(canary, Seq(leak), boxFactor = 3.0) ===
       Seq("lsh_dedup_ingest_state"))
   }
 
   test("benchJson carries the bar and parses as JSON") {
     val legs = Seq(leg("scd2_incremental", 100, 1000, 10, 10),
       leg("lsh_dedup_ingest", 100000, 1000, 11, 10))
-    val js = StreamingThroughput.benchJson(legs)
+    val js = Json.write(StreamingThroughput.benchRecord(canary, legs))
     // both rules fire: slow scd2, leaking lsh state
     assert(js.contains(""""below_floor":["lsh_dedup_ingest_state","scd2_incremental"]"""))
     // must be valid JSON — the bench tail embeds it verbatim
@@ -114,10 +117,10 @@ class StreamingThroughputSpec extends SparkSuite {
     assert(r.distinctVersions === 2000L)
     assert(r.stateRowsFinal === 200L)
     assert(r.clean)
-    assert(StreamingThroughput.belowFloor(Nil, Some(r)) === Nil)
+    assert(StreamingThroughput.belowFloor(canary, Nil, Some(r)) === Nil)
     // a corrupted recovery must flag through the bar
     val bad = r.copy(distinctVersions = 2001L, stateRowsFinal = 199L)
-    assert(StreamingThroughput.belowFloor(Nil, Some(bad)) ===
+    assert(StreamingThroughput.belowFloor(canary, Nil, Some(bad)) ===
       Seq("scd2_recovery_versions", "scd2_recovery_state"))
   }
 
@@ -135,7 +138,7 @@ class StreamingThroughputSpec extends SparkSuite {
       s"TTL state ${r.stateRowsFinal} blew the bound ${r.expectedStateRows}")
     // (rows inflated past the rows/s floor: this asserts the BOUND rule
     // wiring specifically, not tiny-scale throughput)
-    assert(StreamingThroughput.belowFloor(
+    assert(StreamingThroughput.belowFloor(canary,
       Seq(r.copy(totalRows = r.totalRows * 100000))) === Nil)
     // state BYTES must be harvested (the r17 footprint series): RocksDB
     // reports nonzero memory once any key is stored

@@ -59,10 +59,5 @@ object CdcFixtures {
     }
   }
 
-  def tempDir(prefix: String): File = {
-    val d = File.createTempFile(prefix, "")
-    d.delete(); d.mkdirs()
-    d.deleteOnExit()
-    d
-  }
+  def tempDir(prefix: String): File = new File(graft.SparkSuite.scratchDir(prefix))
 }

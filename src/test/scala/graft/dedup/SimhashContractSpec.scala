@@ -48,7 +48,7 @@ class SimhashContractSpec extends SparkSuite {
   }
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-simhash").toString
+    val d = SparkSuite.scratchDir("graft-simhash")
     docsDf.write.mode("overwrite").parquet(s"$d/documents.parquet")
     d
   }

@@ -51,7 +51,7 @@ class CatalogPropertySpec extends SparkSuite {
 
   /** Write a one-table lake under a temp dir and return the dir. */
   private def lake(table: String)(write: String => Unit): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-prop").toString
+    val dir = SparkSuite.scratchDir("graft-prop")
     write(s"$dir/$table.parquet")
     dir
   }
@@ -455,7 +455,7 @@ class CatalogPropertySpec extends SparkSuite {
       (0 until 1 + rnd.nextInt(4)).map(j =>
         (ok, 1L + rnd.nextInt(40), (1 + rnd.nextInt(50)).toDouble))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-als").toString
+    val dir = SparkSuite.scratchDir("graft-als")
     orders.toDF("o_orderkey", "o_custkey").write.parquet(s"$dir/orders.parquet")
     lines.toDF("l_orderkey", "l_partkey", "l_quantity")
       .write.parquet(s"$dir/lineitem.parquet")

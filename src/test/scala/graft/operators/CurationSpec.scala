@@ -16,7 +16,7 @@ class CurationSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def docLake(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-curation").toString
+    val dir = SparkSuite.scratchDir("graft-curation")
     rows.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
     dir
   }
@@ -341,7 +341,7 @@ class CurationSpec extends SparkSuite {
     // events on days 0,1,3,4 (day 2 silent) with distinct counts — the
     // dense series is [1,2,0,3,4]-scaled; an active-days-only lag would
     // pair day1 with day3 and report a different r(1).
-    val dir = java.nio.file.Files.createTempDirectory("graft-acf").toString
+    val dir = SparkSuite.scratchDir("graft-acf")
     val base = java.time.LocalDate.of(2024, 3, 1)
     val rows = Seq(0 -> 1, 1 -> 2, 3 -> 3, 4 -> 4).flatMap { case (d, cnt) =>
       (0 until cnt).map { i =>

@@ -22,7 +22,7 @@ class CurrentStateSpec extends SparkSuite {
     df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
 
   test("state survives a process 'death': a fresh maintainer resumes from the lake") {
-    val base = java.nio.file.Files.createTempDirectory("cs_restart").toString
+    val base = SparkSuite.scratchDir("cs_restart")
     val m1 = mk(base)
     m1.step(changes((1L, 10L, 1.0), (2L, 11L, 2.0)), 0L)
     m1.step(changes((2L, 20L, 2.5)), 1L)
@@ -35,7 +35,7 @@ class CurrentStateSpec extends SparkSuite {
   }
 
   test("replaying a committed batch is a no-op (exactly-once without a transaction)") {
-    val base = java.nio.file.Files.createTempDirectory("cs_replay").toString
+    val base = SparkSuite.scratchDir("cs_replay")
     val m = mk(base)
     m.step(changes((1L, 10L, 1.0)), 0L)
     m.step(changes((1L, 20L, 2.0), (2L, 21L, 4.0)), 1L)
@@ -47,7 +47,7 @@ class CurrentStateSpec extends SparkSuite {
   }
 
   test("a torn generation (no _SUCCESS) is skipped by recovery") {
-    val base = java.nio.file.Files.createTempDirectory("cs_torn").toString
+    val base = SparkSuite.scratchDir("cs_torn")
     val m = mk(base)
     m.step(changes((1L, 10L, 1.0)), 0L)
     // simulate a crash mid-write of gen-1: directory exists, no _SUCCESS
@@ -60,7 +60,7 @@ class CurrentStateSpec extends SparkSuite {
   }
 
   test("within-batch churn collapses to the max-seq winner per key") {
-    val base = java.nio.file.Files.createTempDirectory("cs_net").toString
+    val base = SparkSuite.scratchDir("cs_net")
     val m = mk(base)
     m.step(changes((1L, 3L, 0.1), (1L, 7L, 0.7), (1L, 5L, 0.5)), 0L)
     assert(asMap(m.current().get) === Map(1L -> (7L, 0.7)))
