@@ -71,9 +71,10 @@ object GraftSession {
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NoForkLocalFs].getName)
 
   /** The state-store provider every `transformWithState` query needs
-    * (column families are RocksDB-only). Scoped per query through
-    * [[withConf]]: session-wide, it would also move every other stateful
-    * catalog query off the default store.
+    * (column families are RocksDB-only). Scoped per query by
+    * [[graft.streaming.BoundedStream.startStateful]]: session-wide, it
+    * would also move every other stateful catalog query off the default
+    * store.
     */
   val RocksDbStateStore: (String, String) =
     "spark.sql.streaming.stateStore.providerClass" ->

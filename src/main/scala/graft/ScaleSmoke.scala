@@ -63,9 +63,9 @@ object ScaleSmoke {
 
   /** Per-copy alphabet permutation of a text column: copy 0 is the
     * original corpus; other copies share no tokens with it, so cross-copy
-    * similarity is ~0. Shared with [[StreamingThroughput]]'s scaled-corpus
-    * staging so the streaming dedup ingests the same token-disjoint
-    * construction the scale smoke is proved on.
+    * similarity is ~0. Shared with [[graft.streaming.DocStream.scaled]]
+    * so the streaming dedup ingests the same token-disjoint construction
+    * the scale smoke is proved on.
     */
   private[graft] def rotatedText(text: org.apache.spark.sql.Column,
                                  copy: org.apache.spark.sql.Column,

@@ -1,12 +1,11 @@
 package graft
 
 import graft.cdc.CdcSchemas
-import graft.streaming.{BoundedStream, Scd2Streaming}
-import graft.streaming.StatefulAgg.{BandFlag, BandOwner, BandOwnerTtl}
+import graft.streaming.{BoundedStream, DocStream, Scd2Streaming}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQuery, TimeMode}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Throughput/latency/state instrumentation for the CONTINUOUS legs
   * (VERDICT r15 task #1): the 27 streaming oracle rows prove the
@@ -41,6 +40,15 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQ
   * copies (ScaleSmoke's construction — the copies are token-disjoint, so
   * band state grows with the corpus and the dedup has real work per
   * batch).
+  *
+  * The legs run the catalog's own streams, not copies of them: the SCD2
+  * stream is [[Scd2Streaming.startIncremental]], and the LSH legs stage,
+  * read and band the corpus and start the band owners through
+  * [[DocStream]]; both set the RocksDB store through
+  * [[BoundedStream.startStateful]]. Only the scale, the slicing and the
+  * harvest of the progress history are this object's. Each leg deletes
+  * its checkpoint and sink under the scratch root once it has read what
+  * it needs.
   *
   *   runMain graft.StreamingThroughput [sfDir] [outPath]
   */
@@ -162,52 +170,31 @@ object StreamingThroughput {
       }
     }
 
-  /** Stage `documents` × `copies` (affine-rotated text, offset doc_ids —
-    * ScaleSmoke's token-disjoint construction) as `slices` mtime-ordered
-    * parquet files, sliced by doc_id so arrival order is corpus order.
-    * One [[AtomicPublish.derived]] lake per (source lake, copies, slices).
+  /** Run one leg's `body` with a progress retention wide enough for every
+    * micro-batch, restoring it afterwards (ADVICE r16: it used to leak
+    * into the rest of the shared Bench session), then delete the leg's
+    * checkpoint and sink dir `dir`, which `body` has read by then.
+    *
+    * The state stores are stopped before the delete: with changelog
+    * checkpointing a RocksDB snapshot falls due every 10 versions, and the
+    * store's maintenance thread uploads it on its next pass (once a
+    * minute), after the query has stopped, into a checkpoint it recreates. Stopping unloads every
+    * loaded store and waits for a pass in flight; the next stateful query
+    * restarts maintenance. The legs run one at a time, so no other
+    * query's store is loaded.
     */
-  def ensureDocSlices(spark: SparkSession, sfDir: String, copies: Int,
-                      slices: Int): String =
-    AtomicPublish.derived(s"graft_stream_doclake_${copies}x_$slices", sfDir,
-        s"copies=$copies slices=$slices", "1") { tmp =>
-      // slices are doc_id RANGES, not hashes: BandOwner's first-seen flag
-      // semantics assume ingestion order (doc_id monotone across batches —
-      // same contract as the oracle leg's stageDocSlices)
-      val docsMax = QueryDef.t(spark, sfDir, "documents")
-        .agg(max("doc_id")).head().getLong(0) + 1
-      val total = docsMax * copies
-      val scaled = scaledDocs(spark, sfDir, copies)
-        .withColumn("__slice",
-          least(lit(slices - 1), (col("doc_id") * slices / total).cast("int")))
-      (0 until slices).foreach { i =>
-        BoundedStream.writeSlice(scaled.filter(col("__slice") === i).drop("__slice"),
-          s"$tmp/b$i", i)
-      }
-    }
-
-  /** The scaled corpus the LSH leg ingests (also used to compute the
-    * expected end-state band count).
-    */
-  private def scaledDocs(spark: SparkSession, sfDir: String, copies: Int) = {
-    val docs = QueryDef.t(spark, sfDir, "documents").select(col("doc_id"), col("text"))
-    val maxId = docs.agg(max("doc_id")).head().getLong(0) + 1
-    docs.withColumn("__copy", explode(lit((0 until copies).toArray)))
-      .select((col("doc_id") + col("__copy") * maxId).as("doc_id"),
-        ScaleSmoke.rotatedText(col("text"), col("__copy"), copies).as("text"))
-  }
-
-  /** Run `body` with the RocksDB state-store provider and a progress
-    * retention wide enough for every micro-batch, restoring BOTH confs
-    * afterwards (ADVICE r16: numRecentProgressUpdates used to leak into
-    * the rest of the shared Bench session, and the save/restore block was
-    * duplicated between drive() and recoveryLeg()).
-    */
-  private def withStreamingConf[T](spark: SparkSession)(body: => T): T =
-    GraftSession.withConf(spark, GraftSession.RocksDbStateStore,
+  private def leg[T](spark: SparkSession, dir: String)(body: => T): T = {
+    val path = java.nio.file.Paths.get(dir)
+    AtomicPublish.deleteTree(path) // no old checkpoint or sink
+    try GraftSession.withConf(spark,
       // every micro-batch must survive in recentProgress or p95/state
       // growth are computed over a truncated window (default retention 100)
       "spark.sql.streaming.numRecentProgressUpdates" -> "400")(body)
+    finally {
+      org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+      AtomicPublish.deleteTree(path)
+    }
+  }
 
   /** Per-batch stats from a completed query's progress history. */
   private def harvest(q: StreamingQuery): Seq[BatchStat] =
@@ -219,92 +206,54 @@ object StreamingThroughput {
       BatchStat(p.batchId, p.numInputRows, execMs, stateRows, stateBytes)
     }.sortBy(_.batchId)
 
-  /** Run one AvailableNow stream to completion and harvest per-batch
-    * stats from its progress history. `start` must build and start the
-    * query; state rows come from stateOperators.numRowsTotal.
+  /** Run one AvailableNow stream to completion in its own [[leg]] dir
+    * and harvest per-batch stats from its progress history. `start` must
+    * build and start the query into that dir; state rows come from
+    * stateOperators.numRowsTotal.
     */
-  private def drive(spark: SparkSession, start: () => StreamingQuery,
-                    leg: String, totalRows: Long, expectedState: Long): LegResult =
-    withStreamingConf(spark) {
+  private def drive(spark: SparkSession, dir: String, start: String => StreamingQuery,
+                    name: String, totalRows: Long, expectedState: Long): LegResult =
+    leg(spark, dir) {
       val t0 = System.nanoTime()
-      val q = start()
+      val q = start(dir)
       q.awaitTermination()
       val wallS = (System.nanoTime() - t0) / 1e9
-      LegResult(leg, totalRows, wallS, expectedState, harvest(q))
+      LegResult(name, totalRows, wallS, expectedState, harvest(q))
     }
 
-  /** Start the SCD2 incremental stream over the staged envelope slices:
-    * parse → [[Scd2Streaming.keyEvents]] → [[Scd2Streaming.incremental]]
-    * (per-key ValueState event log) → parquet append under `scratch`.
-    */
-  private def startScd2(spark: SparkSession, lake: String, scratch: String,
-                        attrFields: Seq[String]): StreamingQuery = {
-    val envelopes = Scd2Streaming.readEnvelopeStream(
-      spark, s"$lake/b*/part-*", CdcSchemas.productsRow, maxFilesPerTrigger = 1)
-    BoundedStream.start(Scd2Streaming.incremental(Scd2Streaming.keyEvents(envelopes, attrFields)),
-        s"$scratch/ckpt") { (b, _) =>
-      b.write.mode("append").parquet(s"$scratch/emissions")
-    }
-  }
+  /** The staged envelope slices as a stream, one slice per trigger. */
+  private def envelopeStream(spark: SparkSession, lake: String) =
+    Scd2Streaming.readEnvelopeStream(spark, s"$lake/b*/part-*", CdcSchemas.productsRow,
+      maxFilesPerTrigger = 1)
 
-  /** SCD2 incremental leg ([[startScd2]] over every product attribute).
-    * Identical pipeline to the streaming_current_state / cdc oracle legs,
-    * at bench size.
+  /** SCD2 incremental leg: [[Scd2Streaming.startIncremental]] over every
+    * product attribute, the stream the SCD2 catalog queries run, at bench
+    * size.
     */
   def scd2Leg(spark: SparkSession, scratchRoot: String,
               n: Long = Scd2Events, slices: Int = Scd2Slices): LegResult = {
     val lake = ensureEnvelopeSlices(spark, n, slices)
-    val scratch = s"$scratchRoot/scd2"
-    AtomicPublish.deleteTree(java.nio.file.Paths.get(scratch)) // no old checkpoint or sink
     // one ValueState row per key ⇒ end state must be exactly the distinct
     // key count of the stream (n/10 by construction)
-    drive(spark, () => startScd2(spark, lake, scratch, Seq("name", "description", "price")),
+    drive(spark, s"$scratchRoot/scd2", Scd2Streaming.startIncremental(envelopeStream(spark, lake),
+        Seq("name", "description", "price"), _),
       "scd2_incremental", n, expectedState = n / 10)
   }
 
-  /** MinHash → 8 band digests per document (the LSH legs' shared kernel,
-    * batch or stream).
-    */
-  private def banded(df: DataFrame): DataFrame = df
-    .filter(size(split(col("text"), " ")) >= 3)
-    .select(col("doc_id"), graft.functions.GraftFunctions.minhashSignature(col("text"), 16, 3).as("__sig"))
-    .select(col("doc_id"),
-      explode(graft.dedup.Dedup.lshBandDigests(col("__sig"), 8, 2)).as("band"))
-
-  /** Start an LSH leg: staged document slices (after `prep`) → [[banded]]
-    * → `processor` keyed by band → parquet append under `scratch`.
-    */
-  private def startLsh(spark: SparkSession, lake: String, scratch: String,
-                       prep: DataFrame => DataFrame,
-                       processor: StatefulProcessor[String, (Long, String), BandFlag],
-                       timeMode: TimeMode): StreamingQuery = {
-    import spark.implicits._
-    val flags = banded(prep(spark.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", 1).parquet(s"$lake/b*/part-*.parquet")))
-      .as[(Long, String)]
-      .groupByKey(_._2)
-      .transformWithState(processor, timeMode, OutputMode.Append())
-    BoundedStream.start(flags, s"$scratch/ckpt") { (b, _) =>
-      b.write.mode("append").parquet(s"$scratch/flags")
-    }
-  }
-
-  /** LSH at-ingest dedup leg: document slices → codegen MinHash → band
-    * explode → BandOwner (per-band running-min ValueState) → parquet
-    * append. Same pipeline as streaming_lsh_dedup_ingest, at bench size.
+  /** LSH at-ingest dedup leg: [[DocStream.startBandOwner]] without a
+    * horizon (per-band running-min ValueState) over `copies` of the
+    * corpus, the stream streaming_lsh_dedup_ingest runs, at bench size.
     * rows_per_s counts DOCUMENTS (the source rows), not band rows.
     */
   def lshLeg(spark: SparkSession, sfDir: String, scratchRoot: String,
              copies: Int = LshCopies, slices: Int = LshSlices): LegResult = {
-    val lake = ensureDocSlices(spark, sfDir, copies, slices)
-    val scratch = s"$scratchRoot/lsh"
-    AtomicPublish.deleteTree(java.nio.file.Paths.get(scratch)) // no old checkpoint or sink
+    val lake = DocStream.ensureSlices(spark, sfDir, copies, slices)
     // expected end state: one ValueState row per distinct band in the
     // corpus (batch replay of the same kernel)
-    val scaled = scaledDocs(spark, sfDir, copies)
-    val expected = banded(scaled).select("band").distinct().count()
+    val scaled = DocStream.scaled(spark, sfDir, copies)
+    val expected = DocStream.bands(scaled).select("band").distinct().count()
     val totalDocs = scaled.count()
-    drive(spark, () => startLsh(spark, lake, scratch, identity, new BandOwner, TimeMode.None()),
+    drive(spark, s"$scratchRoot/lsh", DocStream.startBandOwner(spark, lake, None, _),
       "lsh_dedup_ingest", totalDocs, expected)
   }
 
@@ -326,21 +275,17 @@ object StreamingThroughput {
   def lshTtlLeg(spark: SparkSession, sfDir: String, scratchRoot: String,
                 copies: Int = LshCopies, slices: Int = LshSlices,
                 horizonDocs: Long = 24000L): LegResult = {
-    val lake = ensureDocSlices(spark, sfDir, copies, slices)
-    val scratch = s"$scratchRoot/lsh_ttl"
-    AtomicPublish.deleteTree(java.nio.file.Paths.get(scratch)) // no old checkpoint or sink
-    val scaled = scaledDocs(spark, sfDir, copies)
+    val lake = DocStream.ensureSlices(spark, sfDir, copies, slices)
+    val scaled = DocStream.scaled(spark, sfDir, copies)
     val totalDocs = scaled.count()
     val maxDoc = scaled.agg(max("doc_id")).head().getLong(0)
     val sliceWidth = (maxDoc + 1) / slices
-    val bound = banded(scaled).groupBy("band")
+    val bound = DocStream.bands(scaled).groupBy("band")
       .agg(max("doc_id").as("last_doc"))
       .filter(col("last_doc") > maxDoc - horizonDocs - 2 * sliceWidth)
       .count()
-    def eventTime(docs: DataFrame) =
-      docs.withColumn("ts", timestamp_seconds(col("doc_id"))).withWatermark("ts", "0 seconds")
-    drive(spark,
-      () => startLsh(spark, lake, scratch, eventTime, new BandOwnerTtl(horizonDocs), TimeMode.EventTime()),
+    drive(spark, s"$scratchRoot/lsh_ttl",
+      DocStream.startBandOwner(spark, lake, Some(horizonDocs), _),
       "lsh_dedup_ttl", totalDocs, bound)
       .copy(stateBound = true)
   }
@@ -378,9 +323,8 @@ object StreamingThroughput {
                   stopAfter: Int = 10): RecoveryResult = {
     val lake = ensureEnvelopeSlices(spark, n, slices)
     val scratch = s"$scratchRoot/scd2_recovery"
-    AtomicPublish.deleteTree(java.nio.file.Paths.get(scratch)) // no old checkpoint or sink
-    withStreamingConf(spark) {
-      def start() = startScd2(spark, lake, scratch, Seq("name"))
+    leg(spark, scratch) {
+      def start() = Scd2Streaming.startIncremental(envelopeStream(spark, lake), Seq("name"), scratch)
       // phase 1: run until `stopAfter` batches have committed, then stop
       // mid-flight (the in-flight batch is torn — the checkpoint replays
       // it under the same id on restart)

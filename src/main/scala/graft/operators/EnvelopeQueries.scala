@@ -264,37 +264,34 @@ object EnvelopeQueries {
     // (full-lake inference) or drops late columns hash-fails. The
     // per-batch collect is ≤ |columns| cells — the driver-visible size
     // of a schema, not of data.
-    QueryDef(
-      "streaming_schema_drift_monitor",
-      (s, d) => StreamingQueries.cachedRun(s, "streaming_schema_drift_monitor", d) {
-        (scratch, resultOut) =>
-          val gens = buildSchemaGens(s)
-          val stage = s"$scratch/jsonlake"
-          Seq("gen1", "gen2").zipWithIndex.foreach { case (g, i) =>
-            BoundedStream.writeSlice(s.read.parquet(s"$gens/$g")
-              .select(to_json(struct(col("*"))).as("value")), s"$stage/b$i", i, "text")
-          }
-          val out = s"$scratch/emissions"
-          val lines = s.readStream.option("maxFilesPerTrigger", 1).text(s"$stage/b*/part-*")
-          BoundedStream.start(lines, s"$scratch/ckpt") { (b, batchId) =>
-            val session = b.sparkSession
-            import session.implicits._
-            val parsed = session.read.json(b.as[String])
-            val cols = parsed.schema.fieldNames.sorted.toSeq
-            val stats = parsed
-              .select(cols.map(c => count(col(c)).as(c)): _*).collect().head
-            cols.zipWithIndex
-              .map { case (c, i) => (batchId, c, stats.getLong(i)) }
-              .toDF("batch_id", "column_name", "n_nonnull")
-              .write.mode("append").parquet(out)
-          }.awaitTermination()
-          s.read.parquet(out)
-            .groupBy("column_name")
-            .agg(min("batch_id").as("first_seen_batch"),
-              sum("n_nonnull").as("n_nonnull"))
-            .coalesce(1).write.mode("overwrite").parquet(resultOut)
+    StreamingQueries.cached("streaming_schema_drift_monitor", { (s, d, scratch, resultOut) =>
+        val gens = buildSchemaGens(s)
+        val stage = s"$scratch/jsonlake"
+        Seq("gen1", "gen2").zipWithIndex.foreach { case (g, i) =>
+          BoundedStream.writeSlice(s.read.parquet(s"$gens/$g")
+            .select(to_json(struct(col("*"))).as("value")), s"$stage/b$i", i, "text")
+        }
+        val out = s"$scratch/emissions"
+        val lines = s.readStream.option("maxFilesPerTrigger", 1).text(s"$stage/b*/part-*")
+        BoundedStream.start(lines, s"$scratch/ckpt") { (b, batchId) =>
+          val session = b.sparkSession
+          import session.implicits._
+          val parsed = session.read.json(b.as[String])
+          val cols = parsed.schema.fieldNames.sorted.toSeq
+          val stats = parsed
+            .select(cols.map(c => count(col(c)).as(c)): _*).collect().head
+          cols.zipWithIndex
+            .map { case (c, i) => (batchId, c, stats.getLong(i)) }
+            .toDF("batch_id", "column_name", "n_nonnull")
+            .write.mode("append").parquet(out)
+        }.awaitTermination()
+        s.read.parquet(out)
+          .groupBy("column_name")
+          .agg(min("batch_id").as("first_seen_batch"),
+            sum("n_nonnull").as("n_nonnull"))
+          .coalesce(1).write.mode("overwrite").parquet(resultOut)
       },
-      Some(s"""WITH g AS (
+      s"""WITH g AS (
               |  SELECT * FROM read_parquet(
               |    ['$SchemaGensDir/gen1/*.parquet', '$SchemaGensDir/gen2/*.parquet'],
               |    union_by_name=true))
@@ -303,7 +300,6 @@ object EnvelopeQueries {
               |UNION ALL SELECT 'id', 0, count(id) FROM g
               |UNION ALL SELECT 'name', 0, count(name) FROM g
               |UNION ALL SELECT 'price', 0, count(price) FROM g""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // Small-file compaction round-trip (SURVEY §7.4: the reference's S3
     // sink flushes every 3 records, so the lake is thousands of tiny
@@ -311,28 +307,25 @@ object EnvelopeQueries {
     // re-parse the COMPACTED files, and hash-compare the full event
     // content against the oracle's read of the ORIGINAL lake — compaction
     // must be byte-faithful to every envelope field, not just row counts.
-    QueryDef(
-      "compact_lake_roundtrip",
-      (s, d) => StreamingQueries.cachedRun(s, "compact_lake_roundtrip", d) {
-        (scratch, resultOut) =>
-          val lake = buildLake(s)
-          val compacted = s"$scratch/compacted"
-          val (nBefore, nAfter) = Compaction.compact(
-            s, lake, compacted, format = "json", targetFileBytes = 1L << 20)
-          require(nAfter <= nBefore,
-            s"compaction must not increase file count ($nBefore -> $nAfter)")
-          val env = EnvelopeReader.readEnvelopes(s, compacted + "/part-*", CdcSchemas.productsRow)
-          env.select(
-              coalesce(col("payload.after.id"), col("payload.before.id"))
-                .cast("int").as("id"),
-              col("payload.source.lsn").cast("long").as("log_seq_num"),
-              col("payload.op").as("op"),
-              col("payload.ts_ms").cast("long").as("ts_ms"),
-              col("payload.after.name").as("name"),
-              col("payload.after.price").as("price"))
-            .coalesce(1).write.mode("overwrite").parquet(resultOut)
+    StreamingQueries.cached("compact_lake_roundtrip", { (s, d, scratch, resultOut) =>
+        val lake = buildLake(s)
+        val compacted = s"$scratch/compacted"
+        val (nBefore, nAfter) = Compaction.compact(
+          s, lake, compacted, format = "json", targetFileBytes = 1L << 20)
+        require(nAfter <= nBefore,
+          s"compaction must not increase file count ($nBefore -> $nAfter)")
+        val env = EnvelopeReader.readEnvelopes(s, compacted + "/part-*", CdcSchemas.productsRow)
+        env.select(
+            coalesce(col("payload.after.id"), col("payload.before.id"))
+              .cast("int").as("id"),
+            col("payload.source.lsn").cast("long").as("log_seq_num"),
+            col("payload.op").as("op"),
+            col("payload.ts_ms").cast("long").as("ts_ms"),
+            col("payload.after.name").as("name"),
+            col("payload.after.price").as("price"))
+          .coalesce(1).write.mode("overwrite").parquet(resultOut)
       },
-      Some(s"""SELECT
+      s"""SELECT
               |  COALESCE(
               |    CAST(json_extract(json, '$$.payload.after.id') AS INT),
               |    CAST(json_extract(json, '$$.payload.before.id') AS INT)) AS id,
@@ -342,7 +335,6 @@ object EnvelopeQueries {
               |  json_extract_string(json, '$$.payload.after.name') AS name,
               |  CAST(json_extract(json, '$$.payload.after.price') AS DOUBLE) AS price
               |FROM read_ndjson_objects('$LakeDir/part-*')""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // CSV source/sink round-trip (the remaining text lake format next to
     // NDJSON — S7's family): write `documents` as gzip CSV with full
@@ -351,24 +343,20 @@ object EnvelopeQueries {
     // formats), and hash-compare the round-tripped rows against the
     // oracle's read of the original parquet. Quote/escape/null fidelity
     // is what's under test: any mangled row hash-fails.
-    QueryDef(
-      "csv_lake_roundtrip",
-      (s, d) => StreamingQueries.cachedRun(s, "csv_lake_roundtrip", d) {
-        (scratch, resultOut) =>
-          val lake = s"$scratch/csv_lake"
-          t(s, d, "documents")
-            .write.mode("overwrite")
-            .option("header", "true").option("quoteAll", "true")
-            .option("escape", "\"").option("compression", "gzip")
-            .csv(lake)
-          s.read
-            .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
-            .option("header", "true").option("escape", "\"")
-            .csv(lake + "/part-*")
-            .coalesce(1).write.mode("overwrite").parquet(resultOut)
+    StreamingQueries.cached("csv_lake_roundtrip", { (s, d, scratch, resultOut) =>
+        val lake = s"$scratch/csv_lake"
+        t(s, d, "documents")
+          .write.mode("overwrite")
+          .option("header", "true").option("quoteAll", "true")
+          .option("escape", "\"").option("compression", "gzip")
+          .csv(lake)
+        s.read
+          .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
+          .option("header", "true").option("escape", "\"")
+          .csv(lake + "/part-*")
+          .coalesce(1).write.mode("overwrite").parquet(resultOut)
       },
-      Some("SELECT doc_id, text, lang, source, n_chars FROM documents"),
-      bench = false, sideEffecting = true),
+      "SELECT doc_id, text, lang, source, n_chars FROM documents"),
 
     // Malformed-row tolerance of the CSV source (PERMISSIVE mode): a lake
     // file carrying rows that cannot parse against the schema (type
@@ -380,43 +368,39 @@ object EnvelopeQueries {
     // bad row moves that). This is the ingest contract at 100 TB — real
     // crawls always carry a malformed tail, and DROPMALFORMED-style
     // silent loss is the failure mode this guards against.
-    QueryDef(
-      "csv_corrupt_records_audit",
-      (s, d) => StreamingQueries.cachedRun(s, "csv_corrupt_records_audit", d) {
-        (scratch, resultOut) =>
-          val lake = s"$scratch/csv_lake"
-          t(s, d, "documents")
-            .write.mode("overwrite")
-            .option("header", "true").option("quoteAll", "true")
-            .option("escape", "\"")
-            .csv(lake)
-          // inject a file with 7 unparseable rows (header line first —
-          // the reader skips the first line of every file under
-          // header=true)
-          val badLines = "doc_id,text,lang,source,n_chars" +:
-            (1 to 7).map(i => s"not_a_long_$i,broken row $i,xx,srcX,also_not_a_long")
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(lake, "part-bad.csv"),
-            badLines.mkString("\n").getBytes("UTF-8"))
-          val parsed = s.read
-            .schema("doc_id LONG, text STRING, lang STRING, source STRING, " +
-              "n_chars LONG, _corrupt_record STRING")
-            .option("header", "true").option("escape", "\"")
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", "_corrupt_record")
-            .csv(lake + "/part-*")
-          parsed
-            .agg(
-              sum(when(col("_corrupt_record").isNull, 1L).otherwise(0L)).as("n_good"),
-              sum(when(col("_corrupt_record").isNotNull, 1L).otherwise(0L)).as("n_corrupt"),
-              sum(when(col("_corrupt_record").isNull, col("n_chars"))).as("sum_chars"))
-            .coalesce(1).write.mode("overwrite").parquet(resultOut)
+    StreamingQueries.cached("csv_corrupt_records_audit", { (s, d, scratch, resultOut) =>
+        val lake = s"$scratch/csv_lake"
+        t(s, d, "documents")
+          .write.mode("overwrite")
+          .option("header", "true").option("quoteAll", "true")
+          .option("escape", "\"")
+          .csv(lake)
+        // inject a file with 7 unparseable rows (header line first —
+        // the reader skips the first line of every file under
+        // header=true)
+        val badLines = "doc_id,text,lang,source,n_chars" +:
+          (1 to 7).map(i => s"not_a_long_$i,broken row $i,xx,srcX,also_not_a_long")
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get(lake, "part-bad.csv"),
+          badLines.mkString("\n").getBytes("UTF-8"))
+        val parsed = s.read
+          .schema("doc_id LONG, text STRING, lang STRING, source STRING, " +
+            "n_chars LONG, _corrupt_record STRING")
+          .option("header", "true").option("escape", "\"")
+          .option("mode", "PERMISSIVE")
+          .option("columnNameOfCorruptRecord", "_corrupt_record")
+          .csv(lake + "/part-*")
+        parsed
+          .agg(
+            sum(when(col("_corrupt_record").isNull, 1L).otherwise(0L)).as("n_good"),
+            sum(when(col("_corrupt_record").isNotNull, 1L).otherwise(0L)).as("n_corrupt"),
+            sum(when(col("_corrupt_record").isNull, col("n_chars"))).as("sum_chars"))
+          .coalesce(1).write.mode("overwrite").parquet(resultOut)
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_good,
+      """SELECT CAST(count(*) AS BIGINT) AS n_good,
              |  CAST(7 AS BIGINT) AS n_corrupt,
              |  CAST(sum(n_chars) AS BIGINT) AS sum_chars
              |FROM documents""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // Right-to-be-forgotten rewrite: delete every row for an erasure list
     // of user_ids from an immutable lake by anti-filtered rewrite, then
@@ -427,59 +411,51 @@ object EnvelopeQueries {
     // the deletion leg every compliance pipeline needs. At scale the
     // rewrite touches only files whose min/max user_id stats overlap the
     // list — the audit shape is identical.
-    QueryDef(
-      "gdpr_delete_rewrite",
-      (s, d) => StreamingQueries.cachedRun(s, "gdpr_delete_rewrite", d) {
-        (scratch, resultOut) =>
-          val lake = s"$scratch/ev_lake"
-          t(s, d, "events").select(col("event_id"), col("user_id"))
-            .write.mode("overwrite").parquet(lake)
-          val forgotten = Seq(3L, 7L, 11L, 19L)
-          val before = s.read.parquet(lake)
-          val nBefore = before.count()
-          val rewritten = s"$scratch/ev_lake_v2"
-          before.filter(!col("user_id").isin(forgotten: _*))
-            .write.mode("overwrite").parquet(rewritten)
-          s.read.parquet(rewritten)
-            .agg(count(lit(1)).as("n_after"),
-              sum(when(col("user_id").isin(forgotten: _*), 1L).otherwise(0L))
-                .as("n_residual"),
-              sum(col("event_id")).as("id_checksum"))
-            .select(lit(nBefore).as("n_before"), col("n_after"),
-              col("n_residual"), col("id_checksum"))
-            .coalesce(1).write.mode("overwrite").parquet(resultOut)
+    StreamingQueries.cached("gdpr_delete_rewrite", { (s, d, scratch, resultOut) =>
+        val lake = s"$scratch/ev_lake"
+        t(s, d, "events").select(col("event_id"), col("user_id"))
+          .write.mode("overwrite").parquet(lake)
+        val forgotten = Seq(3L, 7L, 11L, 19L)
+        val before = s.read.parquet(lake)
+        val nBefore = before.count()
+        val rewritten = s"$scratch/ev_lake_v2"
+        before.filter(!col("user_id").isin(forgotten: _*))
+          .write.mode("overwrite").parquet(rewritten)
+        s.read.parquet(rewritten)
+          .agg(count(lit(1)).as("n_after"),
+            sum(when(col("user_id").isin(forgotten: _*), 1L).otherwise(0L))
+              .as("n_residual"),
+            sum(col("event_id")).as("id_checksum"))
+          .select(lit(nBefore).as("n_before"), col("n_after"),
+            col("n_residual"), col("id_checksum"))
+          .coalesce(1).write.mode("overwrite").parquet(resultOut)
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_before,
+      """SELECT CAST(count(*) AS BIGINT) AS n_before,
              |  CAST(sum(CASE WHEN user_id NOT IN (3, 7, 11, 19)
              |    THEN 1 ELSE 0 END) AS BIGINT) AS n_after,
              |  CAST(0 AS BIGINT) AS n_residual,
              |  CAST(sum(CASE WHEN user_id NOT IN (3, 7, 11, 19)
              |    THEN event_id ELSE 0 END) AS BIGINT) AS id_checksum
              |FROM events""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // ORC round-trip — the second columnar format (Spark ships the ORC
     // reader/writer alongside parquet; lakes migrating between the two is
     // routine). Type fidelity across the encode/decode is what's checked:
     // longs, strings, and the timestamp-carrying events table would all
     // hash-fail on a lossy mapping. snappy + explicit no-inference read.
-    QueryDef(
-      "orc_lake_roundtrip",
-      (s, d) => StreamingQueries.cachedRun(s, "orc_lake_roundtrip", d) {
-        (scratch, resultOut) =>
-          val lake = s"$scratch/orc_lake"
-          t(s, d, "events")
-            .select(col("event_id"), col("user_id"),
-              col("ts").cast("timestamp_ntz").as("ts"),
-              col("event_type"), col("value"))
-            .write.mode("overwrite").option("compression", "snappy").orc(lake)
-          s.read
-            .schema("event_id LONG, user_id LONG, ts TIMESTAMP_NTZ, event_type STRING, value DOUBLE")
-            .orc(lake + "/part-*")
-            .coalesce(1).write.mode("overwrite").parquet(resultOut)
+    StreamingQueries.cached("orc_lake_roundtrip", { (s, d, scratch, resultOut) =>
+        val lake = s"$scratch/orc_lake"
+        t(s, d, "events")
+          .select(col("event_id"), col("user_id"),
+            col("ts").cast("timestamp_ntz").as("ts"),
+            col("event_type"), col("value"))
+          .write.mode("overwrite").option("compression", "snappy").orc(lake)
+        s.read
+          .schema("event_id LONG, user_id LONG, ts TIMESTAMP_NTZ, event_type STRING, value DOUBLE")
+          .orc(lake + "/part-*")
+          .coalesce(1).write.mode("overwrite").parquet(resultOut)
       },
-      Some("SELECT event_id, user_id, ts, event_type, value FROM events"),
-      bench = false, sideEffecting = true),
+      "SELECT event_id, user_id, ts, event_type, value FROM events"),
 
     // XML lake round trip over Spark 4's NATIVE xml source (new in 4.0 —
     // no external spark-xml module): events → row-tagged XML → explicit
@@ -489,29 +465,25 @@ object EnvelopeQueries {
     // bit-identical), and the timestamp format is forced to
     // microsecond precision on BOTH legs — the default millis pattern
     // would silently truncate the micro component and hash-fail.
-    QueryDef(
-      "xml_lake_roundtrip",
-      (s, d) => StreamingQueries.cachedRun(s, "xml_lake_roundtrip", d) {
-        (scratch, resultOut) =>
-          val lake = s"$scratch/xml_lake"
-          val tsFmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-          t(s, d, "events")
-            .select(col("event_id"), col("user_id"),
-              col("ts").cast("timestamp_ntz").as("ts"),
-              col("event_type"), col("value"))
-            .write.mode("overwrite")
-            .option("rowTag", "event").option("rootTag", "events")
-            .option("timestampNTZFormat", tsFmt)
-            .format("xml").save(lake)
-          s.read
-            .schema("event_id LONG, user_id LONG, ts TIMESTAMP_NTZ, event_type STRING, value DOUBLE")
-            .option("rowTag", "event")
-            .option("timestampNTZFormat", tsFmt)
-            .format("xml").load(lake + "/part-*")
-            .coalesce(1).write.mode("overwrite").parquet(resultOut)
+    StreamingQueries.cached("xml_lake_roundtrip", { (s, d, scratch, resultOut) =>
+        val lake = s"$scratch/xml_lake"
+        val tsFmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
+        t(s, d, "events")
+          .select(col("event_id"), col("user_id"),
+            col("ts").cast("timestamp_ntz").as("ts"),
+            col("event_type"), col("value"))
+          .write.mode("overwrite")
+          .option("rowTag", "event").option("rootTag", "events")
+          .option("timestampNTZFormat", tsFmt)
+          .format("xml").save(lake)
+        s.read
+          .schema("event_id LONG, user_id LONG, ts TIMESTAMP_NTZ, event_type STRING, value DOUBLE")
+          .option("rowTag", "event")
+          .option("timestampNTZFormat", tsFmt)
+          .format("xml").load(lake + "/part-*")
+          .coalesce(1).write.mode("overwrite").parquet(resultOut)
       },
-      Some("SELECT event_id, user_id, ts, event_type, value FROM events"),
-      bench = false, sideEffecting = true),
+      "SELECT event_id, user_id, ts, event_type, value FROM events"),
 
     // Hive-partitioned lake + partition-pruned read: events written
     // partitioned BY event_type, then read with a partition-column
@@ -523,24 +495,20 @@ object EnvelopeQueries {
     // data files entirely (they live in the directory name) and must be
     // restored losslessly on read, including rows where the partition
     // value interacts with the row payload.
-    QueryDef(
-      "partition_pruned_scan",
-      (s, d) => StreamingQueries.cachedRun(s, "partition_pruned_scan", d) {
-        (scratch, resultOut) =>
-          val lake = s"$scratch/ev_by_type"
-          t(s, d, "events")
-            .select(col("event_id"), col("user_id"),
-              col("ts").cast("timestamp_ntz").as("ts"),
-              col("value"), col("event_type"))
-            .write.mode("overwrite").partitionBy("event_type").parquet(lake)
-          s.read.parquet(lake)
-            .filter(col("event_type") === "purchase")
-            .select("event_id", "user_id", "ts", "event_type", "value")
-            .coalesce(1).write.mode("overwrite").parquet(resultOut)
+    StreamingQueries.cached("partition_pruned_scan", { (s, d, scratch, resultOut) =>
+        val lake = s"$scratch/ev_by_type"
+        t(s, d, "events")
+          .select(col("event_id"), col("user_id"),
+            col("ts").cast("timestamp_ntz").as("ts"),
+            col("value"), col("event_type"))
+          .write.mode("overwrite").partitionBy("event_type").parquet(lake)
+        s.read.parquet(lake)
+          .filter(col("event_type") === "purchase")
+          .select("event_id", "user_id", "ts", "event_type", "value")
+          .coalesce(1).write.mode("overwrite").parquet(resultOut)
       },
-      Some("""SELECT event_id, user_id, ts, event_type, value
+      """SELECT event_id, user_id, ts, event_type, value
              |FROM events WHERE event_type = 'purchase'""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // Lake file-layout audit — the small-files/skew diagnostic a
     // compaction planner reads: the events lake is written one file per
@@ -552,29 +520,25 @@ object EnvelopeQueries {
     // table's own group-by — proving the directory layout, the file
     // census, and the data tell one story. At 100 TB this audit is a
     // listing-plus-footer pass, never a data scan.
-    QueryDef(
-      "lake_file_skew_audit",
-      (s, d) => StreamingQueries.cachedRun(s, "lake_file_skew_audit", d) {
-        (scratch, resultOut) =>
-          val lake = s"$scratch/ev_files_by_type"
-          t(s, d, "events")
-            .select(col("event_id"), col("value"), col("event_type"))
-            .repartition(col("event_type"))
-            .write.mode("overwrite").partitionBy("event_type").parquet(lake)
-          s.read.parquet(lake)
-            .select(regexp_extract(input_file_name(),
-              "event_type=([^/]+)/", 1).as("event_type"),
-              input_file_name().as("f"))
-            .groupBy("event_type")
-            .agg(count(lit(1)).as("n_rows"),
-              countDistinct(col("f")).as("n_files"))
-            .orderBy("event_type")
-            .coalesce(1).write.mode("overwrite").parquet(resultOut)
+    StreamingQueries.cached("lake_file_skew_audit", { (s, d, scratch, resultOut) =>
+        val lake = s"$scratch/ev_files_by_type"
+        t(s, d, "events")
+          .select(col("event_id"), col("value"), col("event_type"))
+          .repartition(col("event_type"))
+          .write.mode("overwrite").partitionBy("event_type").parquet(lake)
+        s.read.parquet(lake)
+          .select(regexp_extract(input_file_name(),
+            "event_type=([^/]+)/", 1).as("event_type"),
+            input_file_name().as("f"))
+          .groupBy("event_type")
+          .agg(count(lit(1)).as("n_rows"),
+            countDistinct(col("f")).as("n_files"))
+          .orderBy("event_type")
+          .coalesce(1).write.mode("overwrite").parquet(resultOut)
       },
-      Some("""SELECT event_type, CAST(count(*) AS BIGINT) AS n_rows,
+      """SELECT event_type, CAST(count(*) AS BIGINT) AS n_rows,
              |  CAST(1 AS BIGINT) AS n_files
              |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // Dynamic partition pruning: the fact lake is partitioned by order
     // month, the month dimension (month → quarter) is filtered on a
@@ -585,31 +549,28 @@ object EnvelopeQueries {
     // On a 100 TB date-partitioned lake this is the difference between
     // scanning 3 months and scanning 7 years. The oracle replays the
     // dim join over the raw table; exact decimal revenue both sides.
-    QueryDef(
-      "dynamic_partition_prune_join",
-      (s, d) => StreamingQueries.cachedRun(s, "dynamic_partition_prune_join", d) {
-        (scratch, resultOut) =>
-          import org.apache.spark.sql.functions.broadcast
-          val lake = s"$scratch/orders_by_month"
-          val orders = t(s, d, "orders")
-          orders.select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-              date_format(col("o_orderdate"), "yyyy-MM").as("om"))
-            .write.mode("overwrite").partitionBy("om").parquet(lake)
-          val dim = orders.select(
-              date_format(col("o_orderdate"), "yyyy-MM").as("om"),
-              concat(year(col("o_orderdate")).cast("string"), lit("-Q"),
-                quarter(col("o_orderdate")).cast("string")).as("oq"))
-            .distinct()
-          s.read.parquet(lake)
-            .join(broadcast(dim.filter(col("oq") === "1996-Q1")), Seq("om"))
-            .groupBy("om")
-            .agg(count(lit(1)).as("n_orders"),
-              sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
-                .as("revenue"))
-            .orderBy("om")
-            .coalesce(1).write.mode("overwrite").parquet(resultOut)
+    StreamingQueries.cached("dynamic_partition_prune_join", { (s, d, scratch, resultOut) =>
+        import org.apache.spark.sql.functions.broadcast
+        val lake = s"$scratch/orders_by_month"
+        val orders = t(s, d, "orders")
+        orders.select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
+            date_format(col("o_orderdate"), "yyyy-MM").as("om"))
+          .write.mode("overwrite").partitionBy("om").parquet(lake)
+        val dim = orders.select(
+            date_format(col("o_orderdate"), "yyyy-MM").as("om"),
+            concat(year(col("o_orderdate")).cast("string"), lit("-Q"),
+              quarter(col("o_orderdate")).cast("string")).as("oq"))
+          .distinct()
+        s.read.parquet(lake)
+          .join(broadcast(dim.filter(col("oq") === "1996-Q1")), Seq("om"))
+          .groupBy("om")
+          .agg(count(lit(1)).as("n_orders"),
+            sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
+              .as("revenue"))
+          .orderBy("om")
+          .coalesce(1).write.mode("overwrite").parquet(resultOut)
       },
-      Some("""WITH fact AS (
+      """WITH fact AS (
              |  SELECT o_orderkey, o_totalprice,
              |    strftime(o_orderdate, '%Y-%m') AS om
              |  FROM orders),
@@ -622,8 +583,7 @@ object EnvelopeQueries {
              |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
              |FROM fact f JOIN dim USING (om)
              |WHERE oq = '1996-Q1'
-             |GROUP BY f.om ORDER BY f.om""".stripMargin),
-      bench = false, sideEffecting = true))
+             |GROUP BY f.om ORDER BY f.om""".stripMargin))
 
   /** The reference SCD2 SQL instantiated for `commerce.users` — identical
     * window algebra to [[scd2HistoryOracleSql]], attr projection swapped to

@@ -1,12 +1,12 @@
 package graft.operators
 
-import graft.{GraftSession, QueryDef}
+import graft.QueryDef
 import graft.cdc.CdcSchemas
-import graft.streaming.{BoundedStream, Scd2Streaming}
+import graft.streaming.{BoundedStream, DocStream, Scd2Streaming}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 /** Driver-visible correctness entries for the streaming path (SURVEY.md
   * §2.8): the continuous modes must converge to the reference's batch
@@ -24,6 +24,16 @@ import org.apache.spark.sql.streaming.OutputMode
   * fixed-size synthetic input (sf-independent by construction — see
   * [[EnvelopeQueries]]), so a timing would measure trigger scheduling and
   * checkpoint I/O, not data-proportional operator cost.
+  *
+  * Each query is one [[cached]] (or [[streamed]]) entry, named once. The
+  * streams it shares with [[graft.StreamingThroughput]]'s legs have one
+  * home under `graft.streaming`, which [[CacheGen]] hashes:
+  * [[Scd2Streaming.startIncremental]] (the SCD2 stream),
+  * [[DocStream]] (the document slicer, its stream read, the LSH band
+  * kernel, the band-owner stream and its fold),
+  * [[BoundedStream.converged]] (the last emission per key of a
+  * batch-id-tagged sink) and [[BoundedStream.startStateful]] (the one
+  * RocksDB scope, for every `transformWithState` stream).
   */
 object StreamingQueries {
 
@@ -44,13 +54,6 @@ object StreamingQueries {
   private[graft] lazy val CacheGen: String = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    // Full packages any streamed/cached pipeline reaches, plus the
-    // graft.operators classes hosting the pipeline bodies themselves.
-    val pkgDirs = Seq("graft/streaming/", "graft/cdc/", "graft/text/")
-    val hostPrefixes = Seq("StreamingQueries", "EnvelopeQueries", "Compaction")
-      .map("graft/operators/" + _)
-    def covered(relName: String): Boolean = relName.endsWith(".class") &&
-      (pkgDirs.exists(relName.startsWith) || hostPrefixes.exists(relName.startsWith))
     val loc = Paths.get(StreamingQueries.getClass
       .getProtectionDomain.getCodeSource.getLocation.toURI)
     // sbt `test` runs from the classes directory; sbt `runMain` packages
@@ -82,6 +85,17 @@ object StreamingQueries {
     md.digest().map("%02x".format(_)).mkString.take(16)
   }
 
+  /** Whether [[CacheGen]] hashes the class file at `relName` (a path
+    * relative to the classes root): full packages any streamed or cached
+    * pipeline reaches, plus the graft.operators classes hosting the
+    * pipeline bodies themselves. The builders the cached runs share live
+    * here, so an edit to them re-keys every cached result.
+    */
+  private[graft] def covered(relName: String): Boolean = relName.endsWith(".class") &&
+    (Seq("graft/streaming/", "graft/cdc/", "graft/text/") ++
+      Seq("StreamingQueries", "EnvelopeQueries", "Compaction").map("graft/operators/" + _))
+      .exists(relName.startsWith)
+
   /** Run a side-effectful streaming pipeline at most once per (query,
     * sfDir content, code generation) and serve the materialized result
     * from parquet afterwards (ADVICE r3): plan-enumerating consumers and
@@ -105,6 +119,20 @@ object StreamingQueries {
     s.read.parquet(dst)
   }
 
+  /** A catalog query that runs a stream: out of the bench headline (see
+    * the header) and side-effecting, since invoking it runs the stream.
+    */
+  private[operators] def streamed(name: String, spark: (SparkSession, String) => DataFrame,
+                                  oracle: String): QueryDef =
+    QueryDef(name, spark, Some(oracle), bench = false, sideEffecting = true)
+
+  /** A [[streamed]] query served by its own [[cachedRun]] under its name:
+    * `run(session, sfDir, scratch, resultOut)`.
+    */
+  private[operators] def cached(name: String, run: (SparkSession, String, String, String) => Unit,
+                                oracle: String): QueryDef =
+    streamed(name, (s, d) => cachedRun(s, name, d)(run(s, d, _, _)), oracle)
+
   /** Stream the products envelope lake through the per-key incremental
     * state (mode 3, transformWithState), one lake file per trigger, and
     * write its converged history to `resultOut` — convergent regardless of
@@ -126,21 +154,13 @@ object StreamingQueries {
   private def scd2Converged(s: SparkSession, sfDir: String): DataFrame =
     cachedRun(s, "streaming_scd2_converged", sfDir)(runIncremental(s, _, _))
 
-  /** Drain an envelope stream through [[Scd2Streaming.incremental]],
-    * appending every emission under `scratch` with its batch id, and return
-    * the converged history ([[Scd2Streaming.converged]]). transformWithState
-    * needs column families, which only the RocksDB state store provides.
+  /** Drain an envelope stream through [[Scd2Streaming.startIncremental]]
+    * and return the converged history of its emissions.
     */
   private def runIncrementalScd2(s: SparkSession, scratch: String, envelopes: DataFrame,
                                  attrFields: Seq[String]): DataFrame = {
-    val out = s"$scratch/emissions"
-    GraftSession.withConf(s, GraftSession.RocksDbStateStore) {
-      val versions = Scd2Streaming.incremental(Scd2Streaming.keyEvents(envelopes, attrFields))
-      BoundedStream.start(versions, s"$scratch/ckpt") { (b, batchId) =>
-        b.withColumn("batch_id", lit(batchId)).write.mode("append").parquet(out)
-      }.awaitTermination()
-    }
-    Scd2Streaming.converged(s.read.parquet(out))
+    Scd2Streaming.startIncremental(envelopes, attrFields, scratch).awaitTermination()
+    BoundedStream.converged(s.read.parquet(s"$scratch/emissions"), Scd2Streaming.VersionKey)
   }
 
   /** Stream the `documents` table through [[graft.streaming.StreamingDedup
@@ -180,29 +200,36 @@ object StreamingQueries {
     */
   private val EventSliceSchema = "ts TIMESTAMP, event_type STRING, value DOUBLE, user_id LONG, event_id LONG"
 
+  /** The `events` stream columns, each row tagged with its time quartile
+    * `slice` (0–3), its epoch `ms` and the table's time bounds `t0`/`t1`.
+    * The bounds come from a broadcast 1-row min/max aggregate — no global
+    * window. Watermarks require TIMESTAMP (ltz); the session zone is UTC,
+    * so the ntz→ltz cast here and the ltz→ntz cast on any output are
+    * identities on the wall-clock values the oracle sees.
+    */
+  private def eventQuartiles(s: SparkSession, sfDir: String): DataFrame = {
+    val ev = graft.QueryDef.t(s, sfDir, "events")
+      .select(col("ts").cast("timestamp").as("ts"),
+        col("event_type"), col("value"), col("user_id"), col("event_id"))
+    val bounds = ev.agg(min(unix_millis(col("ts"))).as("t0"),
+      max(unix_millis(col("ts"))).as("t1"))
+    ev.crossJoin(broadcast(bounds))
+      .withColumn("ms", unix_millis(col("ts")))
+      .withColumn("slice", least(lit(3),
+        floor((col("ms") - col("t0")) * 4 / (col("t1") - col("t0") + 1)).cast("int")))
+  }
+
   /** Stage the `events` table as four deterministic micro-batch files
     * sliced into CONTIGUOUS TIME QUARTILES (trigger order pinned via
     * strictly increasing file mtimes). Time-contiguous slices are what a
     * real CDC/event transport delivers, and they are required for
     * watermark correctness: an event_id-sliced lake would put the whole
     * time range in every trigger, so batch 2+ would arrive behind the
-    * watermark and be dropped as late. The quartile bounds come from a
-    * broadcast 1-row min/max aggregate — no global window. Watermarks
-    * require TIMESTAMP (ltz); the session zone is UTC, so the ntz→ltz
-    * cast here and the ltz→ntz cast on any output are identities on the
-    * wall-clock values the oracle sees.
+    * watermark and be dropped as late ([[eventQuartiles]] cuts them).
     */
   private def stageEventSlices(s: SparkSession, sfDir: String, stage: String,
                                overlapMinutes: Int = 0): String = {
-    val ev = graft.QueryDef.t(s, sfDir, "events")
-      .select(col("ts").cast("timestamp").as("ts"),
-        col("event_type"), col("value"), col("user_id"), col("event_id"))
-    val bounds = ev.agg(min(unix_millis(col("ts"))).as("t0"),
-      max(unix_millis(col("ts"))).as("t1"))
-    val sliced = ev.crossJoin(broadcast(bounds))
-      .withColumn("ms", unix_millis(col("ts")))
-      .withColumn("slice", least(lit(3),
-        floor((col("ms") - col("t0")) * 4 / (col("t1") - col("t0") + 1)).cast("int")))
+    val sliced = eventQuartiles(s, sfDir)
     (0 until 4).foreach { i =>
       // overlap > 0 re-delivers the trailing `overlapMinutes` of the
       // PREVIOUS slice into this one — the at-least-once transport shape
@@ -302,15 +329,7 @@ object StreamingQueries {
     */
   private def stageEventSlicesWithStragglers(s: SparkSession, sfDir: String,
                                              stage: String): String = {
-    val ev = graft.QueryDef.t(s, sfDir, "events")
-      .select(col("ts").cast("timestamp").as("ts"),
-        col("event_type"), col("value"), col("user_id"), col("event_id"))
-    val bounds = ev.agg(min(unix_millis(col("ts"))).as("t0"),
-      max(unix_millis(col("ts"))).as("t1"))
-    val sliced = ev.crossJoin(broadcast(bounds))
-      .withColumn("ms", unix_millis(col("ts")))
-      .withColumn("slice", least(lit(3),
-        floor((col("ms") - col("t0")) * 4 / (col("t1") - col("t0") + 1)).cast("int")))
+    val sliced = eventQuartiles(s, sfDir)
       .withColumn("h", PipelineQueries.hashPermille(col("event_id"), "late"))
       .withColumn("early",
         floor((col("ms") - col("t0")) * 8 / (col("t1") - col("t0") + 1)).cast("long") % 2 === 0)
@@ -355,19 +374,17 @@ object StreamingQueries {
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
     BoundedStream.start(agg, s"$scratch/ckpt", OutputMode.Update()) { (b, batchId) =>
-      b.select(col("window.start").cast("timestamp_ntz").as("hour_start"),
-          col("event_type"), col("n_events"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(out)
+      BoundedStream.appendTagged(out)(b.select(
+        col("window.start").cast("timestamp_ntz").as("hour_start"),
+        col("event_type"), col("n_events")), batchId)
     }.awaitTermination()
-    s.read.parquet(out)
-      .groupBy("hour_start", "event_type")
-      .agg(max_by(col("n_events"), col("batch_id")).as("n_events"))
+    BoundedStream.converged(s.read.parquet(out), Seq("hour_start", "event_type"))
       .coalesce(1).write.mode("overwrite").parquet(resultOut)
   }
 
-  /** Streaming Count-Min maintenance: the corpus arrives as three
-    * doc-id-sliced micro-batches; each trigger folds ONLY ITS BATCH
+  /** Streaming Count-Min maintenance: the corpus arrives as the four
+    * doc-id-sliced micro-batches of [[DocStream.ensureSlices]] (the LSH
+    * queries' lake); each trigger folds ONLY ITS BATCH
     * into partial (row, bucket) counters and the final counters are
     * the cell-wise sum — the linearity that makes CMS the sketch of
     * choice for streams (counters merge by addition, so the slicing
@@ -379,12 +396,6 @@ object StreamingQueries {
   private def runCmsMaintain(s: SparkSession, sfDir: String, scratch: String, resultOut: String): Unit = {
     val docs = graft.QueryDef.t(s, sfDir, "documents")
       .select(col("doc_id"), col("text"))
-    val nd = docs.agg(max("doc_id")).head().getLong(0) + 1
-    (0 until 3).foreach { i =>
-      BoundedStream.writeSlice(
-        docs.filter(col("doc_id") >= nd * i / 3 && col("doc_id") < nd * (i + 1) / 3),
-        s"$scratch/doclake/b$i", i)
-    }
     val out = s"$scratch/emissions"
     def bucketed(df: DataFrame) = df
       .select(explode(graft.text.TextOps.tokens(col("text"))).as("tok"))
@@ -392,8 +403,7 @@ object StreamingQueries {
       .withColumn("bucket",
         graft.functions.GraftFunctions.md5Prefix(concat(lit("cms"),
           col("j").cast("string"), lit(":"), col("tok")), 15) % 256L)
-    val docStream = s.readStream.schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", 1).parquet(s"$scratch/doclake/b*/part-*")
+    val docStream = DocStream.read(s, DocStream.ensureSlices(s, sfDir, 1, 4))
     BoundedStream.start(docStream, s"$scratch/ckpt") { (b, _) =>
       bucketed(b).groupBy("j", "bucket").agg(count(lit(1)).as("c"))
         .write.mode("append").parquet(out)
@@ -638,35 +648,25 @@ object StreamingQueries {
   }
 
   /** Running per-key aggregate through the Spark 4 arbitrary-state v2 API
-    * ([[graft.streaming.StatefulAgg.RunningAgg]]): transformWithState
-    * requires the RocksDB state store, so the conf is set for the run and
-    * restored after. Update-mode emissions land per batch; the converged
-    * value per key is the last emission (argmax by batch id).
+    * ([[graft.streaming.StatefulAgg.RunningAgg]]). Update-mode emissions
+    * land per batch; the converged value per key is the last emission.
     */
   private def runStatefulAgg(s: SparkSession, sfDir: String, scratch: String, resultOut: String): Unit = {
     import s.implicits._
     val glob = stageEventSlices(s, sfDir, s"$scratch/evlake")
     val out = s"$scratch/emissions"
-    GraftSession.withConf(s, GraftSession.RocksDbStateStore) {
-      val ds = eventStream(s, glob)
-        .select(col("user_id"),
-          (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
-            .cast("long").as("cents"))
-        .as[(Long, Long)]
-      val updates = ds.groupByKey(_._1)
-        .transformWithState(new graft.streaming.StatefulAgg.RunningAgg,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update())
-      BoundedStream.start(updates, s"$scratch/ckpt") { (b, batchId) =>
-        b.withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(out)
-      }.awaitTermination()
-    }
-    s.read.parquet(out)
-      .groupBy("user_id")
-      .agg(max_by(struct(col("n_events"), col("sum_cents")), col("batch_id")).as("v"))
-      .select(col("user_id"), col("v.n_events").as("n_events"),
-        col("v.sum_cents").as("sum_cents"))
+    val updates = eventStream(s, glob)
+      .select(col("user_id"),
+        (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
+          .cast("long").as("cents"))
+      .as[(Long, Long)]
+      .groupByKey(_._1)
+      .transformWithState(new graft.streaming.StatefulAgg.RunningAgg,
+        TimeMode.None(), OutputMode.Update())
+    BoundedStream.startStateful(updates, s"$scratch/ckpt")(
+      BoundedStream.appendTagged(out)).awaitTermination()
+    BoundedStream.converged(s.read.parquet(out), Seq("user_id"))
+      .select("user_id", "n_events", "sum_cents")
       .coalesce(1).write.mode("overwrite").parquet(resultOut)
   }
 
@@ -683,23 +683,20 @@ object StreamingQueries {
     val glob = stageEventSlices(s, sfDir, stage)
     stageSentinelSlice(s, sfDir, stage, leadHours = 60L)
     val out = s"$scratch/emissions"
-    GraftSession.withConf(s, GraftSession.RocksDbStateStore) {
-      val ds = eventStream(s, glob)
-        .select(col("ts").cast("timestamp").as("ts"), col("user_id"),
-          expr("CAST(unix_date(CAST(ts AS DATE)) AS BIGINT)").as("dnum"),
-          (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
-            .cast("long").as("cents"))
-        .withWatermark("ts", "2 hours")
-        .select(col("user_id"), col("dnum"), col("cents"))
-        .as[(Long, Long, Long)]
-      val closes = ds.groupByKey(_._1)
-        .transformWithState(new graft.streaming.StatefulAgg.DayCloser,
-          org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          OutputMode.Append())
-      BoundedStream.start(closes, s"$scratch/ckpt") { (b, _) =>
-        b.write.mode("append").parquet(out)
-      }.awaitTermination()
-    }
+    val closes = eventStream(s, glob)
+      .select(col("ts").cast("timestamp").as("ts"), col("user_id"),
+        expr("CAST(unix_date(CAST(ts AS DATE)) AS BIGINT)").as("dnum"),
+        (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
+          .cast("long").as("cents"))
+      .withWatermark("ts", "2 hours")
+      .select(col("user_id"), col("dnum"), col("cents"))
+      .as[(Long, Long, Long)]
+      .groupByKey(_._1)
+      .transformWithState(new graft.streaming.StatefulAgg.DayCloser,
+        TimeMode.EventTime(), OutputMode.Append())
+    BoundedStream.startStateful(closes, s"$scratch/ckpt") { (b, _) =>
+      b.write.mode("append").parquet(out)
+    }.awaitTermination()
     s.read.parquet(out)
       .filter(col("user_id") =!= -1L)
       .select("user_id", "dnum", "n_events", "sum_cents")
@@ -731,26 +728,22 @@ object StreamingQueries {
     val stage = s"$scratch/evlake"
     val glob = stageEventSlices(s, sfDir, stage)
     val out = s"$scratch/emissions"
-    GraftSession.withConf(s, GraftSession.RocksDbStateStore) {
-      val ds = eventStream(s, glob)
-        .select(col("ts").cast("timestamp").as("ts"), col("user_id"),
-          // tz-independent day key (floor of epoch ms), so the key and
-          // the DayCloser timer boundary share one clock by construction
-          // (ADVICE r11; equals unix_date under the pinned UTC session)
-          expr("CAST(floor(unix_millis(ts) / 86400000) AS BIGINT)").as("dnum"),
-          (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
-            .cast("long").as("cents"))
-        .withWatermark("ts", "2 hours")
-        .select(col("user_id"), col("dnum"), col("cents"))
-        .as[(Long, Long, Long)]
-      val closes = ds.groupByKey(_._1)
-        .transformWithState(new graft.streaming.StatefulAgg.DayCloser,
-          org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          OutputMode.Append())
-      BoundedStream.start(closes, s"$scratch/ckpt") { (b, bid) =>
-        b.withColumn("batch_id", lit(bid)).write.mode("append").parquet(out)
-      }.awaitTermination()
-    }
+    val closes = eventStream(s, glob)
+      .select(col("ts").cast("timestamp").as("ts"), col("user_id"),
+        // tz-independent day key (floor of epoch ms), so the key and
+        // the DayCloser timer boundary share one clock by construction
+        // (ADVICE r11; equals unix_date under the pinned UTC session)
+        expr("CAST(floor(unix_millis(ts) / 86400000) AS BIGINT)").as("dnum"),
+        (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
+          .cast("long").as("cents"))
+      .withWatermark("ts", "2 hours")
+      .select(col("user_id"), col("dnum"), col("cents"))
+      .as[(Long, Long, Long)]
+      .groupByKey(_._1)
+      .transformWithState(new graft.streaming.StatefulAgg.DayCloser,
+        TimeMode.EventTime(), OutputMode.Append())
+    BoundedStream.startStateful(closes, s"$scratch/ckpt")(
+      BoundedStream.appendTagged(out)).awaitTermination()
     // batch replay of both ledgers from the staged slices
     val sliced = (0 until 4).map { i =>
       s.read.parquet(s"$stage/b$i").withColumn("slice", lit(i))
@@ -805,22 +798,16 @@ object StreamingQueries {
     import s.implicits._
     val glob = stageEventSlices(s, sfDir, s"$scratch/evlake")
     val out = s"$scratch/emissions"
-    GraftSession.withConf(s, GraftSession.RocksDbStateStore) {
-      val ds = eventStream(s, glob)
-        .select(col("event_type"), col("user_id"))
-        .as[(String, Long)]
-      val updates = ds.groupByKey(_._1)
-        .transformWithState(new graft.streaming.StatefulAgg.DistinctUsers,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update())
-      BoundedStream.start(updates, s"$scratch/ckpt") { (b, batchId) =>
-        b.withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(out)
-      }.awaitTermination()
-    }
-    s.read.parquet(out)
-      .groupBy("event_type")
-      .agg(max_by(col("n_distinct"), col("batch_id")).as("n_distinct"))
+    val updates = eventStream(s, glob)
+      .select(col("event_type"), col("user_id"))
+      .as[(String, Long)]
+      .groupByKey(_._1)
+      .transformWithState(new graft.streaming.StatefulAgg.DistinctUsers,
+        TimeMode.None(), OutputMode.Update())
+    BoundedStream.startStateful(updates, s"$scratch/ckpt")(
+      BoundedStream.appendTagged(out)).awaitTermination()
+    BoundedStream.converged(s.read.parquet(out), Seq("event_type"))
+      .select("event_type", "n_distinct")
       .orderBy("event_type")
       .coalesce(1).write.mode("overwrite").parquet(resultOut)
   }
@@ -832,22 +819,16 @@ object StreamingQueries {
     import s.implicits._
     val glob = stageEventSlices(s, sfDir, s"$scratch/evlake")
     val out = s"$scratch/emissions"
-    GraftSession.withConf(s, GraftSession.RocksDbStateStore) {
-      val ds = eventStream(s, glob)
-        .select(col("user_id"), col("event_id"), col("event_type"))
-        .as[(Long, Long, String)]
-      val updates = ds.groupByKey(_._1)
-        .transformWithState(new graft.streaming.StatefulAgg.LastNEvents,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update())
-      BoundedStream.start(updates, s"$scratch/ckpt") { (b, batchId) =>
-        b.withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(out)
-      }.awaitTermination()
-    }
-    s.read.parquet(out)
-      .groupBy("user_id")
-      .agg(max_by(col("last3"), col("batch_id")).as("last3"))
+    val updates = eventStream(s, glob)
+      .select(col("user_id"), col("event_id"), col("event_type"))
+      .as[(Long, Long, String)]
+      .groupByKey(_._1)
+      .transformWithState(new graft.streaming.StatefulAgg.LastNEvents,
+        TimeMode.None(), OutputMode.Update())
+    BoundedStream.startStateful(updates, s"$scratch/ckpt")(
+      BoundedStream.appendTagged(out)).awaitTermination()
+    BoundedStream.converged(s.read.parquet(out), Seq("user_id"))
+      .select("user_id", "last3")
       .orderBy("user_id")
       .coalesce(1).write.mode("overwrite").parquet(resultOut)
   }
@@ -895,20 +876,17 @@ object StreamingQueries {
     import s.implicits._
     val glob = stageEventSlices(s, sfDir, s"$scratch/evlake")
     val out = s"$scratch/deltas"
-    GraftSession.withConf(s, GraftSession.RocksDbStateStore) {
-      val ds = eventStream(s, glob)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
-            .cast("long").as("cents"))
-        .as[(Long, Long, String, Long)]
-      val deltas = ds.groupByKey(_._1)
-        .transformWithState(new graft.streaming.StatefulAgg.ChangelogAgg,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Append())
-      BoundedStream.start(deltas, s"$scratch/ckpt") { (b, _) =>
-        b.write.mode("append").parquet(out)
-      }.awaitTermination()
-    }
+    val deltas = eventStream(s, glob)
+      .select(col("user_id"), col("event_id"), col("event_type"),
+        (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
+          .cast("long").as("cents"))
+      .as[(Long, Long, String, Long)]
+      .groupByKey(_._1)
+      .transformWithState(new graft.streaming.StatefulAgg.ChangelogAgg,
+        TimeMode.None(), OutputMode.Append())
+    BoundedStream.startStateful(deltas, s"$scratch/ckpt") { (b, _) =>
+      b.write.mode("append").parquet(out)
+    }.awaitTermination()
     s.read.parquet(out)
       .groupBy("grp")
       .agg(sum(col("dn")).as("n_entities"), sum(col("dcents")).as("sum_cents"))
@@ -995,23 +973,6 @@ object StreamingQueries {
       .coalesce(1).write.mode("overwrite").parquet(resultOut)
   }
 
-  /** Stage `documents` as four doc_id-quartile slices (modtime-ordered,
-    * one file per trigger) — the ingestion-ordered corpus stream the
-    * at-ingest dedup consumes. doc_id is the arrival order by contract.
-    */
-  private def stageDocSlices(s: SparkSession, sfDir: String, stage: String): String = {
-    val docs = graft.QueryDef.t(s, sfDir, "documents").select(col("doc_id"), col("text"))
-    val bounds = docs.agg(min(col("doc_id")).as("d0"), max(col("doc_id")).as("d1"))
-    val sliced = docs.crossJoin(broadcast(bounds))
-      .withColumn("slice", least(lit(3),
-        floor((col("doc_id") - col("d0")) * 4 / (col("d1") - col("d0") + 1)).cast("int")))
-    (0 until 4).foreach { i =>
-      BoundedStream.writeSlice(sliced.filter(col("slice") === i).drop("slice", "d0", "d1"),
-        s"$stage/b$i", i)
-    }
-    stage + "/b*/part-*.parquet"
-  }
-
   /** Streaming LSH dedup AT INGEST — the 100 TB streaming-corpus shape:
     * every arriving document is fingerprinted by the codegen MinHash
     * kernel, exploded to its 8 band digests, and each band consults an
@@ -1022,33 +983,26 @@ object StreamingQueries {
     * so the converged flags equal the batch first-seen-per-band replay
     * the oracle computes. The batch sibling is dedup_incremental_newbatch
     * (probe of a static index); this is the continuous leg.
+    *
+    * With `horizonDocs` it is the TTL'd sibling (VERDICT r16 task #2): the
+    * band state is [[graft.streaming.StatefulAgg.BandOwnerTtl]] —
+    * horizon-bounded run semantics with event-time-timer deletion, so
+    * state is O(bands in the trailing horizon) instead of O(all bands
+    * ever). doc_id is the event clock (ts = timestamp_seconds(doc_id), 0 s
+    * watermark): on the doc_id-monotone staged stream the watermark is
+    * exactly "every future arrival is past this id", which is what makes
+    * timer deletion output-invariant and the whole leg batch-replayable by
+    * a LAG window.
+    *
+    * Both run the one band-owner stream ([[DocStream.startBandOwner]])
+    * over the corpus's four doc_id-quartile slices, folded to the
+    * per-document duplicate counts.
     */
-  private def runLshDedupIngest(s: SparkSession, sfDir: String, scratch: String, resultOut: String): Unit = {
-    import s.implicits._
-    val glob = stageDocSlices(s, sfDir, s"$scratch/doclake")
-    val out = s"$scratch/flags"
-    GraftSession.withConf(s, GraftSession.RocksDbStateStore) {
-      val sigExpr = graft.functions.GraftFunctions
-        .minhashSignature(col("text"), 16, 3)
-      val banded = s.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", 1).parquet(glob)
-        .filter(size(split(col("text"), " ")) >= 3)
-        .select(col("doc_id"), sigExpr.as("__sig"))
-        .select(col("doc_id"),
-          explode(graft.dedup.Dedup.lshBandDigests(col("__sig"), 8, 2)).as("band"))
-        .as[(Long, String)]
-      val flags = banded.groupByKey(_._2)
-        .transformWithState(new graft.streaming.StatefulAgg.BandOwner,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Append())
-      BoundedStream.start(flags, s"$scratch/ckpt") { (b, _) =>
-        b.write.mode("append").parquet(out)
-      }.awaitTermination()
-    }
-    s.read.parquet(out)
-      .groupBy("doc_id")
-      .agg(sum(when(col("dup"), 1L).otherwise(0L)).as("n_dup_bands"),
-        (sum(when(col("dup"), 1L).otherwise(0L)) > 0).as("is_duplicate"))
+  private def runLshDedup(s: SparkSession, sfDir: String, scratch: String, resultOut: String,
+                          horizonDocs: Option[Long]): Unit = {
+    DocStream.startBandOwner(s, DocStream.ensureSlices(s, sfDir, 1, 4), horizonDocs, scratch)
+      .awaitTermination()
+    DocStream.dupCounts(s.read.parquet(s"$scratch/flags"))
       .coalesce(1).write.mode("overwrite").parquet(resultOut)
   }
 
@@ -1087,48 +1041,6 @@ object StreamingQueries {
     */
   private[operators] val LshTtlHorizonDocs = 100L
 
-  /** The TTL'd sibling of [[runLshDedupIngest]] (VERDICT r16 task #2):
-    * same codegen MinHash → band explode front end, but the band state is
-    * [[graft.streaming.StatefulAgg.BandOwnerTtl]] — horizon-bounded run
-    * semantics with event-time-timer deletion, so state is O(bands in the
-    * trailing horizon) instead of O(all bands ever). doc_id is the event
-    * clock (ts = timestamp_seconds(doc_id), 0 s watermark): on the
-    * doc_id-monotone staged stream the watermark is exactly "every future
-    * arrival is past this id", which is what makes timer deletion
-    * output-invariant and the whole leg batch-replayable by a LAG window.
-    */
-  private def runLshDedupTtl(s: SparkSession, sfDir: String, scratch: String, resultOut: String): Unit = {
-    import s.implicits._
-    val glob = stageDocSlices(s, sfDir, s"$scratch/doclake")
-    val out = s"$scratch/flags"
-    GraftSession.withConf(s, GraftSession.RocksDbStateStore) {
-      val sigExpr = graft.functions.GraftFunctions
-        .minhashSignature(col("text"), 16, 3)
-      val banded = s.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", 1).parquet(glob)
-        .filter(size(split(col("text"), " ")) >= 3)
-        .select(col("doc_id"), sigExpr.as("__sig"),
-          timestamp_seconds(col("doc_id")).as("ts"))
-        .withWatermark("ts", "0 seconds")
-        .select(col("doc_id"),
-          explode(graft.dedup.Dedup.lshBandDigests(col("__sig"), 8, 2)).as("band"))
-        .as[(Long, String)]
-      val flags = banded.groupByKey(_._2)
-        .transformWithState(
-          new graft.streaming.StatefulAgg.BandOwnerTtl(LshTtlHorizonDocs),
-          org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          OutputMode.Append())
-      BoundedStream.start(flags, s"$scratch/ckpt") { (b, _) =>
-        b.write.mode("append").parquet(out)
-      }.awaitTermination()
-    }
-    s.read.parquet(out)
-      .groupBy("doc_id")
-      .agg(sum(when(col("dup"), 1L).otherwise(0L)).as("n_dup_bands"),
-        (sum(when(col("dup"), 1L).otherwise(0L)) > 0).as("is_duplicate"))
-      .coalesce(1).write.mode("overwrite").parquet(resultOut)
-  }
-
   val defs: Seq[QueryDef] = Seq(
 
     // The converged gap-session set must equal the batch gaps-and-islands
@@ -1137,10 +1049,8 @@ object StreamingQueries {
     // so the oracle starts a new session at gap >= 30 min; session end is
     // last event + gap. A state-eviction or merge bug across triggers
     // hash-fails.
-    QueryDef(
-      "streaming_session_windows",
-      (s, d) => cachedRun(s, "streaming_session_windows", d)(runSessionWindows(s, d, _, _)),
-      Some("""WITH e AS (
+    cached("streaming_session_windows", runSessionWindows,
+      """WITH e AS (
              |  SELECT user_id, ts, value,
              |    LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts
              |  FROM events),
@@ -1160,7 +1070,6 @@ object StreamingQueries {
              |  count(*) AS n_events,
              |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
              |FROM sess GROUP BY user_id, sid""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // The streamed session-path funnel must emit the batch funnel's
     // pattern counts exactly, under session_window's >=30min gap rule
@@ -1169,10 +1078,8 @@ object StreamingQueries {
     // is strict `>`, indistinguishable at microsecond timestamps but
     // pinned faithfully here). A session whose path is emitted before a
     // late pane extends it, or split across triggers, hash-fails.
-    QueryDef(
-      "streaming_path_funnel",
-      (s, d) => cachedRun(s, "streaming_path_funnel", d)(runSessionPaths(s, d, _, _)),
-      Some("""WITH e AS (
+    cached("streaming_path_funnel", runSessionPaths,
+      """WITH e AS (
              |  SELECT user_id, ts, event_id, event_type,
              |    LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
              |  FROM events),
@@ -1206,30 +1113,23 @@ object StreamingQueries {
              |  UNION ALL SELECT 'repeated_errors', m_repeated_errors FROM agg
              |  UNION ALL SELECT 'ends_in_purchase', m_ends_in_purchase FROM agg) p
              |ORDER BY p.pattern""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // Exactly-once recovery from at-least-once redelivery: the deduped
     // stream must equal the original event set row-for-row — a surviving
     // duplicate (state evicted too early) or a dropped original (overeager
     // dedup, late-drop) hash-fails against the plain table.
-    QueryDef(
-      "streaming_exactly_once_dedup",
-      (s, d) => cachedRun(s, "streaming_exactly_once_dedup", d)(runAtLeastOnceDedup(s, d, _, _)),
-      Some("SELECT event_id, user_id, ts, event_type, value FROM events"),
-      bench = false, sideEffecting = true),
+    cached("streaming_exactly_once_dedup", runAtLeastOnceDedup,
+      "SELECT event_id, user_id, ts, event_type, value FROM events"),
 
     // The streamed inner interval join must emit exactly the batch join's
     // match set — a dropped or duplicated match (state eviction bug,
     // cross-trigger replay) hash-fails.
-    QueryDef(
-      "streaming_click_attribution",
-      (s, d) => cachedRun(s, "streaming_click_attribution", d)(runStreamJoin(s, d, _, _)),
-      Some("""SELECT v.user_id, v.event_id AS view_id, c.event_id AS click_id
+    cached("streaming_click_attribution", runStreamJoin,
+      """SELECT v.user_id, v.event_id AS view_id, c.event_id AS click_id
              |FROM events v JOIN events c
              |  ON v.user_id = c.user_id
              | AND v.event_type = 'view' AND c.event_type = 'click'
              | AND c.ts >= v.ts AND c.ts <= v.ts + INTERVAL 30 MINUTE""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // LEFT OUTER stream-stream interval join: unmatched views must ALSO
     // emit — as (view_id, NULL) — exactly once, when the watermark proves
@@ -1238,26 +1138,21 @@ object StreamingQueries {
     // matched, a missing null row (state evicted silently), or a double
     // emission all hash-fail. See runStreamLeftJoin for how sentinel
     // slices make the outer flush deterministic under AvailableNow.
-    QueryDef(
-      "streaming_left_join_outer",
-      (s, d) => cachedRun(s, "streaming_left_join_outer", d)(runStreamLeftJoin(s, d, _, _)),
-      Some("""SELECT v.user_id, v.event_id AS view_id, c.event_id AS click_id
+    cached("streaming_left_join_outer", runStreamLeftJoin,
+      """SELECT v.user_id, v.event_id AS view_id, c.event_id AS click_id
              |FROM events v LEFT JOIN events c
              |  ON v.user_id = c.user_id AND c.event_type = 'click'
              | AND c.ts >= v.ts AND c.ts <= v.ts + INTERVAL 30 MINUTE
              |WHERE v.event_type = 'view'""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // Streaming LSH dedup at ingest: per-band owner state flags every
     // arriving document that shares a MinHash band with an earlier one.
     // The converged (doc, n_dup_bands, is_duplicate) set must equal the
     // batch first-seen-per-band replay — a state loss (flag missing), a
     // batch-boundary dependence (flag flipped), or a band-key collision
-    // bug all hash-fail. See runLshDedupIngest / StatefulAgg.BandOwner.
-    QueryDef(
-      "streaming_lsh_dedup_ingest",
-      (s, d) => cachedRun(s, "streaming_lsh_dedup_ingest", d)(runLshDedupIngest(s, d, _, _)),
-      Some(s"""${DedupQueries.candidatesCte},
+    // bug all hash-fail. See runLshDedup / StatefulAgg.BandOwner.
+    cached("streaming_lsh_dedup_ingest", runLshDedup(_, _, _, _, None),
+      s"""${DedupQueries.candidatesCte},
               |firsts AS (SELECT band, min(doc_id) AS first_doc
               |           FROM bands GROUP BY band)
               |SELECT b.doc_id,
@@ -1266,7 +1161,6 @@ object StreamingQueries {
               |  bool_or(f.first_doc < b.doc_id) AS is_duplicate
               |FROM bands b JOIN firsts f USING (band)
               |GROUP BY b.doc_id ORDER BY b.doc_id""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // HORIZON-bounded streaming LSH dedup (VERDICT r16 task #2): the
     // unbounded leg above holds one state row per band EVER seen — the
@@ -1281,10 +1175,8 @@ object StreamingQueries {
     // of the band is within the horizon. A TTL that evicted early (flag
     // lost inside the horizon), fired late INTO the semantics (flag kept
     // past it), or depended on batch boundaries hash-fails.
-    QueryDef(
-      "streaming_lsh_dedup_ttl",
-      (s, d) => cachedRun(s, "streaming_lsh_dedup_ttl", d)(runLshDedupTtl(s, d, _, _)),
-      Some(s"""${DedupQueries.candidatesCte},
+    cached("streaming_lsh_dedup_ttl", runLshDedup(_, _, _, _, Some(LshTtlHorizonDocs)),
+      s"""${DedupQueries.candidatesCte},
               |seqd AS (SELECT doc_id, band,
               |           LAG(doc_id) OVER (PARTITION BY band ORDER BY doc_id)
               |             AS prev_doc
@@ -1296,36 +1188,29 @@ object StreamingQueries {
               |  bool_or(prev_doc IS NOT NULL
               |          AND doc_id - prev_doc <= $LshTtlHorizonDocs) AS is_duplicate
               |FROM seqd GROUP BY doc_id ORDER BY doc_id""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // Watermarked tumbling windows fed by a genuinely multi-trigger stream
     // must converge to the batch aggregate — same oracle text shape as the
     // batch window_tumbling_agg row, so a state-carry or window-assignment
     // bug in the streaming path hash-fails independently of the batch one.
-    QueryDef(
-      "streaming_window_counts",
-      (s, d) => cachedRun(s, "streaming_window_counts", d)(runWindowCounts(s, d, _, _)),
-      Some("""SELECT date_trunc('hour', ts) AS hour_start, event_type,
+    cached("streaming_window_counts", runWindowCounts,
+      """SELECT date_trunc('hour', ts) AS hour_start, event_type,
              |  count(*) AS n_events,
              |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
              |FROM events GROUP BY 1, 2""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // Streaming HOPPING windows == the batch window_hopping_agg semantics:
     // every event maintains two overlapping window states across real
     // micro-batches; a state-carry or double-assignment bug (an event
     // counted once, or thrice, across the overlap) hash-fails against the
     // arithmetic oracle.
-    QueryDef(
-      "streaming_hopping_counts",
-      (s, d) => cachedRun(s, "streaming_hopping_counts", d)(runHoppingCounts(s, d, _, _)),
-      Some("""SELECT make_timestamp((epoch_us(ts) // 900000000 - k) * 900000000)
+    cached("streaming_hopping_counts", runHoppingCounts,
+      """SELECT make_timestamp((epoch_us(ts) // 900000000 - k) * 900000000)
              |    AS window_start,
              |  event_type, count(*) AS n_events,
              |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
              |FROM events, unnest([0, 1]) AS hop(k)
              |GROUP BY 1, 2""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // Streaming drift monitor == the batch drift_tvd_bins: the bounded
     // per-bin histogram state must accumulate correctly across real
@@ -1336,10 +1221,8 @@ object StreamingQueries {
     // must equal the batch drift_psi_bins oracle exactly — a histogram
     // state divergence across micro-batches shifts a count by one and
     // hash-fails the nano-quantized term.
-    QueryDef(
-      "streaming_drift_psi",
-      (s, d) => cachedRun(s, "streaming_drift_psi", d)(runDriftPsi(s, d, _, _)),
-      Some("""WITH ev AS (
+    cached("streaming_drift_psi", runDriftPsi,
+      """WITH ev AS (
              |  SELECT CAST(least(floor(value / 50.0), 9) AS BIGINT) AS bin,
              |    CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 1 ELSE 0 END AS is_ref
              |  FROM events),
@@ -1359,12 +1242,9 @@ object StreamingQueries {
              |       / (CAST(ref_cnt + 1 AS DOUBLE) / CAST(tot_ref + 10 AS DOUBLE)))
              |  * 1e9) AS BIGINT) AS psi_term_nano
              |FROM tt""".stripMargin),
-      bench = false, sideEffecting = true),
 
-    QueryDef(
-      "streaming_drift_tvd",
-      (s, d) => cachedRun(s, "streaming_drift_tvd", d)(runDriftTvd(s, d, _, _)),
-      Some("""WITH ev AS (
+    cached("streaming_drift_tvd", runDriftTvd,
+      """WITH ev AS (
              |  SELECT CAST(least(floor(value / 50.0), 9) AS BIGINT) AS bin,
              |    CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 1 ELSE 0 END AS is_ref
              |  FROM events),
@@ -1381,14 +1261,11 @@ object StreamingQueries {
              |  abs(ref_cnt * tot_cur - cur_cnt * tot_ref) AS tvd_num,
              |  tot_ref * tot_cur * 2 AS tvd_den
              |FROM tt""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // Streaming OHLC == the batch bars: argmin/argmax aggregation state
     // must merge correctly across micro-batches (bars span triggers).
-    QueryDef(
-      "streaming_ohlc_snapshot",
-      (s, d) => cachedRun(s, "streaming_ohlc_snapshot", d)(runOhlc(s, d, _, _)),
-      Some("""WITH r AS (
+    cached("streaming_ohlc_snapshot", runOhlc,
+      """WITH r AS (
              |  SELECT event_type, CAST(ts AS DATE) AS day, value,
              |    ROW_NUMBER() OVER (PARTITION BY event_type, CAST(ts AS DATE)
              |      ORDER BY ts, event_id) AS rf,
@@ -1401,29 +1278,23 @@ object StreamingQueries {
              |  max(CASE WHEN rl = 1 THEN value END) AS close_v,
              |  count(*) AS n_events
              |FROM r GROUP BY 1, 2""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // Stream-static enrichment == the batch join+group: the stateless
     // per-trigger dimension join must not drop, duplicate, or misroute
     // any event across micro-batches.
-    QueryDef(
-      "streaming_dim_enrich",
-      (s, d) => cachedRun(s, "streaming_dim_enrich", d)(runDimEnrich(s, d, _, _)),
-      Some("""SELECT c_mktsegment, event_type, count(*) AS n_events,
+    cached("streaming_dim_enrich", runDimEnrich,
+      """SELECT c_mktsegment, event_type, count(*) AS n_events,
              |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
              |FROM events JOIN customer ON user_id = c_custkey
              |GROUP BY 1, 2""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // Streaming first-seen dedup == its batch replay: the winner per
     // fingerprint is the doc from the earliest micro-batch containing that
     // fingerprint (min id within the batch) — the oracle replays the
     // batch-order semantics with a window. Any state-carry bug across
     // triggers (duplicate emitted twice, wrong canonical) hash-fails.
-    QueryDef(
-      "streaming_dedup_firstseen",
-      (s, d) => cachedRun(s, "streaming_dedup_firstseen", d)(runFirstSeenDedup(s, d, _, _)),
-      Some("""WITH h AS (
+    cached("streaming_dedup_firstseen", runFirstSeenDedup,
+      """WITH h AS (
              |  SELECT doc_id,
              |    md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS content_hash,
              |    doc_id % 4 AS b
@@ -1432,18 +1303,14 @@ object StreamingQueries {
              |  SELECT content_hash, doc_id AS keep_id,
              |    ROW_NUMBER() OVER (PARTITION BY content_hash ORDER BY b, doc_id) AS rn
              |  FROM h) WHERE rn = 1""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // The transformWithState running aggregate must converge to the batch
     // GROUP BY — integer-cents state keeps the comparison exact; a state
     // row lost across triggers (or a double-applied batch) hash-fails.
-    QueryDef(
-      "streaming_stateful_agg",
-      (s, d) => cachedRun(s, "streaming_stateful_agg", d)(runStatefulAgg(s, d, _, _)),
-      Some("""SELECT user_id, count(*) AS n_events,
+    cached("streaming_stateful_agg", runStatefulAgg,
+      """SELECT user_id, count(*) AS n_events,
              |  CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS sum_cents
              |FROM events GROUP BY user_id""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // EVENT-TIME TIMER window finalization (StatefulAgg.DayCloser): each
     // (user, day) emits EXACTLY ONCE, when the watermark passes day end —
@@ -1452,17 +1319,14 @@ object StreamingQueries {
     // never fires (last days unflushed — the sentinel lead exists for
     // this), or double-fires after a replay hash-fails against the plain
     // GROUP BY oracle.
-    QueryDef(
-      "streaming_timer_day_close",
-      (s, d) => cachedRun(s, "streaming_timer_day_close", d)(runTimerDayClose(s, d, _, _)),
-      Some("""SELECT user_id,
+    cached("streaming_timer_day_close", runTimerDayClose,
+      """SELECT user_id,
              |  CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT)
              |    AS dnum,
              |  count(*) AS n_events,
              |  CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT)
              |    AS sum_cents
              |FROM events GROUP BY 1, 2""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // State-size/TTL audit (see runStateTtlAudit): per micro-batch, the
     // open-state accounting (seen pairs − timer emissions) must equal
@@ -1471,10 +1335,8 @@ object StreamingQueries {
     // quartile-slicing and previous-batch-watermark arithmetic; a timer
     // that fires early, late, or twice shifts n_closed into the wrong
     // batch row and hash-fails.
-    QueryDef(
-      "streaming_state_ttl_audit",
-      (s, d) => cachedRun(s, "streaming_state_ttl_audit", d)(runStateTtlAudit(s, d, _, _)),
-      Some("""WITH ev AS (
+    cached("streaming_state_ttl_audit", runStateTtlAudit,
+      """WITH ev AS (
              |  SELECT user_id, epoch_ms(CAST(ts AS TIMESTAMP)) AS ms,
              |    CAST(floor(epoch_ms(CAST(ts AS TIMESTAMP)) / 86400000) AS BIGINT) AS dnum
              |  FROM events),
@@ -1511,29 +1373,23 @@ object StreamingQueries {
              |  seen_pairs - closed_cum AS wm_bound,
              |  CAST(0 AS BIGINT) AS leak
              |FROM led ORDER BY batch_id""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // The batch-sketch union must converge to the corpus distinct count
     // within the lgK=14 tolerance regardless of trigger slicing — a
     // dropped batch sketch or a non-merged register undercounts and
     // flips the boolean against the exact recompute.
-    QueryDef(
-      "streaming_hll_maintain",
-      (s, d) => cachedRun(s, "streaming_hll_maintain", d)(runHllMaintain(s, d, _, _)),
-      Some("""SELECT event_type,
+    cached("streaming_hll_maintain", runHllMaintain,
+      """SELECT event_type,
              |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact,
              |  TRUE AS within_tol
              |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // The ListState last-N maintainer must converge to the batch top-3
     // per user — a list that grows past N, loses an entry across
     // triggers, or double-appends a replayed event produces a different
     // joined string and hash-fails.
-    QueryDef(
-      "streaming_lastn_events",
-      (s, d) => cachedRun(s, "streaming_lastn_events", d)(runLastN(s, d, _, _)),
-      Some("""WITH r AS (
+    cached("streaming_lastn_events", runLastN,
+      """WITH r AS (
              |  SELECT user_id, event_id, event_type,
              |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY event_id DESC)
              |      AS rn
@@ -1542,49 +1398,39 @@ object StreamingQueries {
              |  string_agg(CAST(event_id AS VARCHAR) || ':' || event_type, '|'
              |             ORDER BY event_id DESC) AS last3
              |FROM r WHERE rn <= 3 GROUP BY user_id ORDER BY user_id""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // The MapState distinct maintainer must converge to the batch
     // COUNT(DISTINCT) per event type — a membership probe that misses
     // RocksDB state across triggers double-counts a returning user, a
     // lost count ValueState undercounts; either hash-fails against the
     // exact batch recompute.
-    QueryDef(
-      "streaming_distinct_maintain",
-      (s, d) => cachedRun(s, "streaming_distinct_maintain", d)(runDistinctMaintain(s, d, _, _)),
-      Some("""SELECT event_type,
+    cached("streaming_distinct_maintain", runDistinctMaintain,
+      """SELECT event_type,
              |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_distinct
              |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // The retract-stream grouped aggregate must converge to the batch
     // per-current-group recompute: a missing retraction leaves an entity
     // double-counted in its previous group, a double-applied batch or a
     // replay that slips the LSN guard breaks the count — each hash-fails.
-    QueryDef(
-      "streaming_changelog_agg",
-      (s, d) => cachedRun(s, "streaming_changelog_agg", d)(runChangelogAgg(s, d, _, _)),
-      Some("""WITH cur AS (
+    cached("streaming_changelog_agg", runChangelogAgg,
+      """WITH cur AS (
              |  SELECT user_id, arg_max(event_type, event_id) AS event_type,
              |    arg_max(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT), event_id) AS cents
              |  FROM events GROUP BY user_id)
              |SELECT event_type, CAST(count(*) AS BIGINT) AS n_entities,
              |  CAST(sum(cents) AS BIGINT) AS sum_cents
              |FROM cur GROUP BY event_type""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // The lake-persisted current-state maintainer must converge to the
     // batch last-change-per-key — a dropped upsert, a stale generation
     // served, or a within-batch argmax picking the wrong event hash-fails
     // (same oracle shape as the batch scd2_current row, so the streaming
     // maintenance is checked independently of the batch window).
-    QueryDef(
-      "streaming_current_state",
-      (s, d) => cachedRun(s, "streaming_current_state", d)(runCurrentState(s, d, _, _)),
-      Some("""SELECT user_id, event_id, event_type, value, ts
+    cached("streaming_current_state", runCurrentState,
+      """SELECT user_id, event_id, event_type, value, ts
              |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
              |      FROM events) WHERE rn = 1""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // Streaming ≡ batch, full history: the converged history of the
     // incremental stream, each attribute cast back from the state's string
@@ -1592,42 +1438,37 @@ object StreamingQueries {
     // over the full lake — the SAME oracle text as cdc_envelope_scd2, so
     // any divergence between the incremental maintenance and the batch
     // semantics hash-fails here.
-    QueryDef(
-      "streaming_scd2_rebuild",
+    streamed("streaming_scd2_rebuild",
       (s, d) => scd2Converged(s, d).select(col("id") +:
         ProductAttrs.map(f => col("attrs")(f.name).cast(f.dataType).as(f.name)) :+
         timestamp_millis(col("rowValidStartMs")).cast("timestamp_ntz")
           .as("row_valid_start_timestamp") :+
         timestamp_millis(col("rowValidExpirationMs")).cast("timestamp_ntz")
           .as("row_valid_expiration_timestamp"): _*),
-      Some(EnvelopeQueries.scd2HistoryOracleSql),
-      bench = false, sideEffecting = true),
+      EnvelopeQueries.scd2HistoryOracleSql),
 
     // Streaming ≡ batch, validity chain: the converged (id, lsn) chain of
     // the same run must equal the batch window over the same events.
     // Millisecond-integer intervals keep the compare exact and attr-free
     // (attrs are checked by streaming_scd2_rebuild above).
-    QueryDef(
-      "streaming_scd2_incremental",
+    streamed("streaming_scd2_incremental",
       (s, d) => scd2Converged(s, d).select(col("id"), col("lsn").as("log_seq_num"),
         col("rowValidStartMs").as("valid_from_ms"),
         col("rowValidExpirationMs").as("valid_to_ms")),
-      Some(
-        s"""WITH ev AS (
-           |  SELECT
-           |    COALESCE(
-           |      CAST(json_extract(json, '$$.payload.after.id') AS INT),
-           |      CAST(json_extract(json, '$$.payload.before.id') AS INT)) AS id,
-           |    CAST(json_extract(json, '$$.payload.source.lsn') AS BIGINT) AS log_seq_num,
-           |    CAST(json_extract(json, '$$.payload.ts_ms') AS BIGINT) AS ts_ms
-           |  FROM read_ndjson_objects('${EnvelopeQueries.LakeDir}/part-*')
-           |  WHERE json_extract(json, '$$.payload.op') IS NOT NULL)
-           |SELECT id, log_seq_num, ts_ms AS valid_from_ms,
-           |  COALESCE(
-           |    LEAD(ts_ms) OVER (PARTITION BY id ORDER BY log_seq_num),
-           |    ${Scd2Streaming.SentinelMs}) AS valid_to_ms
-           |FROM ev WHERE id IS NOT NULL""".stripMargin),
-      bench = false, sideEffecting = true),
+      s"""WITH ev AS (
+         |  SELECT
+         |    COALESCE(
+         |      CAST(json_extract(json, '$$.payload.after.id') AS INT),
+         |      CAST(json_extract(json, '$$.payload.before.id') AS INT)) AS id,
+         |    CAST(json_extract(json, '$$.payload.source.lsn') AS BIGINT) AS log_seq_num,
+         |    CAST(json_extract(json, '$$.payload.ts_ms') AS BIGINT) AS ts_ms
+         |  FROM read_ndjson_objects('${EnvelopeQueries.LakeDir}/part-*')
+         |  WHERE json_extract(json, '$$.payload.op') IS NOT NULL)
+         |SELECT id, log_seq_num, ts_ms AS valid_from_ms,
+         |  COALESCE(
+         |    LEAD(ts_ms) OVER (PARTITION BY id ORDER BY log_seq_num),
+         |    ${Scd2Streaming.SentinelMs}) AS valid_to_ms
+         |FROM ev WHERE id IS NOT NULL""".stripMargin),
 
     // SCHEMA-DRIFT sibling of the incremental query (VERDICT r16 task
     // #5): the envelope stream gains a `category` key mid-stream with no
@@ -1637,35 +1478,29 @@ object StreamingQueries {
     // (id, lsn) version — must equal the batch rebuild over the unioned
     // two-generation lake: an eager schema union, a dropped late column,
     // or state that loses the new attr across triggers all hash-fail.
-    QueryDef(
-      "streaming_scd2_schema_drift",
-      (s, d) => cachedRun(s, "streaming_scd2_schema_drift", d)(runScd2SchemaDrift(s, d, _, _)),
-      Some(
-        s"""WITH ev AS (
-           |  SELECT
-           |    COALESCE(
-           |      CAST(json_extract(json, '$$.payload.after.id') AS INT),
-           |      CAST(json_extract(json, '$$.payload.before.id') AS INT)) AS id,
-           |    CAST(json_extract(json, '$$.payload.source.lsn') AS BIGINT) AS log_seq_num,
-           |    CAST(json_extract(json, '$$.payload.ts_ms') AS BIGINT) AS ts_ms,
-           |    json_extract_string(json, '$$.payload.after.category') AS category
-           |  FROM read_ndjson_objects('${EnvelopeQueries.DriftLakeDir}/gen*/part-*')
-           |  WHERE json_extract(json, '$$.payload.op') IS NOT NULL)
-           |SELECT id, log_seq_num, category, ts_ms AS valid_from_ms,
-           |  COALESCE(
-           |    LEAD(ts_ms) OVER (PARTITION BY id ORDER BY log_seq_num),
-           |    ${Scd2Streaming.SentinelMs}) AS valid_to_ms
-           |FROM ev WHERE id IS NOT NULL""".stripMargin),
-      bench = false, sideEffecting = true),
+    cached("streaming_scd2_schema_drift", runScd2SchemaDrift,
+      s"""WITH ev AS (
+         |  SELECT
+         |    COALESCE(
+         |      CAST(json_extract(json, '$$.payload.after.id') AS INT),
+         |      CAST(json_extract(json, '$$.payload.before.id') AS INT)) AS id,
+         |    CAST(json_extract(json, '$$.payload.source.lsn') AS BIGINT) AS log_seq_num,
+         |    CAST(json_extract(json, '$$.payload.ts_ms') AS BIGINT) AS ts_ms,
+         |    json_extract_string(json, '$$.payload.after.category') AS category
+         |  FROM read_ndjson_objects('${EnvelopeQueries.DriftLakeDir}/gen*/part-*')
+         |  WHERE json_extract(json, '$$.payload.op') IS NOT NULL)
+         |SELECT id, log_seq_num, category, ts_ms AS valid_from_ms,
+         |  COALESCE(
+         |    LEAD(ts_ms) OVER (PARTITION BY id ORDER BY log_seq_num),
+         |    ${Scd2Streaming.SentinelMs}) AS valid_to_ms
+         |FROM ev WHERE id IS NOT NULL""".stripMargin),
 
     // Streaming CMS == batch CMS: the linear-sketch maintenance
     // contract (counters merge by addition, so micro-batch slicing can
     // never change the converged sketch) checked against the SAME
     // oracle as the batch cms_frequency_audit.
-    QueryDef(
-      "streaming_cms_maintain",
-      (s, d) => cachedRun(s, "streaming_cms_maintain", d)(runCmsMaintain(s, d, _, _)),
-      Some("""WITH tc AS (
+    cached("streaming_cms_maintain", runCmsMaintain,
+      """WITH tc AS (
              |  SELECT tok, count(*) AS n
              |  FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
              |  GROUP BY tok),
@@ -1689,7 +1524,6 @@ object StreamingQueries {
              |FROM probe p JOIN counters c ON c.j = p.j AND c.bucket = p.bucket
              |GROUP BY p.tok, p.n_exact
              |ORDER BY n_exact DESC, tok""".stripMargin),
-      bench = false, sideEffecting = true),
 
     // Watermark LATE-DATA semantics — the one streaming behavior the
     // rest of the suite deliberately avoids (complete-mode snapshots
@@ -1700,10 +1534,8 @@ object StreamingQueries {
     // dropped by the late-events watermark (see runLateDataAudit's
     // Scaladoc for the margin argument that makes both outcomes exact).
     // The oracle is the batch rollup minus precisely the stale class.
-    QueryDef(
-      "streaming_late_data_audit",
-      (s, d) => cachedRun(s, "streaming_late_data_audit", d)(runLateDataAudit(s, d, _, _)),
-      Some(s"""WITH bounds AS (
+    cached("streaming_late_data_audit", runLateDataAudit,
+      s"""WITH bounds AS (
               |  SELECT min(epoch_us(ts) // 1000) AS t0, max(epoch_us(ts) // 1000) AS t1
               |  FROM events),
               |kept AS (
@@ -1714,6 +1546,5 @@ object StreamingQueries {
               |    AND CAST(floor(CAST((epoch_us(ts) // 1000 - t0) * 8 AS DOUBLE)
               |          / CAST(t1 - t0 + 1 AS DOUBLE)) AS BIGINT) % 2 = 0))
               |SELECT hour_start, event_type, count(*) AS n_events
-              |FROM kept GROUP BY 1, 2""".stripMargin),
-      bench = false, sideEffecting = true))
+              |FROM kept GROUP BY 1, 2""".stripMargin))
 }

@@ -4,7 +4,7 @@ import graft.cdc.{CdcSchemas, Scd2}
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming SCD2 (SURVEY.md §2.8, §7.2 step 6).
@@ -18,8 +18,10 @@ import org.apache.spark.sql.types.StructType
   * each key's event log, bounded by retention, and re-emits corrected
   * versions when late or out-of-order events arrive. Offsets and state
   * live in the checkpoint, so a restarted stream resumes where it stopped;
-  * (id, lsn) dedupe makes redelivery harmless. [[converged]] reads the
-  * history back from the emissions.
+  * (id, lsn) dedupe makes redelivery harmless. [[startIncremental]] is
+  * the one starter of that stream, for the catalog queries and the
+  * throughput legs alike; [[BoundedStream.converged]] over [[VersionKey]]
+  * reads the history back from its emissions.
   *
   * The stream consumes the change events of [[graft.cdc.Scd2.cdcEvents]],
   * typed through the one envelope → event projection [[keyEvents]]. Every
@@ -232,17 +234,21 @@ object Scd2Streaming {
         TimeMode.None(), OutputMode.Append())
   }
 
-  /** The converged history from a sink of [[incremental]]'s emissions,
-    * each row a [[VersionRow]] plus the `batch_id` that emitted it: the
-    * last emission per (id, lsn), since a later batch re-emits the
-    * corrected interval of a version it reopened. One `max_by` per
-    * version, no window. Returns `id`, `lsn` and the remaining
-    * [[VersionRow]] columns.
+  /** The key of one SCD2 version: a later batch re-emits the corrected
+    * interval of a version it reopened, so [[BoundedStream.converged]]
+    * over this key reads the history back from the emissions.
     */
-  def converged(emissions: DataFrame): DataFrame = {
-    val rest = emissions.columns.filterNot(Set("id", "lsn", "batch_id"))
-    emissions.groupBy(col("id"), col("lsn"))
-      .agg(max_by(struct(rest.map(col): _*), col("batch_id")).as("v"))
-      .select(col("id") +: col("lsn") +: rest.map(c => col(s"v.$c").as(c)): _*)
-  }
+  val VersionKey: Seq[String] = Seq("id", "lsn")
+
+  /** The one incremental SCD2 stream: `envelopes` → [[keyEvents]] →
+    * [[incremental]], checkpointed under `<dir>/ckpt`, every emission
+    * appended to `<dir>/emissions` with its batch id. Returns the started
+    * query: the catalog awaits it and reads the history back with
+    * [[BoundedStream.converged]] over [[VersionKey]]; the throughput legs
+    * keep it for its progress and to stop it mid-flight.
+    */
+  def startIncremental(envelopes: DataFrame, attrFields: Seq[String],
+                       dir: String): StreamingQuery =
+    BoundedStream.startStateful(incremental(keyEvents(envelopes, attrFields)),
+      s"$dir/ckpt")(BoundedStream.appendTagged(s"$dir/emissions"))
 }

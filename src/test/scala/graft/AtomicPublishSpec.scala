@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.operators.{EnvelopeQueries, StreamingQueries}
+import graft.streaming.{BoundedStream, DocStream, Scd2Streaming}
 
 /** First-writer-wins publication with content stamps: complete-or-absent
   * visibility, reuse on matching stamp, rebuild on mismatch (the ADVICE r3
@@ -181,5 +182,35 @@ class AtomicPublishSpec extends SparkSuite {
     assert(EnvelopeQueries.buildLake(spark) == dir)
     assert(stampOf(dir) == current)
     assert(!Files.exists(Paths.get(dir, "stale.txt")), "a stale-gen lake must be rebuilt, not reused")
+  }
+
+  test("the builders the cached catalog runs share are hashed by CacheGen") {
+    // a builder outside CacheGen's class set could change under a cached
+    // catalog result and leave it stale under graft_stream_results
+    def classFile(host: AnyRef, method: String): String = {
+      val m = host.getClass.getMethods.find(_.getName == method)
+      assert(m.nonEmpty, s"no method $method on ${host.getClass.getName}")
+      m.get.getDeclaringClass.getName.replace('.', '/') + ".class"
+    }
+    val builders = Seq(
+      classFile(Scd2Streaming, "startIncremental"), // the SCD2 stream
+      classFile(DocStream, "ensureSlices"), classFile(DocStream, "read"), // the doc slicer
+      classFile(DocStream, "bands"), classFile(DocStream, "bandFlags"), // the band builder
+      classFile(DocStream, "startBandOwner"), classFile(DocStream, "dupCounts"),
+      classFile(BoundedStream, "converged"), classFile(BoundedStream, "appendTagged"),
+      classFile(BoundedStream, "startStateful"), classFile(BoundedStream, "writeSlice"))
+    builders.foreach { f =>
+      assert(getClass.getClassLoader.getResource(f) != null, s"no class file $f")
+      assert(StreamingQueries.covered(f), s"$f is outside CacheGen's class set")
+    }
+    // nor may a covered class call into the bench's object, which is not hashed
+    val classes = Paths.get(StreamingQueries.getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    import scala.jdk.CollectionConverters._
+    val callers = Files.walk(classes).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && StreamingQueries.covered(classes.relativize(p).toString))
+      .filter(p => new String(Files.readAllBytes(p), "ISO-8859-1").contains("graft/StreamingThroughput"))
+      .toSeq
+    assert(!StreamingQueries.covered("graft/StreamingThroughput$.class"))
+    assert(callers.isEmpty, s"covered classes call StreamingThroughput: $callers")
   }
 }

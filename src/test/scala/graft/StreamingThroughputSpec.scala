@@ -107,8 +107,8 @@ class StreamingThroughputSpec extends SparkSuite {
   }
 
   test("a real tiny kill-and-resume recovery leg converges exactly") {
-    val r = StreamingThroughput.recoveryLeg(spark,
-      SparkSuite.scratchDir("graft-streamrec"), n = 2000, slices = 4,
+    val root = SparkSuite.scratchDir("graft-streamrec")
+    val r = StreamingThroughput.recoveryLeg(spark, root, n = 2000, slices = 4,
       stopAfter = 2)
     // the restart must drain the lake: all 4 slices committed across the
     // two query incarnations, with end-state exactness — every (id, lsn)
@@ -122,13 +122,15 @@ class StreamingThroughputSpec extends SparkSuite {
     val bad = r.copy(distinctVersions = 2001L, stateRowsFinal = 199L)
     assert(StreamingThroughput.belowFloor(canary, Nil, Some(bad)) ===
       Seq("scd2_recovery_versions", "scd2_recovery_state"))
+    // the leg deletes its checkpoint and sink once it has counted them
+    assert(!new java.io.File(s"$root/scd2_recovery").exists())
   }
 
   test("a real tiny lsh TTL leg stays under its survivor bound and " +
     "harvests state bytes") {
-    val r = StreamingThroughput.lshTtlLeg(spark, "/root/testdata/sf0.001",
-      SparkSuite.scratchDir("graft-streamttl"), copies = 2, slices = 4,
-      horizonDocs = 20)
+    val root = SparkSuite.scratchDir("graft-streamttl")
+    val r = StreamingThroughput.lshTtlLeg(spark, "/root/testdata/sf0.001", root,
+      copies = 2, slices = 4, horizonDocs = 20)
     assert(r.stateBound)
     assert(r.dataBatches.nonEmpty)
     assert(r.dataBatches.map(_.rows).sum === r.totalRows)
@@ -143,12 +145,13 @@ class StreamingThroughputSpec extends SparkSuite {
     // state BYTES must be harvested (the r17 footprint series): RocksDB
     // reports nonzero memory once any key is stored
     assert(r.dataBatches.last.stateBytes > 0L)
+    assert(!new java.io.File(s"$root/lsh_ttl").exists(), "the leg's dir outlived it")
   }
 
   test("a real tiny scd2 leg harvests per-batch progress and exact state rows") {
     // 2000 events over 4 slices, 200 keys — seconds, not minutes, at local[4]
-    val r = StreamingThroughput.scd2Leg(spark,
-      SparkSuite.scratchDir("graft-streamtp"), n = 2000, slices = 4)
+    val root = SparkSuite.scratchDir("graft-streamtp")
+    val r = StreamingThroughput.scd2Leg(spark, root, n = 2000, slices = 4)
     assert(r.dataBatches.size === 4)
     assert(r.dataBatches.map(_.rows).sum === 2000L)
     assert(r.dataBatches.forall(_.execMs > 0))
@@ -157,5 +160,9 @@ class StreamingThroughputSpec extends SparkSuite {
     assert(r.stateRowsFinal === 200L)
     // state must be BOUNDED: every batch's state rows <= distinct keys
     assert(r.batches.forall(_.stateRows <= 200L))
+    assert(!new java.io.File(s"$root/scd2").exists(), "the leg's dir outlived it")
+    // no loaded store is left whose maintenance could upload a snapshot
+    // into the deleted checkpoint and recreate it
+    assert(!org.apache.spark.sql.execution.streaming.state.StateStore.isMaintenanceRunning)
   }
 }

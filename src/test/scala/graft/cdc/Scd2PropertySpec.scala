@@ -1,7 +1,7 @@
 package graft.cdc
 
 import graft.{GraftSession, SparkSuite}
-import graft.streaming.Scd2Streaming
+import graft.streaming.{BoundedStream, Scd2Streaming}
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.DataFrame
@@ -132,9 +132,7 @@ class Scd2PropertySpec extends SparkSuite {
           Scd2Streaming.parseKafkaValue(input.toDF(), rowSchema), attrs))
         val q = versions.writeStream
           .option("checkpointLocation", SparkSuite.scratchDir("scd2-prop-ckpt"))
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[Scd2Streaming.VersionRow], id: Long) =>
-            b.withColumn("batch_id", lit(id)).write.mode("append").parquet(sink)
-          }.start()
+          .foreachBatch(BoundedStream.appendTagged[Scd2Streaming.VersionRow](sink) _).start()
         try batches.foreach { chunk => input.addData(chunk); q.processAllAvailable() }
         finally q.stop()
       }
@@ -159,11 +157,12 @@ class Scd2PropertySpec extends SparkSuite {
 object Scd2PropertySpec {
   type Version = (Int, List[String], Long, Long) // id, attrs, start ms, end ms
 
-  /** The stream's converged history ([[Scd2Streaming.converged]]) from
-    * its emissions, each with its `batch_id`.
+  /** The stream's converged history ([[BoundedStream.converged]] over
+    * [[Scd2Streaming.VersionKey]]) from its emissions, each with its
+    * `batch_id`.
     */
   def converged(emissions: DataFrame, attrs: Seq[String]): Seq[Version] =
-    Scd2Streaming.converged(emissions)
+    BoundedStream.converged(emissions, Scd2Streaming.VersionKey)
       .select(col("id") +: attrs.map(a => col("attrs")(a)) :+
         col("rowValidStartMs") :+ col("rowValidExpirationMs"): _*)
       .collect().toSeq

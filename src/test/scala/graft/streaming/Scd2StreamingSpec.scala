@@ -4,7 +4,6 @@ import graft.{GraftSession, SparkSuite}
 import graft.cdc.{CdcSchemas, EnvelopeReader, Scd2, Scd2PropertySpec}
 import graft.cdc.CdcFixtures._
 
-import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -31,13 +30,6 @@ class Scd2StreamingSpec extends SparkSuite {
   private def withRocksDb[A](body: => A): A =
     GraftSession.withConf(spark, GraftSession.RocksDbStateStore)(body)
 
-  /** foreachBatch sink of the incremental stream: every emission is
-    * appended to `sink` with the id of the batch that emitted it, the
-    * input [[Scd2Streaming.converged]] reads.
-    */
-  private def appendTo(sink: String)(b: Dataset[Scd2Streaming.VersionRow], id: Long): Unit =
-    b.withColumn("batch_id", lit(id)).write.mode("append").parquet(sink)
-
   test("file-stream foreachBatch touched-keys rebuild == batch rebuild") {
     // each micro-batch re-versions only the keys it touches, in per-key
     // state; the converged emissions must equal the batch rebuild
@@ -53,7 +45,7 @@ class Scd2StreamingSpec extends SparkSuite {
         attrs))
       val q = versions.writeStream
         .option("checkpointLocation", SparkSuite.scratchDir("touched-ckpt"))
-        .foreachBatch(appendTo(sink) _).start()
+        .foreachBatch(BoundedStream.appendTagged[Scd2Streaming.VersionRow](sink) _).start()
       q.processAllAvailable()
       writeLake(lakeDir, batch2, day = 13)
       q.processAllAvailable()
@@ -80,7 +72,7 @@ class Scd2StreamingSpec extends SparkSuite {
         Seq("name", "description", "price")))
       val q = versions.writeStream
         .option("checkpointLocation", SparkSuite.scratchDir("converged-ckpt"))
-        .foreachBatch(appendTo(sink) _).start()
+        .foreachBatch(BoundedStream.appendTagged[Scd2Streaming.VersionRow](sink) _).start()
       input.addData(
         envelope("null", row(1, prices(0)), "c", t0, 100),
         envelope("null", row(1, prices(2)), "u", t0 + 3000, 300),
@@ -97,7 +89,7 @@ class Scd2StreamingSpec extends SparkSuite {
 
     val emissions = spark.read.parquet(sink)
     assert(emissions.filter(col("id") === 1 && col("lsn") === 100).count() == 2)
-    val got = Scd2Streaming.converged(emissions)
+    val got = BoundedStream.converged(emissions, Scd2Streaming.VersionKey)
       .select(col("id"), col("lsn"), col("rowValidStartMs"), col("rowValidExpirationMs"),
         col("attrs")("name"), col("attrs")("price").cast("double"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3),
@@ -110,6 +102,14 @@ class Scd2StreamingSpec extends SparkSuite {
       (1, 300L, t0 + 3000, end, Some("n12.34"), Some(12.34)),
       (2, 110L, t0 + 100, t0 + 4000, Some("n99.99"), Some(99.99)),
       (2, 400L, t0 + 4000, end, None, None)))
+
+    // the same read over a non-SCD2 key: per user_id, the row of the
+    // highest of three batch ids wins; key first, batch_id dropped
+    val updates = Seq((0L, 1L, 7L), (0L, 2L, 8L), (1L, 3L, 7L), (1L, 1L, 9L),
+      (2L, 5L, 7L), (2L, 4L, 8L)).toDF("batch_id", "n", "user_id")
+    val last = BoundedStream.converged(updates, Seq("user_id"))
+    assert(last.columns.toSeq == Seq("user_id", "n"))
+    assert(last.as[(Long, Long)].collect().toSet == Set((7L, 5L), (8L, 4L), (9L, 1L)))
   }
 
   test("incremental (transformWithState) handles out-of-order + late events") {
@@ -384,14 +384,11 @@ class Scd2StreamingSpec extends SparkSuite {
       java.nio.file.Files.write(f, recoverySlices(i).mkString("", "\n", "\n").getBytes("UTF-8"))
       f.toFile.setLastModified(1700000000000L + i * 1000L)
     }
-    val emitted = scala.collection.mutable.ArrayBuffer[(Long, Scd2Streaming.VersionRow)]()
-    def start() = BoundedStream.start(Scd2Streaming.incremental(Scd2Streaming.keyEvents(
-        Scd2Streaming.readEnvelopeStream(spark, lake, CdcSchemas.productsRow, maxFilesPerTrigger = 1),
-        attrs)), ckpt) { (b, id) =>
-      val rows = b.collect()
-      emitted.synchronized(emitted ++= rows.map(id -> _))
-      ()
-    }
+    // the catalog's SCD2 stream: checkpoint under `$root/ckpt`, emissions
+    // appended to `$root/emissions` with their batch ids
+    def start() = Scd2Streaming.startIncremental(
+      Scd2Streaming.readEnvelopeStream(spark, lake, CdcSchemas.productsRow, maxFilesPerTrigger = 1),
+      attrs, root)
     // (state partition, version) of each checkpoint file with `suffix`
     def stateFiles(suffix: String): Seq[(String, Long)] =
       new java.io.File(s"$ckpt/state/0").listFiles().toSeq
@@ -443,8 +440,7 @@ class Scd2StreamingSpec extends SparkSuite {
     val batch = Scd2PropertySpec.rebuilt(
       spark.read.schema(CdcSchemas.envelope(CdcSchemas.productsRow)).json(events.toDS()), attrs)
     assert(batch.size == events.size)
-    val emissions = emitted.toSeq.toDF("batch_id", "v").select(col("v.*"), col("batch_id"))
-    assert(Scd2PropertySpec.converged(emissions, attrs) == batch,
+    assert(Scd2PropertySpec.converged(spark.read.parquet(s"$root/emissions"), attrs) == batch,
       "the restarted stream did not converge to the batch rebuild")
   }
 

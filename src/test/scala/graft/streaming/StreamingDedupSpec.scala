@@ -117,10 +117,7 @@ class StreamingDedupSpec extends SparkSuite {
     def run(batches: Seq[Seq[(Long, String)]], name: String): Set[(Long, String, Boolean)] = {
       GraftSession.withConf(spark, GraftSession.RocksDbStateStore) {
         val input = MemoryStream[(Long, String)]
-        val flags = input.toDS().groupByKey(_._2)
-          .transformWithState(new StatefulAgg.BandOwner,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Append())
+        val flags = DocStream.bandFlags(input.toDF().toDF("doc_id", "band"), None)
         val q = flags.writeStream.format("memory").queryName(name)
           .option("checkpointLocation", SparkSuite.scratchDir("graft-ckpt"))
           .outputMode("append").start()
@@ -156,14 +153,7 @@ class StreamingDedupSpec extends SparkSuite {
         : (Set[(Long, String, Boolean)], Long) = {
       GraftSession.withConf(spark, GraftSession.RocksDbStateStore) {
         val input = MemoryStream[(Long, String)]
-        val flags = input.toDF().toDF("doc_id", "band")
-          .withColumn("ts", timestamp_seconds(col("doc_id")))
-          .withWatermark("ts", "0 seconds")
-          .select("doc_id", "band").as[(Long, String)]
-          .groupByKey(_._2)
-          .transformWithState(new StatefulAgg.BandOwnerTtl(H),
-            org.apache.spark.sql.streaming.TimeMode.EventTime(),
-            org.apache.spark.sql.streaming.OutputMode.Append())
+        val flags = DocStream.bandFlags(input.toDF().toDF("doc_id", "band"), Some(H))
         val q = flags.writeStream.format("memory").queryName(name)
           .option("checkpointLocation", SparkSuite.scratchDir("graft-ckpt"))
           .outputMode("append").start()
